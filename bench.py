@@ -814,6 +814,29 @@ LEGACY_SAMPLE_N = {"4_to_16": 300_000, "2_to_8": 300_000,
                    "8_to_32": 600_000, "arrow_8_to_32": 600_000}
 
 
+PAIRED_HISTORY = 60  # stored same-window samples per pair
+
+
+def _admissible(sample: dict, n: int, floor: float) -> bool:
+    """A paired sample is reportable iff it was measured on the pair's
+    current corpus size and its small leg ran within 5% of that leg's
+    floor (see the paired_best comment in run_scaling)."""
+    return sample.get("n_docs") == n and sample["small_sec"] <= 1.05 * floor
+
+
+def _bounded_history(samples: list[dict], n: int, floor: float) -> list[dict]:
+    """The newest PAIRED_HISTORY samples, except that admissible ones
+    are evicted last: a burst of contended windows must not push out
+    the only reportable reading. Order is kept."""
+    if len(samples) <= PAIRED_HISTORY:
+        return samples
+    ok = [_admissible(s, n, floor) for s in samples]
+    room = max(0, PAIRED_HISTORY - sum(ok))
+    rest = [i for i, a in enumerate(ok) if not a]
+    keep = {i for i, a in enumerate(ok) if a} | set(rest[len(rest) - room:])
+    return [s for i, s in enumerate(samples) if i in keep][-PAIRED_HISTORY:]
+
+
 def run_scaling(rounds: int = 1, only: str | None = None) -> None:
     """N -> 4N scaling evidence over the PAIRS table, fixed work per pair:
 
@@ -832,9 +855,10 @@ def run_scaling(rounds: int = 1, only: str | None = None) -> None:
       window than the big one (the small leg only needs N free cores,
       so it reaches its quiet-box truth much sooner).
     - paired (same-invocation): both legs measured back-to-back in ONE
-      window, ratio taken within it. All same-window samples are kept;
-      the reported paired efficiency is the best ratio among ADMISSIBLE
-      windows — those whose small-leg time is within 20% of that leg's
+      window, ratio taken within it. The newest PAIRED_HISTORY samples
+      are kept, admissible ones evicted last; the reported paired
+      efficiency is the best ratio among ADMISSIBLE windows — those
+      whose small-leg time is within 5% of that leg's
       global minimum. Without the admissibility gate a max-over-windows
       would favor windows where the small leg was contended (slow
       denominator -> inflated ratio); with it, both legs of the
@@ -911,7 +935,8 @@ def run_scaling(rounds: int = 1, only: str | None = None) -> None:
                 "small_sec": a["sec"], "small_load": a.get("load_1min"),
                 "large_sec": b["sec"], "large_load": b.get("load_1min"),
             })
-            paired[name] = paired[name][-60:]  # bound the stored history
+            paired[name] = _bounded_history(
+                paired[name], n, best[(impl, ca, n)]["sec"])
 
     def _eff(impl, ca, cb, n):
         a, b = best.get((impl, ca, n)), best.get((impl, cb, n))
@@ -936,11 +961,12 @@ def run_scaling(rounds: int = 1, only: str | None = None) -> None:
         if floor is None:
             continue
         cur = [s for s in paired.get(name, []) if s.get("n_docs") == n]
-        admissible = [s for s in cur if s["small_sec"] <= 1.05 * floor]
+        admissible = [s for s in cur if _admissible(s, n, floor)]
         if admissible:
             top = max(admissible, key=lambda s: s["efficiency"])
             eff_floor = round(floor / (4 * top["large_sec"]), 3)
-            paired_best[name] = {**top, "admissible_of": len(cur),
+            paired_best[name] = {**top, "admissible_of": len(admissible),
+                                 "windows": len(cur),
                                  "small_floor_sec": floor,
                                  "efficiency_floor": eff_floor}
         elif cur:
@@ -953,7 +979,8 @@ def run_scaling(rounds: int = 1, only: str | None = None) -> None:
                 "n_docs": n, "small_sec": None,
                 "small_load": None, "large_sec": top["large_sec"],
                 "large_load": top["large_load"],
-                "admissible_of": len(cur), "small_floor_sec": floor,
+                "admissible_of": 0, "windows": len(cur),
+                "small_floor_sec": floor,
             }
     report = {
         "metric": "N->4N scaling efficiency (fixed work per pair, min over interleaved reps)",

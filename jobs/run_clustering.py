@@ -86,17 +86,20 @@ def main() -> int:
         clusters_out = out["clusters"]
         unassign_out = spark.createDataFrame([], "vec_id bigint, old_cluster_id string")
 
-    paths = {
+    # each output is materialized once, then written and counted from
+    # the materialized rows — not written, then read back to count,
+    # which re-planned and re-ran the clustering lineage per output
+    frames = {
         "clusters": clusters_out,
         "assignments": out["assignments"],
         "pending": out["pending"],
         "unassign": unassign_out,
     }
     counts = {}
-    for name, df in paths.items():
-        p = os.path.join(args.out, name)
-        df.write.mode("overwrite").parquet(p)
-        counts[name] = spark.read.parquet(p).count()
+    for name, df in frames.items():
+        df = df.localCheckpoint()
+        df.write.mode("overwrite").parquet(os.path.join(args.out, name))
+        counts[name] = df.count()
     print(json.dumps({"counts": counts, "out": args.out}))
     spark.stop()
     return 0

@@ -200,14 +200,18 @@ def main() -> int:
                 cres["merge_mapping"])
         maint = cluster_pipeline.run_maintenance(
             cres["clusters"], members, all_vecs)
+        # the new state is materialized once: the writes and the counts
+        # below read these three, not the clustering lineage behind them
+        unassign = maint["unassign"].localCheckpoint()
         # the published membership state reflects maintenance: members
         # of dropped (<2-member) clusters are unassigned, not carried
-        members = members.join(maint["unassign"].select("vec_id"),
-                               "vec_id", "left_anti")
+        members = members.join(unassign.select("vec_id"),
+                               "vec_id", "left_anti").localCheckpoint()
+        clusters = maint["clusters"].localCheckpoint()
         # publish: write v<N+1> fully (the lazy plans read v<N>'s
         # files, which stay untouched), then commit by atomic rename
         new_ver = cur_ver + 1
-        maint["clusters"].write.mode("overwrite").parquet(
+        clusters.write.mode("overwrite").parquet(
             f"{state_dir}/v{new_ver}/clusters")
         members.write.mode("overwrite").parquet(
             f"{state_dir}/v{new_ver}/memberships")
@@ -225,11 +229,9 @@ def main() -> int:
             )
         out["clustering"] = {
             "state_version": new_ver,
-            "clusters": spark.read.parquet(
-                f"{state_dir}/v{new_ver}/clusters").count(),
-            "memberships": spark.read.parquet(
-                f"{state_dir}/v{new_ver}/memberships").count(),
-            "unassigned": maint["unassign"].count(),
+            "clusters": clusters.count(),
+            "memberships": members.count(),
+            "unassigned": unassign.count(),
         }
 
     print(json.dumps(out, default=str))

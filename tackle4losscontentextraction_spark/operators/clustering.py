@@ -17,16 +17,29 @@ rendition here:
   (old*n + sum(assigned)) / (n + k)  — the k-step composition of the
   reference's per-row update (cluster_manager.py:81), exact for the
   same membership set.
-- :func:`merge_clusters_fixpoint` — repeated best-pair merging above
+- :func:`new_clusters_from_pairs` — disjoint mutual-best pairing of
+  the pending vectors (capped at MAX_PENDING_PAIRING) into 2-member
+  clusters.
+- :func:`merge_clusters_fixpoint` — repeated mutual-best merging above
   the merge threshold with the reference's weighted mean
-  (cluster_manager.py:239-241), driver-iterated <= max_passes (:128).
+  (cluster_manager.py:239-241), <= max_passes (:128).
 - :func:`recount_members` — the count fixer
   (sql/recalculate_all_cluster_member_counts.sql): recount, delete
   0/1-member clusters, unassign their members.
 
-Scale: centroids are O(clusters) — broadcast; vectors never shuffle
-for scoring (map-side broadcast join + window over doc only when
-ranking; the rank is per-vector so AQE handles skew)."""
+Scale: assignment and the centroid update touch every vector, so they
+stay Spark joins and aggregates — centroids are O(clusters) and
+broadcast; vectors never shuffle for scoring. Pairing and merging are
+quadratic over BOUNDED sets (the capped pending set; the cluster
+table), where a cross-join plan costs more in query planning and job
+scheduling than in arithmetic: each runs as one numpy kernel
+(:mod:`.cluster_kernel`) over its whole set in ONE mapInArrow task —
+one Spark job however many merge passes run. The kernels compute
+similarities in row blocks against the whole set, so their memory is
+O(BLOCK_ROWS x set size) plus the vectors, and they reproduce the
+Catalyst cosine's sequential fold, so results are bit-identical to it.
+The kernel module (numpy, pyarrow) is imported on the first call that
+needs it, not when this module is."""
 
 from __future__ import annotations
 
@@ -119,70 +132,52 @@ def new_clusters_from_pairs(
     vec_id: str = "vec_id", vec_col: str = "embedding",
     max_pending: int = MAX_PENDING_PAIRING,
 ) -> DataFrame:
-    """J4 analog: best pending-x-pending pair above threshold seeds a
-    2-member cluster (centroid = pair mean). Greedy matching done as:
-    rank pairs globally by similarity, keep pairs whose both members
-    are not claimed by a better pair (one matching pass).
+    """J4 analog: pending vectors pair up into 2-member clusters
+    (centroid = pair mean). The matching is DISJOINT mutual-best: a pair
+    above ``threshold`` is kept iff each member is the other's best
+    partner (ties to the smaller vec id), so each pending vector seeds
+    at most one cluster — the parallel analog of the reference's
+    sequential greedy pairing.
 
-    The pairing self-join is quadratic, so the working set is capped at
+    The pairing is quadratic, so the working set is capped at
     ``max_pending`` rows exactly as the reference caps its fetch
     (db_access.py:93-94, LIMIT 1000 most-recent): top-k by descending
     id (the corpus' recency proxy) via TakeOrderedAndProject — never a
     global sort. Overflow rows stay pending for the next pipeline run,
-    which is the reference's behavior too."""
+    which is the reference's behavior too. The capped set is paired by
+    :func:`cluster_kernel.pair_pending` in ONE mapInArrow task, in
+    O(BLOCK_ROWS x max_pending) memory.
+
+    Cluster ids are C10's deterministic form of the reference's uuid4
+    (db_access.py:249): a name-based UUID over "vid#vid_b", so a
+    retried/replayed batch mints the SAME cluster id."""
+    from . import cluster_kernel as ck
+
     if max_pending is not None:
         pending = pending.orderBy(F.desc(vec_id)).limit(max_pending)
-    v = pending.select(F.col(vec_id).alias("vid"), F.col(vec_col).cast("array<double>").alias("v"))
-    o = v.select(F.col("vid").alias("vid_b"), F.col("v").alias("v_b"))
-    sim = vec_fn.cosine_similarity(F.col("v"), F.col("v_b"))
-    pairs = (
-        v.crossJoin(o)
-        .where(F.col("vid") < F.col("vid_b"))
-        .withColumn("cos_raw", sim)
-        .where(F.col("cos_raw") > threshold)
-    )
-    # DISJOINT matching (each pending vector seeds at most one pair) —
-    # mutual-best, see _mutual_best_pairs for why two one-sided window
-    # ranks are NOT disjoint
-    mutual = _mutual_best_pairs(
-        pairs.select(F.col("vid").alias("ca"), F.col("vid_b").alias("cb"),
-                     F.col("cos_raw").alias("s"))
-    ).select(F.col("ca").alias("vid"), F.col("cb").alias("vid_b"))
-    best = mutual.join(v, "vid").join(o, "vid_b")
-    from ..functions.ids import deterministic_uuid
 
-    return best.select(
-        # C10: the reference's uuid4 (db_access.py:249) rendered
-        # deterministic — a name-based UUID over the seed pair, so a
-        # retried/replayed batch mints the SAME cluster id
-        deterministic_uuid(
-            F.concat_ws("#", F.col("vid").cast("string"), F.col("vid_b").cast("string"))
-        ).alias("cluster_id"),
-        F.zip_with("v", "v_b", lambda a, b: (a + b) / 2).alias("centroid"),
-        F.lit(2).alias("member_count"),
-        F.col("vid").alias("member_a"),
-        F.col("vid_b").alias("member_b"),
-    )
+    def pair(batches):
+        return ck.pair_batches(batches, threshold)
+
+    return pending.select(
+        F.col(vec_id).cast("bigint"), F.col(vec_col).cast("array<double>")
+    ).coalesce(1).mapInArrow(pair, ck.PAIR_SCHEMA)
 
 
 def merge_clusters_fixpoint(
     clusters: DataFrame, threshold: float = MERGE_THRESHOLD, max_passes: int = MAX_MERGE_PASSES,
     return_mapping: bool = False,
 ):
-    """Driver-iterated pairwise merging (weighted mean), <= max_passes.
+    """Pairwise cluster merging (weighted mean, cluster_manager.py:
+    239-241), <= max_passes (cluster_articles.py:128): each pass merges
+    the disjoint mutual-best pairs above ``threshold`` (ties to the
+    smaller cluster id) into the smaller id, until a pass merges nothing.
 
-    Each pass merges disjoint best pairs above threshold; the centroid
-    set shrinks geometrically so the loop is short. Working sets are
-    cluster-sized (small) — collected state is bounded.
-
-    Each pass starts from a localCheckpoint of the current cluster set:
-    a pass references ``cur`` three times (two self-join sides plus the
-    anti-join) and ends with ``isEmpty()`` (a full job), so without the
-    checkpoint pass k re-executes the whole k-deep lineage and the work
-    roughly doubles per pass — invisible at fixture scale, a scale-
-    killer at real cluster counts. The checkpointed state is
-    O(clusters) rows (small); eager=True materializes it as the pass's
-    single upstream job.
+    The whole fixpoint is :func:`cluster_kernel.merge_fixpoint` run ONCE
+    over the cluster table in one mapInArrow task (O(BLOCK_ROWS x
+    clusters) memory), and its output is localCheckpointed: one Spark
+    job however many passes run, and the returned plan is a scan of the
+    materialized state, not a pass-deep join tower.
 
     With ``return_mapping=True`` also returns (clusters, mapping) where
     mapping = (old_cluster_id, new_cluster_id) for every ABSORBED id,
@@ -190,81 +185,22 @@ def merge_clusters_fixpoint(
     to their membership table (the reference likewise re-points members
     when clusters merge); without remapping, members recorded under an
     absorbed id would reference a nonexistent cluster."""
-    spark = clusters.sparkSession
-    cur = clusters.select("cluster_id", F.col("centroid").cast("array<double>").alias("centroid"), "member_count")
-    mapping = spark.createDataFrame([], "old_cluster_id string, new_cluster_id string")
-    for _ in range(max_passes):
-        cur = cur.localCheckpoint(eager=True)
-        a = cur.select(F.col("cluster_id").alias("ca"), F.col("centroid").alias("va"), F.col("member_count").alias("na"))
-        b = cur.select(F.col("cluster_id").alias("cb"), F.col("centroid").alias("vb"), F.col("member_count").alias("nb"))
-        sim = vec_fn.cosine_similarity(F.col("va"), F.col("vb"))
-        pairs = a.crossJoin(b).where(F.col("ca") < F.col("cb")).withColumn("s", sim).where(F.col("s") > threshold)
-        chosen = _mutual_best_pairs(pairs).join(a, "ca").join(b, "cb")
-        if chosen.isEmpty():
-            break
-        merged = chosen.select(
-            F.col("ca").alias("cluster_id"),
-            F.zip_with("va", "vb", lambda x, y: (x * F.col("na") + y * F.col("nb")) / (F.col("na") + F.col("nb"))).alias("centroid"),
-            (F.col("na") + F.col("nb")).alias("member_count"),
-        )
-        if return_mapping:
-            # this pass absorbs cb into ca: append the new edges and
-            # redirect earlier edges whose target was just absorbed
-            step = chosen.select(
-                F.col("cb").alias("o"), F.col("ca").alias("n")
-            )
-            redirected = (
-                mapping.join(step, mapping.new_cluster_id == step.o, "left")
-                .select(
-                    "old_cluster_id",
-                    F.coalesce(step.n, mapping.new_cluster_id).alias("new_cluster_id"),
-                )
-            )
-            mapping = redirected.unionByName(
-                step.select(F.col("o").alias("old_cluster_id"), F.col("n").alias("new_cluster_id"))
-            ).localCheckpoint(eager=True)
-        absorbed = chosen.select(F.col("ca").alias("cluster_id")).union(
-            chosen.select(F.col("cb").alias("cluster_id"))
-        )
-        survivors = cur.join(absorbed, "cluster_id", "left_anti")
-        cur = survivors.unionByName(merged)
+    from . import cluster_kernel as ck
+
+    def merge(batches):
+        return ck.merge_batches(batches, threshold, max_passes)
+
+    state = clusters.select(
+        "cluster_id",
+        F.col("centroid").cast("array<double>"),
+        F.col("member_count").cast("bigint"),
+    ).coalesce(1).mapInArrow(merge, ck.MERGE_SCHEMA).localCheckpoint(eager=True)
+    out = state.where(F.col("new_cluster_id").isNull()).drop("new_cluster_id")
     if return_mapping:
-        return cur, mapping
-    return cur
-
-
-def _mutual_best_pairs(pairs: DataFrame) -> DataFrame:
-    """DISJOINT greedy matching over weighted pairs (ca < cb, score s):
-    keep (a, b) iff b is a's best partner AND a is b's — each node ends
-    up in at most one kept pair, the parallel analog of the reference's
-    sequential greedy pairing.
-
-    (The previous two-window rendition ranked within the DIRECTED pair
-    set — partition by ca and by cb separately — so a node could win as
-    ca in one pair and as cb in another; merging both double-counts its
-    members. Found by the round-3 convergence test.)
-
-    Physical shape: symmetrize the edges, per-node argmax as a hash
-    aggregate (min(struct(-s, partner)) — map-side combine, no window
-    over the edge set), then one count-2 aggregate on the undirected
-    key. Edge- and node-cardinality work only; no centroid payload.
-    """
-    sym = pairs.select("ca", "cb", "s").unionAll(
-        pairs.select(F.col("cb").alias("ca"), F.col("ca").alias("cb"), "s")
-    )
-    best = (
-        sym.groupBy("ca")
-        .agg(F.min(F.struct((-F.col("s")).alias("neg_s"), F.col("cb").alias("cb"))).alias("b"))
-        .select("ca", F.col("b.cb").alias("cb"))
-    )
-    return (
-        best.groupBy(
-            F.least("ca", "cb").alias("ca"), F.greatest("ca", "cb").alias("cb")
-        )
-        .agg(F.count("*").alias("nn"))
-        .where(F.col("nn") == 2)  # both endpoints chose each other
-        .select("ca", "cb")
-    )
+        mapping = state.where(F.col("new_cluster_id").isNotNull()).select(
+            F.col("cluster_id").alias("old_cluster_id"), "new_cluster_id")
+        return out, mapping
+    return out
 
 
 def recount_members(clusters: DataFrame, memberships: DataFrame) -> DataFrame:

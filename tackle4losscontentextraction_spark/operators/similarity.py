@@ -126,8 +126,7 @@ def kmeans_fit(
          vectors (posexplode + hash agg — the same shape as
          update_centroids), re-normalized (spherical k-means).
 
-    The loop is driver-iterated like merge_clusters_fixpoint; ``iters``
-    is small (coarse quantizers converge in a few passes). Each pass
+    The loop is driver-iterated; ``iters`` is small (coarse quantizers converge in a few passes). Each pass
     localCheckpoints the centroid set (O(k) rows) so iteration i+1's
     assignment scans the input ONCE against materialized centroids
     instead of re-executing i stacked assign+update stages. A cell that

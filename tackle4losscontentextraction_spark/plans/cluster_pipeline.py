@@ -8,10 +8,19 @@ Stages (reference line refs in operators/clustering.py):
   2. assign         : unclustered vectors vs broadcast centroids,
                       argmax cosine > 0.82
   3. centroid update: batch running-mean over new members
-  4. pair clusters  : best pending x pending pairs > 0.82 seed
+  4. pair clusters  : mutual-best pending x pending pairs > 0.82 seed
                       2-member clusters
   5. merge fixpoint : weighted-mean merging > 0.9, <= 10 passes
   6. recount        : drop 0/1-member clusters
+
+Stages 2-3 are Spark joins and aggregates over all vectors. Stages 4-5
+work on bounded sets — the pending pairing is capped at
+MAX_PENDING_PAIRING rows, the merge sees the cluster table — and each
+runs as one numpy kernel (operators/cluster_kernel.py) in one
+mapInArrow task, in O(BLOCK_ROWS x set size) memory: one Spark job
+each, however many merge passes run. :func:`run_clustering`
+materializes the assignments, the pair clusters and the merged state
+once, so the caller's writes and counts re-run none of it.
 
 The reference's greedy per-article order-dependence (SURVEY §3.3) is
 deliberately replaced by frozen-centroid passes — documented batch
@@ -65,18 +74,28 @@ def run_clustering(
     merge_threshold: float = clustering.MERGE_THRESHOLD,
 ) -> dict[str, DataFrame]:
     """vectors(vec_id, embedding) [+ existing clusters(cluster_id,
-    centroid, member_count)] -> {clusters, assignments, pending}."""
-    if clusters is None or clusters.isEmpty():
+    centroid, member_count)] -> {clusters, assignments, pending,
+    merge_mapping}.
+
+    The fresh assignments and the new pair clusters are materialized
+    once (localCheckpoint): the centroid update, the pending anti-join,
+    the merge input and the returned assignments all read them, and
+    each read would otherwise re-run the assignment scoring or the
+    pairing kernel. An empty cluster table needs no branch of its own
+    — it assigns nothing."""
+    if clusters is None:
         clusters = spark.createDataFrame(
             [], "cluster_id string, centroid array<double>, member_count bigint"
         )
         assignments = spark.createDataFrame([], "vec_id bigint, cluster_id string, cosine double")
     else:
-        assignments = clustering.assign_to_clusters(vectors, clusters, assign_threshold)
+        assignments = clustering.assign_to_clusters(
+            vectors, clusters, assign_threshold).localCheckpoint()
         clusters = clustering.update_centroids(clusters, vectors, assignments)
 
     pending = vectors.join(assignments.select("vec_id"), "vec_id", "left_anti")
-    new_clusters = clustering.new_clusters_from_pairs(pending, assign_threshold)
+    new_clusters = clustering.new_clusters_from_pairs(
+        pending, assign_threshold).localCheckpoint()
     pair_assignments = new_clusters.selectExpr(
         "member_a as vec_id", "cluster_id", "cast(1.0 as double) as cosine"
     ).union(
@@ -93,7 +112,8 @@ def run_clustering(
     # re-point members of absorbed clusters at their survivor — without
     # this, assignments recorded under an absorbed id reference a
     # cluster that no longer exists (and any later recount undercounts
-    # the survivor). mapping is cluster-sized -> broadcast join.
+    # the survivor). mapping is cluster-sized (and materialized by the
+    # fixpoint) -> broadcast join.
     all_assignments = (
         all_assignments.join(
             F.broadcast(mapping.withColumnRenamed("old_cluster_id", "cluster_id")),

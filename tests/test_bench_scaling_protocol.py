@@ -212,3 +212,21 @@ def test_mild_small_leg_inflation_rejected_since_r4(tmp_path, monkeypatch):
         # floor 60 over the window's large leg 15: 60/(4*15) = 1.0 —
         # the contended small leg cannot inflate this reading
         assert p["efficiency"] == 1.0, pair
+
+
+def test_admissible_of_counts_admissible_windows_and_survives_the_cap(tmp_path, monkeypatch):
+    """admissible_of counts only admissible windows (windows holds the
+    total), and a burst of contended windows filling the history cap
+    must not evict the only admissible sample."""
+    contended_small = dict(PERFECT)
+    for key in SMALL_LEGS:
+        contended_small[key] = PERFECT[key] * 2
+    d = _run(tmp_path, monkeypatch, PERFECT)
+    for _ in range(bench.PAIRED_HISTORY + 5):
+        d = _run(tmp_path, monkeypatch, contended_small, prior=d)
+    for pair in ("4_to_16", "2_to_8", "8_to_32", "arrow_8_to_32"):
+        p = d["paired"][pair]
+        assert len(d["paired_samples"][pair]) == bench.PAIRED_HISTORY, pair
+        assert p["admissible_of"] == 1 and p["windows"] == bench.PAIRED_HISTORY, pair
+        assert "conservative_floor_reading" not in p, pair
+        assert p["small_sec"] == p["small_floor_sec"], pair

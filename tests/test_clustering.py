@@ -3,9 +3,16 @@ tests/test_cluster_process.py + test_pipeline_functional.py analogs)."""
 
 from __future__ import annotations
 
+import math
+import random
+import time
+
+import numpy as np
+import pyoracle
 import pytest
 from pyspark.sql import functions as F
 
+from tackle4losscontentextraction_spark.operators import cluster_kernel as ck
 from tackle4losscontentextraction_spark.operators import clustering
 
 
@@ -88,3 +95,303 @@ def test_update_centroids_running_mean(spark):
     # (c*2 + [8,8]) / 4 = [2.5, 2.5]
     assert list(out.centroid) == pytest.approx([2.5, 2.5])
     assert out.member_count == 4
+
+
+# ---------------------------------------------------------------------------
+# pairing / merge kernels against a straight-loop reference
+# ---------------------------------------------------------------------------
+#
+# The reference below restates the SQL of functions/vectors.py and the
+# pairing/merge rules of operators/clustering.py one scalar at a time:
+# the same sequential folds, the same three-valued edge rules, the same
+# zip_with padding. Python floats are IEEE doubles, so equality is
+# asserted bit for bit.
+
+
+def _ref_norm(v):
+    if v is None:
+        return None
+    acc = 0.0
+    for x in v:
+        if x is None:
+            return None
+        acc = acc + x * x
+    return math.sqrt(acc)
+
+
+def _ref_cos(a, b):
+    """vectors.cosine_similarity, row by row (None = SQL NULL)."""
+    sa = None if a is None else len(a)
+    sb = None if b is None else len(b)
+    known = sa is not None and sb is not None
+    a2 = a[::2] if known and sa == sb * 2 else a
+    b2 = b[::2] if known and sb == sa * 2 else b
+    s2a = None if a2 is None else len(a2)
+    s2b = None if b2 is None else len(b2)
+    na, nb = _ref_norm(a2), _ref_norm(b2)
+    if s2a == 0 or s2b == 0:
+        return 0.0
+    if known and s2a != s2b:
+        return None
+    if na == 0.0 or nb == 0.0:
+        return 0.0
+    if na is None or nb is None:
+        return None
+    dot = 0.0
+    for x, y in zip(a2, b2):
+        dot = dot + x * y
+    return dot / (na * nb)
+
+
+def _ref_zip(a, b, f):
+    if a is None or b is None:
+        return None
+    out = []
+    for k in range(max(len(a), len(b))):
+        x = a[k] if k < len(a) else None
+        y = b[k] if k < len(b) else None
+        out.append(None if x is None or y is None else f(x, y))
+    return out
+
+
+def _ref_mutual(keys, vecs, threshold):
+    """Mutual-best pairs (i, j), keys[i] < keys[j]: best partner =
+    highest cosine > threshold, ties to the smallest key."""
+    best = {}
+    for i in range(len(vecs)):
+        cand = None
+        for j in range(len(vecs)):
+            if j == i:
+                continue
+            s = _ref_cos(vecs[i], vecs[j])
+            if s is None or not s > threshold:
+                continue
+            if cand is None or s > cand[0] or (s == cand[0] and keys[j] < keys[cand[1]]):
+                cand = (s, j)
+        if cand is not None:
+            best[i] = cand[1]
+    return [(i, j) for i, j in best.items() if keys[i] < keys[j] and best.get(j) == i]
+
+
+def _ref_pairs(ids, vecs, threshold):
+    return sorted(
+        (pyoracle.deterministic_uuid(f"{ids[i]}#{ids[j]}"),
+         _ref_zip(vecs[i], vecs[j], lambda x, y: (x + y) / 2), 2, ids[i], ids[j])
+        for i, j in _ref_mutual(ids, vecs, threshold)
+    )
+
+
+def _ref_merge(ids, vecs, counts, threshold, max_passes=10):
+    """Returns (sorted survivors, mapping, productive passes)."""
+    cur = [list(r) for r in zip(ids, vecs, counts)]
+    mapping, passes = {}, 0
+    for _ in range(max_passes):
+        pairs = _ref_mutual([c[0].encode("utf-8") for c in cur],
+                            [c[1] for c in cur], threshold)
+        if not pairs:
+            break
+        passes += 1
+        gone = set()
+        for i, j in pairs:
+            (ca, va, na), (cb, vb, nb) = cur[i], cur[j]
+            cur[i] = [ca, _ref_zip(va, vb, lambda x, y: (x * na + y * nb) / (na + nb)),
+                      na + nb]
+            gone.add(j)
+            for old in mapping:
+                if mapping[old] == cb:
+                    mapping[old] = ca
+            mapping[cb] = ca
+        cur = [c for k, c in enumerate(cur) if k not in gone]
+    return sorted(tuple(c) for c in cur), mapping, passes
+
+
+def _hex(v):
+    return None if v is None else [None if x is None else float(x).hex() for x in v]
+
+
+def _kernel_vec(v):
+    # the kernels carry a NULL element as NaN
+    return None if v is None else [float("nan") if x is None else x for x in v]
+
+
+def _out_vec(v):
+    return None if v is None else [None if math.isnan(x) else float(x) for x in v]
+
+
+def _random_set(rng, n, dim):
+    """Near-duplicates of a few directions (multi-pass merges), exact
+    duplicates (cosine ties), plus zero, empty, NULL, NULL-element,
+    2x-dim and mismatched-dim vectors."""
+    bases = [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(rng.randint(1, 3))]
+    vs = []
+    for _ in range(n):
+        r = rng.random()
+        if r < 0.04:
+            vs.append(None)
+        elif r < 0.07:
+            vs.append([])
+        elif r < 0.12:
+            vs.append([0.0] * dim)
+        elif r < 0.16:
+            vs.append([rng.uniform(-1, 1) for _ in range(dim + 1)])
+        else:
+            v = [x + rng.gauss(0, 0.03) for x in rng.choice(bases)]
+            if r < 0.22:  # 2x dim whose stride-2 downsample is near a base
+                v = [y for x in v for y in (x, rng.uniform(-1, 1))]
+            elif r < 0.24:
+                v[rng.randrange(dim)] = None
+            vs.append(v)
+    for _ in range(rng.randint(1, 4)):
+        src = vs[rng.randrange(n)]
+        vs[rng.randrange(n)] = None if src is None else list(src)
+    return vs
+
+
+_ALPHABET = ["a", "B", "z", "é", "0", "Z", "~", "ß", "中"]
+
+
+def _random_ids(rng, n):
+    ids: list[str] = []
+    while len(ids) < n:
+        s = "".join(rng.choice(_ALPHABET) for _ in range(rng.randint(1, 4)))
+        if s not in ids:
+            ids.append(s)
+    return ids
+
+
+def test_kernels_equal_reference_property():
+    """Pairing and merge kernels vs the straight-loop reference on
+    random sets: bit-equal ids, centroids, counts and mapping."""
+    max_passes = 0
+    for seed in range(40):
+        rng = random.Random(seed)
+        dim = rng.choice([2, 4, 8])
+
+        vs = _random_set(rng, rng.randint(4, 40), dim)
+        ids = rng.sample(range(-10**12, 10**12), len(vs))
+        got = sorted((cid, _hex(_out_vec(c)), 2, a, b) for cid, c, a, b in
+                     ck.pair_pending(ids, [None if v is None else np.array(_kernel_vec(v))
+                                           for v in vs], 0.82))
+        want = [(cid, _hex(c), n, a, b) for cid, c, n, a, b in _ref_pairs(ids, vs, 0.82)]
+        assert got == want, seed
+
+        vs = _random_set(rng, rng.randint(4, 40), dim)
+        cids = _random_ids(rng, len(vs))
+        counts = [rng.randint(1, 6) for _ in vs]
+        k_ids, k_vecs, k_counts, k_map = ck.merge_fixpoint(
+            cids, [None if v is None else np.array(_kernel_vec(v)) for v in vs],
+            counts, 0.9, 10)
+        want, want_map, passes = _ref_merge(cids, vs, counts, 0.9)
+        got = sorted((i, _hex(_out_vec(v)), n) for i, v, n in zip(k_ids, k_vecs, k_counts))
+        assert got == [(i, _hex(v), n) for i, v, n in want], seed
+        assert k_map == want_map, seed
+        max_passes = max(max_passes, passes)
+    assert max_passes >= 3  # the sets do exercise multi-pass merges
+
+
+def test_kernel_breaks_exact_ties_by_smallest_id():
+    # 1 and 3 are exact duplicates: 2 scores them identically and must
+    # pick the smaller id, for vec ids (bigint order) and cluster ids
+    # (UTF-8 byte order: "Z" < "a" < "é")
+    v = [[1.0, 0.0], [0.99, 0.1], [1.0, 0.0]]
+    vecs = [np.array(x) for x in v]
+    assert ck.best_partners(vecs, 0.82).tolist() == [2, 0, 0]
+    pairs = ck.pair_pending([30, 20, 10], vecs, 0.82)
+    assert [(a, b) for _, _, a, b in pairs] == [(10, 30)]
+    ids, _, counts, mapping = ck.merge_fixpoint(["é", "a", "Z"], vecs, [1, 1, 1], 0.5, 1)
+    assert mapping == {"é": "Z"} and sorted(zip(ids, counts)) == [("Z", 2), ("a", 1)]
+
+
+def test_kernel_dim_rules():
+    """2x dims stride-downsample the longer side; any other mismatch
+    never matches; zero or empty vectors score 0.0."""
+    a = np.array([1.0, 0.0])
+    two_x = np.array([1.0, 9.0, 0.1, -9.0])  # [::2] = [1.0, 0.1]
+    odd = np.array([1.0, 0.0, 0.0])
+    assert ck.best_partners([a, two_x], 0.9).tolist() == [1, 0]
+    assert ck.best_partners([a, odd], -1.0).tolist() == [-1, -1]
+    assert ck.best_partners([a, np.zeros(2), np.zeros(0)], -0.5).tolist() == [1, 0, 0]
+    # the pair mean of a 2x pair follows zip_with: NULL past the shorter
+    (_, c, _, _), = ck.pair_pending([1, 2], [a, two_x], 0.9)
+    assert _out_vec(c) == [1.0, 4.5, None, None]
+
+
+def test_kernels_through_spark_equal_reference(spark):
+    for seed in (101, 102):
+        rng = random.Random(seed)
+        vs = _random_set(rng, 30, 4)
+        ids = rng.sample(range(-10**12, 10**12), len(vs))
+        pend = spark.createDataFrame(list(zip(ids, vs)), "vec_id bigint, embedding array<double>")
+        got = sorted((r.cluster_id, _hex(r.centroid), r.member_count, r.member_a, r.member_b)
+                     for r in clustering.new_clusters_from_pairs(pend).collect())
+        assert got == [(cid, _hex(c), n, a, b) for cid, c, n, a, b in _ref_pairs(ids, vs, 0.82)]
+
+        vs = _random_set(rng, 30, 4)
+        cids = _random_ids(rng, len(vs))
+        counts = [rng.randint(1, 6) for _ in vs]
+        cl = spark.createDataFrame(list(zip(cids, vs, counts)),
+                                   "cluster_id string, centroid array<double>, member_count bigint")
+        out, mapping = clustering.merge_clusters_fixpoint(cl, return_mapping=True)
+        want, want_map, _ = _ref_merge(cids, vs, counts, 0.9)
+        assert sorted((r.cluster_id, _hex(r.centroid), r.member_count) for r in out.collect()) \
+            == [(i, _hex(v), n) for i, v, n in want]
+        assert {r.old_cluster_id: r.new_cluster_id for r in mapping.collect()} == want_map
+
+
+def test_pairing_cap_through_kernel(spark):
+    """Only the MAX_PENDING_PAIRING highest vec ids are paired; the
+    result equals the reference over exactly that window."""
+    rng = random.Random(7)
+    n = clustering.MAX_PENDING_PAIRING + 150
+    bases = [[rng.uniform(-1, 1) for _ in range(4)] for _ in range(40)]
+    vs = [[x + rng.gauss(0, 0.05) for x in rng.choice(bases)] for _ in range(n)]
+    ids = list(range(n))
+    pend = spark.createDataFrame(list(zip(ids, vs)), "vec_id bigint, embedding array<double>")
+    got = sorted((r.cluster_id, _hex(r.centroid), r.member_count, r.member_a, r.member_b)
+                 for r in clustering.new_clusters_from_pairs(pend).collect())
+    top = ids[-clustering.MAX_PENDING_PAIRING:]
+    want = _ref_pairs(top, vs[-clustering.MAX_PENDING_PAIRING:], 0.82)
+    assert got == [(cid, _hex(c), m, a, b) for cid, c, m, a, b in want]
+    assert got and min(r[3] for r in got) >= n - clustering.MAX_PENDING_PAIRING
+
+
+def _spark_jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_merge_fixpoint_many_passes_is_one_job(spark):
+    """ROADMAP Finding 1: near-identical centroids merge on every pass.
+    The per-pass join plan grew its size estimate ~x4 in digits per pass
+    and stalled the driver; the kernel runs all passes in one task, so
+    the fixpoint ends inside its 10-pass limit in seconds and its Spark
+    job count does not grow with the pass count."""
+    rng = random.Random(3)
+    base = [rng.uniform(-1, 1) for _ in range(16)]
+    rows = [(f"c{i:04d}", [x + rng.gauss(0, 0.01) for x in base], 1) for i in range(300)]
+    _, _, passes = _ref_merge([r[0] for r in rows], [r[1] for r in rows],
+                              [r[2] for r in rows], 0.9)
+    assert passes >= 6
+
+    schema = "cluster_id string, centroid array<double>, member_count bigint"
+    many = spark.createDataFrame(rows, schema)
+    one = spark.createDataFrame(rows[:2] + [("z", [-x for x in base], 1)], schema)
+
+    t0 = time.perf_counter()
+    res: dict = {}
+    jobs_many = _spark_jobs(spark, "fixpoint-many", lambda: res.update(
+        many=clustering.merge_clusters_fixpoint(many, return_mapping=True)))
+    elapsed = time.perf_counter() - t0
+    jobs_one = _spark_jobs(spark, "fixpoint-one", lambda: res.update(
+        one=clustering.merge_clusters_fixpoint(one, return_mapping=True)))
+    assert elapsed < 30
+    assert jobs_many == jobs_one
+
+    out, mapping = res["many"]
+    total = sum(r.member_count for r in out.collect())
+    assert total == 300 and mapping.count() == 300 - out.count()
