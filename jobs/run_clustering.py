@@ -50,7 +50,7 @@ def main() -> int:
     spark = SparkSession.builder.appName("t4l-clustering").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    from tackle4losscontentextraction_spark.operators import clustering
+    from tackle4losscontentextraction_spark import fsutil
     from tackle4losscontentextraction_spark.plans import cluster_pipeline
 
     vectors = spark.read.parquet(args.vectors).select(
@@ -84,7 +84,7 @@ def main() -> int:
         clusters_out, unassign_out = maint["clusters"], maint["unassign"]
     else:
         clusters_out = out["clusters"]
-        unassign_out = spark.createDataFrame([], "vec_id bigint, old_cluster_id string")
+        unassign_out = fsutil.local_frame(spark, [], "vec_id bigint, old_cluster_id string")
 
     # each output is materialized once, then written and counted from
     # the materialized rows — not written, then read back to count,

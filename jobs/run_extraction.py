@@ -55,16 +55,12 @@ def main() -> int:
     raw = spark.read.parquet(args.input)
     if args.html:
         # raw fetched pages (the reference's actual entry surface):
-        # DOM-tokenize each page to the span table, then re-attach the
-        # fetch metadata the extractor consumes. The join keys are
-        # unique per side, so AQE picks a plain shuffle join that
-        # scales with executors; at cluster scale pre-bucket both
-        # sides on doc_id to make it shuffle-free.
+        # DOM-tokenize each page to the span table; the fetch metadata
+        # the extractor consumes passes through the tokenizer, so the
+        # input is scanned once and never joined back
         from tackle4losscontentextraction_spark.operators import html_tokenize
 
-        docs = html_tokenize.tokenize_html(raw).join(
-            raw.select("doc_id", "url", "lang"), "doc_id"
-        )
+        docs = html_tokenize.tokenize_html(raw.select("doc_id", "url", "lang", "html"))
     else:
         docs = synth.docs_from_documents(raw)
     transform = extraction_arrow.extract_arrow if args.arrow else extraction.extract

@@ -68,7 +68,7 @@ def main() -> int:
     ap.add_argument("--dim", type=int, default=64, help="embedding dim")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession
     from pyspark.sql import functions as F
 
     spark = SparkSession.builder.appName("t4l-pipeline").getOrCreate()
@@ -103,8 +103,7 @@ def main() -> int:
     if args.html:
         from tackle4losscontentextraction_spark.operators import html_tokenize
 
-        docs = html_tokenize.tokenize_html(raw).join(
-            raw.select("doc_id", "url", "lang"), "doc_id")
+        docs = html_tokenize.tokenize_html(raw.select("doc_id", "url", "lang", "html"))
     elif args.spans:
         docs = raw.select("doc_id", "url", "lang", "spans")
     else:
@@ -200,21 +199,23 @@ def main() -> int:
                 cres["merge_mapping"])
         maint = cluster_pipeline.run_maintenance(
             cres["clusters"], members, all_vecs)
-        # the new state is materialized once: the writes and the counts
-        # below read these three, not the clustering lineage behind them
+        # the unassign set is read twice (the anti-join below and its
+        # count), so it is materialized once; the clusters and
+        # memberships are each read once, by their write, which also
+        # counts them (Observation)
         unassign = maint["unassign"].localCheckpoint()
         # the published membership state reflects maintenance: members
         # of dropped (<2-member) clusters are unassigned, not carried
-        members = members.join(unassign.select("vec_id"),
-                               "vec_id", "left_anti").localCheckpoint()
-        clusters = maint["clusters"].localCheckpoint()
+        members = members.join(unassign.select("vec_id"), "vec_id", "left_anti")
         # publish: write v<N+1> fully (the lazy plans read v<N>'s
         # files, which stay untouched), then commit by atomic rename
         new_ver = cur_ver + 1
-        clusters.write.mode("overwrite").parquet(
-            f"{state_dir}/v{new_ver}/clusters")
-        members.write.mode("overwrite").parquet(
-            f"{state_dir}/v{new_ver}/memberships")
+        counts = {}
+        for name, df in (("clusters", maint["clusters"]), ("memberships", members)):
+            obs = Observation(f"cluster_state_{name}")
+            df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+                "overwrite").parquet(f"{state_dir}/v{new_ver}/{name}")
+            counts[name] = obs.get["rows"]
         tmp = f"{state_dir}/committed-v{new_ver}.tmp"
         fsutil.write_text(spark, tmp, str(new_ver))
         if not fsutil.publish_file(spark, tmp, f"{state_dir}/committed-v{new_ver}"):
@@ -229,8 +230,8 @@ def main() -> int:
             )
         out["clustering"] = {
             "state_version": new_ver,
-            "clusters": clusters.count(),
-            "memberships": members.count(),
+            "clusters": counts["clusters"],
+            "memberships": counts["memberships"],
             "unassigned": unassign.count(),
         }
 

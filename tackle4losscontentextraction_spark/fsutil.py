@@ -11,11 +11,17 @@ the scheme is resolved per-path from the active Hadoop configuration.
 
 All calls are driver-side, O(1) or O(dir entries) metadata RPCs — never
 data movement.
+
+The same layers also turn small driver-side row lists (lineage rows,
+empty typed tables) into DataFrames; :func:`local_frame` does that as
+a JVM-local plan, so no Python worker starts for it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _fs_and_path(spark: SparkSession, path: str):
@@ -138,3 +144,32 @@ def publish_file(spark: SparkSession, src: str, dst: str) -> bool:
     if fs.exists(p_dst):
         return False
     return bool(fs.rename(p_src, p_dst))
+
+
+def _literal(value, dtype: T.DataType) -> Column:
+    """One Python value as a Catalyst literal of exactly ``dtype``."""
+    if value is None:
+        return F.lit(None).cast(dtype)
+    if isinstance(dtype, T.StructType):
+        return F.struct(*[_literal(v, f.dataType).alias(f.name)
+                          for v, f in zip(value, dtype.fields, strict=True)])
+    if isinstance(dtype, T.ArrayType):
+        return F.array(*[_literal(v, dtype.elementType) for v in value]).cast(dtype)
+    return F.lit(value).cast(dtype)
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str | T.StructType) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` for small driver-side
+    lists, planned in the JVM: ``inline(array(struct(lit ...)))`` over
+    a one-row ``range``, or a typed projection of an empty ``range`` for
+    no rows. createDataFrame ships a list through a PythonRDD, so every
+    action on it starts a Python-worker stage; this plan starts none.
+    Rows and struct values are positional sequences (tuples); the
+    literals are embedded in the plan, so keep the list small."""
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    if not rows:
+        return spark.range(0, 0, 1, 1).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields])
+    return spark.range(0, 1, 1, 1).select(F.inline(
+        F.array(*[_literal(r, schema) for r in rows]).cast(T.ArrayType(schema, False))))

@@ -17,13 +17,14 @@ Two operators:
   a fixed realistic markup shape (h1, nav, p, time, img, ...), text is
   entity-escaped, and the page gets head/script/style chrome that a
   correct tokenizer must ignore. Zero shuffle, codegen end-to-end.
-- :func:`tokenize_html` — (doc_id, html) -> docs-shaped span table via
-  ``mapInPandas`` over stdlib ``html.parser`` (Arrow batches, no
-  per-row Python UDF). The parser is structure-driven — (tag, class)
-  decides the span kind, exactly how readability/boilerpipe-style
-  extractors classify blocks — and suppresses script/style/template/
-  noscript/iframe/svg subtrees the way the reference's crawler config
-  excludes them (extractContent.py:271-279 ``exclude_tags``).
+- :func:`tokenize_html` — (doc_id, ..., html) -> docs-shaped span
+  table via ``mapInArrow`` over stdlib ``html.parser`` (Arrow batches,
+  no per-row Python UDF); the other input columns pass through. The
+  parser is structure-driven — (tag, class) decides the span kind,
+  exactly how readability/boilerpipe-style extractors classify blocks
+  — and suppresses script/style/template/noscript/iframe/svg subtrees
+  the way the reference's crawler config excludes them
+  (extractContent.py:271-279 ``exclude_tags``).
 
 Invariant (tested + driver oracle `html_tokenize`):
 ``tokenize_html(render_html(docs)) == docs`` span-for-span —
@@ -148,7 +149,7 @@ def render_html(docs: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# tokenize: HTML -> spans (stdlib parser inside mapInPandas)
+# tokenize: HTML -> spans (stdlib parser inside mapInArrow)
 # ---------------------------------------------------------------------------
 
 class _SpanTokenizer(HTMLParser):
@@ -294,22 +295,29 @@ SPAN_SCHEMA = T.ArrayType(
         T.StructField("offset", T.IntegerType()),
     ])
 )
-_OUT_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType()),
-    T.StructField("spans", SPAN_SCHEMA),
-])
 
 
 def tokenize_html(html_df: DataFrame) -> DataFrame:
-    """(doc_id, html) -> (doc_id, spans). Arrow-batched, partition-local."""
+    """(..., html) -> (..., spans): every input column except ``html``
+    passes through unchanged (Arrow buffers, never converted), and
+    ``spans`` is appended, so the fetch metadata needs no join back to
+    the input. Arrow-batched, partition-local."""
+    import pyarrow as pa
+
+    keep = [c for c in html_df.columns if c != "html"]
+    span_type = pa.list_(pa.struct([
+        ("kind", pa.string()), ("text", pa.string()),
+        ("media_ref", pa.string()), ("offset", pa.int32()),
+    ]))
 
     def _run(batches: Iterator) -> Iterator:
-        import pandas as pd
+        for batch in batches:
+            spans = pa.array(
+                [parse_html_to_spans(h) for h in batch.column(len(keep)).to_pylist()],
+                span_type)
+            yield pa.RecordBatch.from_arrays(
+                batch.columns[:len(keep)] + [spans], names=keep + ["spans"])
 
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "spans": [parse_html_to_spans(h) for h in pdf["html"]],
-            })
-
-    return html_df.select("doc_id", "html").mapInPandas(_run, schema=_OUT_SCHEMA)
+    out_schema = T.StructType(
+        [html_df.schema[c] for c in keep] + [T.StructField("spans", SPAN_SCHEMA)])
+    return html_df.select(*keep, "html").mapInArrow(_run, out_schema)

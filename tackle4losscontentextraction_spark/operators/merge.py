@@ -28,7 +28,7 @@ Scale design (the part that must survive 100 TB):
   target never shuffles. A giant source degrades to a sort-merge join
   AQE can skew-split — still a single wide op.
 - The storage merge never rewrites the whole table: touched buckets are
-  discovered from the source keys (a collected DISTINCT over buckets —
+  discovered from the source keys (an observed set of buckets —
   O(n_buckets), bounded), only those buckets are read and merged, and
   the result commits through a SINGLE atomic manifest publish (the
   snapshot layer below) — Iceberg's snapshot swap, rebuilt on rename.
@@ -41,7 +41,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsutil
@@ -233,9 +233,9 @@ def read_table(
         from pyspark.sql import types as T
 
         schema = T.StructType.fromJson(
-            __import__("json").loads(man["schema_json"])
+            json.loads(man["schema_json"])
         ).add("bucket", T.IntegerType())
-        return spark.createDataFrame([], schema)
+        return fsutil.local_frame(spark, [], schema)
     by_serving: dict[str, list[int]] = {}
     for b, serving in man["buckets"].items():
         by_serving.setdefault(_serving_dirname(serving), []).append(int(b))
@@ -265,8 +265,12 @@ def merge_write(
     commit-protocol comment above.
 
     Steps:
-      1. bucket the source; collect the DISTINCT touched bucket ids
-         (bounded by n_buckets — the only driver-side state);
+      1. bucket the source and materialize it once (persist); the
+         touched bucket ids (bounded by n_buckets — the only
+         driver-side state) come from an Observation on that same
+         materializing action, and every later step reads the persisted
+         copy, so an expensive source (a Python embedding, say) runs
+         once per MERGE, not once per reader;
       2. read ONLY those buckets of the current snapshot;
       3. dataflow-merge — ``mode``: "upsert" (:func:`upsert`),
          "update" (:func:`update_columns`), "delete" (WHEN MATCHED THEN
@@ -281,10 +285,27 @@ def merge_write(
     """
 
     bucket_of = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
-    src = source.withColumn("bucket", bucket_of)
-    touched = sorted(
-        r.bucket for r in src.select("bucket").distinct().collect()
-    )
+    src_obs = Observation("merge_write_source")
+    # persist, not localCheckpoint: the streaming sink calls this per
+    # micro-batch, and persisted blocks lost with an executor are
+    # recomputed from lineage instead of failing the query
+    src = source.withColumn("bucket", bucket_of).observe(
+        src_obs, F.collect_set("bucket").alias("buckets")).persist()
+    try:
+        # the noop sink builds the cache in one job, no shuffle (count
+        # would add an aggregation exchange and two more jobs)
+        src.write.format("noop").mode("overwrite").save()
+        touched = sorted(src_obs.get["buckets"])
+        return _merge_buckets(spark, table_dir, src, touched, bucket_of,
+                              key, n_buckets, mode)
+    finally:
+        src.unpersist()
+
+
+def _merge_buckets(spark: SparkSession, table_dir: str, src: DataFrame,
+                   touched: list[int], bucket_of, key: str, n_buckets: int,
+                   mode: str) -> dict:
+    """merge_write steps 2-4 over the materialized, bucketed source."""
     cur_id = current_snapshot_id(spark, table_dir)
     if not touched:
         return {"snapshot": cur_id, "touched_buckets": [], "rows_written": 0}
@@ -335,8 +356,6 @@ def merge_write(
         merged = src
 
     merged = merged.withColumn("bucket", bucket_of)
-    from pyspark.sql import Observation
-
     obs = Observation(f"merge_write_snap{new_id}")
     # delete mode also needs per-bucket survivor counts: a bucket whose
     # rows all died writes no directory and must leave the manifest
@@ -403,8 +422,6 @@ def compact(spark: SparkSession, table_dir: str) -> dict:
     dirname = f"snap-{new_id}-{token}"
 
     tbl = read_table(spark, table_dir, snapshot=cur_id)
-    from pyspark.sql import Observation
-
     obs = Observation(f"compact_snap{new_id}")
     tbl = tbl.observe(obs, F.count(F.lit(1)).alias("rows"))
     tbl.write.mode("overwrite").partitionBy("bucket").parquet(data_dir)

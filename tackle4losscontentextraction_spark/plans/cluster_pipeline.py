@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fsutil
 from ..operators import clustering
 
 
@@ -84,10 +85,11 @@ def run_clustering(
     pairing kernel. An empty cluster table needs no branch of its own
     — it assigns nothing."""
     if clusters is None:
-        clusters = spark.createDataFrame(
-            [], "cluster_id string, centroid array<double>, member_count bigint"
+        clusters = fsutil.local_frame(
+            spark, [], "cluster_id string, centroid array<double>, member_count bigint"
         )
-        assignments = spark.createDataFrame([], "vec_id bigint, cluster_id string, cosine double")
+        assignments = fsutil.local_frame(
+            spark, [], "vec_id bigint, cluster_id string, cosine double")
     else:
         assignments = clustering.assign_to_clusters(
             vectors, clusters, assign_threshold).localCheckpoint()

@@ -1,12 +1,13 @@
-"""End-to-end pipeline assembly (the Spark restatement of
-scripts/cleanup_pipeline.py — SURVEY §3.1) plus per-partition metrics.
+"""Extraction-stage metrics (the Spark restatement of the success/fail
+tally of scripts/cleanup_pipeline.py — SURVEY §3.1).
 
-One lineage:
+The pipeline itself is composed in ``jobs/run_pipeline.py`` (and the
+extraction-only ``jobs/run_extraction.py``):
 
     docs(doc_id, url, lang, spans)              [scan]
       -> extraction.extract                     [per-row projection]
       -> write extracted parquet (bucketed)     [resume via lineage]
-      -> metrics aggregate                      [A7]
+      -> metrics aggregate                      [A7: :func:`metrics`]
 
 The reference's batched variant (cleanup_pipeline_batched.py) dissolves
 into bucket partitioning; its success/fail tally is the metrics agg;
@@ -14,15 +15,8 @@ its per-article commit is the per-bucket lineage publish."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..operators import extraction
-from ..sources import lineage, synth
-
-
-def run_extraction(docs: DataFrame) -> DataFrame:
-    return extraction.extract(docs)
 
 
 def metrics(extracted: DataFrame) -> DataFrame:
@@ -35,18 +29,4 @@ def metrics(extracted: DataFrame) -> DataFrame:
         F.sum(F.when(F.col("content_chars") == 0, 1).otherwise(0)).alias("n_empty_contents"),
         F.sum("spans_in").alias("spans_in"),
         F.sum("spans_kept").alias("spans_kept"),
-    )
-
-
-def run_job_with_resume(
-    spark: SparkSession,
-    documents_path: str,
-    out_dir: str,
-    lineage_dir: str,
-    n_buckets: int = 16,
-) -> dict:
-    """Resumable extraction job: only pending buckets are processed."""
-    docs = synth.docs_from_documents(spark.read.parquet(documents_path))
-    return lineage.run_with_resume(
-        spark, docs, run_extraction, out_dir, lineage_dir, n_buckets=n_buckets
     )

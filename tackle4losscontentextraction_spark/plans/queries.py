@@ -1233,7 +1233,7 @@ SPARK_QUERIES.update({
 def q_html_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Render the span corpus to real HTML pages (Catalyst projection),
     then DOM-tokenize the HTML back into spans with the stdlib parser
-    inside mapInPandas (operators/html_tokenize.py). The oracle derives
+    inside mapInArrow (operators/html_tokenize.py). The oracle derives
     the spans arithmetically and never sees HTML — a hash match proves
     the full render -> entity-escape -> parse -> suppress-chrome round
     trip is exact, span-for-span."""

@@ -39,7 +39,7 @@ def completed_buckets(spark: SparkSession, lineage_dir: str) -> DataFrame:
     if not any(
         f.endswith(".parquet") for f in fsutil.list_names(spark, lineage_dir)
     ):
-        return spark.createDataFrame([], schema)
+        return fsutil.local_frame(spark, [], schema)
     return (
         spark.read.schema(schema).parquet(lineage_dir)
         .where(F.col("status") == "done")
@@ -137,8 +137,8 @@ def run_with_resume(
     metrics = obs.get
     counts = {b: int(metrics[f"b{b}"] or 0) for b in pending}
     # ... lineage publish second (write-audit-publish)
-    spark.createDataFrame(
-        [(b, counts[b], "done") for b in pending],
+    fsutil.local_frame(
+        spark, [(b, counts[b], "done") for b in pending],
         "bucket int, n_rows bigint, status string",
     ).write.mode("append").parquet(lineage_dir)
     return {"processed": pending, "skipped": skipped, "rows": sum(counts.values())}

@@ -156,6 +156,7 @@ def test_run_pipeline_end_to_end_and_resume(tmp_path):
     assert r1["doc_table"]["rows_written"] == 500 - r1["metrics"]["n_errors"]
     assert 0 < r1["vec_table"]["rows_written"] <= r1["doc_table"]["rows_written"]
     assert r1["clustering"]["state_version"] == 0
+    _assert_counts_match_committed_state(wd, r1["clustering"])
 
     # rerun: extraction resumes (nothing pending), merges re-upsert the
     # same rows into new snapshots, clustering advances its state
@@ -167,3 +168,17 @@ def test_run_pipeline_end_to_end_and_resume(tmp_path):
     assert r2["doc_table"]["snapshot"] == r1["doc_table"]["snapshot"] + 1
     assert r2["clustering"]["state_version"] == 1
     assert r2["clustering"]["memberships"] >= r1["clustering"]["memberships"]
+    _assert_counts_match_committed_state(wd, r2["clustering"])
+
+
+def _assert_counts_match_committed_state(wd: str, printed: dict) -> None:
+    """The printed cluster-state counts are the rows of the committed
+    cluster_state/v<N> (they come from Observations on its writes)."""
+    import pyarrow.parquet as pq
+
+    state = os.path.join(wd, "cluster_state")
+    ver = printed["state_version"]
+    assert os.path.exists(os.path.join(state, f"committed-v{ver}"))
+    for name in ("clusters", "memberships"):
+        rows = pq.read_table(os.path.join(state, f"v{ver}", name)).num_rows
+        assert printed[name] == rows, (name, printed[name], rows)

@@ -430,3 +430,30 @@ def test_expire_refuses_keep_last_zero(spark, tmp_path):
     with pytest.raises(ValueError, match="keep_last"):
         merge_ops.expire_snapshots(spark, table, keep_last=-3)
     assert merge_ops.read_table(spark, table).count() == 10
+
+
+def test_merge_write_evaluates_its_source_once(spark, tmp_path):
+    """An upsert into existing buckets reads its source three ways: the
+    touched buckets, the anti-join keys and the union side. All three
+    read one materialized copy, so a Python source (the pipeline's
+    embedding) runs once per MERGE, not once per reader."""
+    table = str(tmp_path / "t")
+    base = spark.range(0, 40).select(
+        F.col("id").alias("doc_id"), F.lit("old").alias("text"))
+    merge_ops.merge_write(spark, table, base, key="doc_id", n_buckets=4)
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def counting(batches):
+        for b in batches:
+            seen.add(b.num_rows)
+            yield b
+
+    src = spark.range(30, 50).select(
+        F.col("id").alias("doc_id"), F.lit("new").alias("text")
+    ).mapInArrow(counting, "doc_id bigint, text string")
+    res = merge_ops.merge_write(spark, table, src, key="doc_id", n_buckets=4)
+    assert seen.value == 20
+    assert res["touched_buckets"] and res["rows_written"] >= 20
+    out = {r.doc_id: r.text for r in merge_ops.read_table(spark, table).collect()}
+    assert out == {i: ("new" if i >= 30 else "old") for i in range(50)}
