@@ -44,10 +44,11 @@ def main() -> int:
     ap.add_argument("--merge-threshold", type=float, default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = SparkSession.builder.appName("t4l-clustering").getOrCreate()
+    from tackle4losscontentextraction_spark.session import job_session
+
+    spark = job_session("t4l-clustering")
     spark.sparkContext.setLogLevel("WARN")
 
     from tackle4losscontentextraction_spark import fsutil

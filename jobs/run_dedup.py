@@ -53,10 +53,11 @@ def main() -> int:
     ap.add_argument("--shingle-n", type=int, default=3)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = SparkSession.builder.appName(f"t4l-dedup-{args.method}").getOrCreate()
+    from tackle4losscontentextraction_spark.session import job_session
+
+    spark = job_session(f"t4l-dedup-{args.method}")
     spark.sparkContext.setLogLevel("WARN")
 
     from tackle4losscontentextraction_spark.operators import dedup

@@ -43,9 +43,9 @@ def main() -> int:
                          "DOM-tokenize to spans before extraction")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from tackle4losscontentextraction_spark.session import job_session
 
-    spark = SparkSession.builder.appName("t4l-extraction").getOrCreate()
+    spark = job_session("t4l-extraction")
     spark.sparkContext.setLogLevel("WARN")
 
     from tackle4losscontentextraction_spark.operators import extraction, extraction_arrow

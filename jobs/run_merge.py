@@ -38,9 +38,9 @@ def main() -> int:
     ap.add_argument("--mode", choices=["upsert", "update"], default="upsert")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from tackle4losscontentextraction_spark.session import job_session
 
-    spark = SparkSession.builder.appName("t4l-merge").getOrCreate()
+    spark = job_session("t4l-merge")
     spark.sparkContext.setLogLevel("WARN")
 
     from tackle4losscontentextraction_spark.operators import merge

@@ -37,7 +37,10 @@ Workdir layout:
     lineage/     per-bucket done markers
     doc_table/   snapshot table of cleaned articles (is_processed=true)
     vec_table/   snapshot table of (doc_id, embedding)
-    clusters/ memberships/   clustering state (with --cluster)
+    cluster_state/v<N>/{clusters,memberships}/   clustering state (with
+                 --cluster), one version per run
+    cluster_state/committed-v<N>   marker: v<N> is complete; the largest
+                 committed N is the live state
 """
 
 from __future__ import annotations
@@ -56,7 +59,7 @@ def main() -> int:
     ap.add_argument("--workdir", required=True)
     ap.add_argument("--buckets", type=int, default=16)
     ap.add_argument("--arrow", action="store_true",
-                    help="use the mapInPandas extraction path")
+                    help="use the Arrow (mapInArrow) extraction path")
     ap.add_argument("--html", action="store_true",
                     help="input is raw HTML (doc_id, url, lang, html)")
     ap.add_argument("--spans", action="store_true",
@@ -68,10 +71,12 @@ def main() -> int:
     ap.add_argument("--dim", type=int, default=64, help="embedding dim")
     args = ap.parse_args()
 
-    from pyspark.sql import Observation, SparkSession
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    spark = SparkSession.builder.appName("t4l-pipeline").getOrCreate()
+    from tackle4losscontentextraction_spark.session import job_session
+
+    spark = job_session("t4l-pipeline")
     spark.sparkContext.setLogLevel("WARN")
 
     from tackle4losscontentextraction_spark.functions import embeddings as emb_fn

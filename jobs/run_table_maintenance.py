@@ -56,9 +56,9 @@ def main() -> int:
         # unrecoverable table; the library also refuses (merge.py)
         ap.error("--keep-last must be >= 1")
 
-    from pyspark.sql import SparkSession
+    from tackle4losscontentextraction_spark.session import job_session
 
-    spark = SparkSession.builder.appName("t4l-table-maintenance").getOrCreate()
+    spark = job_session("t4l-table-maintenance")
     spark.sparkContext.setLogLevel("WARN")
 
     from tackle4losscontentextraction_spark.operators import merge

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import pyworker
 from . import vectors as vec_fn
 
 DEFAULT_DIM = 64
@@ -101,6 +102,7 @@ def embed_select_arrow(
     id_type = [f for f in docs.schema.fields if f.name == id_col][0].dataType.simpleString()
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pyworker.drop_spark_zip_importers()
         memo: dict[str, tuple[int, float]] = {}
 
         def contrib(tok: str) -> tuple[int, float]:

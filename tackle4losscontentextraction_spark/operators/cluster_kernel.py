@@ -37,6 +37,7 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 
+from .. import pyworker
 from ..functions.ids import deterministic_uuid_py
 
 BLOCK_ROWS = 256
@@ -240,6 +241,7 @@ def _table(batches: Iterator[pa.RecordBatch]) -> pa.Table | None:
 def pair_batches(batches: Iterator[pa.RecordBatch], threshold: float
                  ) -> Iterator[pa.RecordBatch]:
     """mapInArrow body: (vec_id, embedding) -> PAIR_SCHEMA rows."""
+    pyworker.drop_spark_zip_importers()
     t = _table(batches)
     if t is None:
         return
@@ -260,6 +262,7 @@ def merge_batches(batches: Iterator[pa.RecordBatch], threshold: float,
                   max_passes: int) -> Iterator[pa.RecordBatch]:
     """mapInArrow body: (cluster_id, centroid, member_count) ->
     MERGE_SCHEMA rows (survivors, then absorbed ids)."""
+    pyworker.drop_spark_zip_importers()
     t = _table(batches)
     if t is None:
         return

@@ -55,7 +55,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
-from .. import spec
+from .. import pyworker, spec
 
 _RE_IMG = re.compile(spec.RE_MD_IMAGE)
 _RE_LINK = re.compile(spec.RE_MD_LINK)
@@ -358,6 +358,7 @@ def extract_arrow(docs: DataFrame, date_formats: list[str] | None = None) -> Dat
     schema = _pa_schema(tz)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pyworker.drop_spark_zip_importers()
         date_cache: dict = {}
         for batch in batches:
             yield _process_batch(batch, fmts, date_cache, schema)

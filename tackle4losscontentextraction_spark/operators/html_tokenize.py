@@ -48,6 +48,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import pyworker
+
 # ---------------------------------------------------------------------------
 # kind <-> markup mapping (one closed table drives both directions)
 # ---------------------------------------------------------------------------
@@ -311,6 +313,7 @@ def tokenize_html(html_df: DataFrame) -> DataFrame:
     ]))
 
     def _run(batches: Iterator) -> Iterator:
+        pyworker.drop_spark_zip_importers()
         for batch in batches:
             spans = pa.array(
                 [parse_html_to_spans(h) for h in batch.column(len(keep)).to_pylist()],

@@ -4,6 +4,11 @@ Defaults chosen for the 100 TB design point (and harmless locally):
 AQE on (runtime re-plan, skew-join splitting, partition coalescing),
 Arrow on (vectorized pandas UDF transfer), shuffle partitions sized to
 the local core count (on a real cluster this would be ~2-3x total cores).
+
+Every session this package makes, test or job, also sizes Spark's
+generated-code cache to the composed job's working set
+(:data:`CODEGEN_CACHE_MAX_ENTRIES`). Jobs take their session from
+:func:`job_session`, which leaves master and memory to spark-submit.
 """
 
 from __future__ import annotations
@@ -11,6 +16,30 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Spark's generated-code cache (one entry per distinct generated Java
+# source) holds 100 entries by default. Measured working set of
+# jobs/run_pipeline.py --spans --cluster (Spark 4.1, local[4]): 140
+# distinct sources for a build of fresh tables, 145 for an upsert into
+# existing ones, 161 for the two together. Over 100, LRU evicts each
+# class before its next use, so every repeated job in one driver
+# recompiled ~145 sources with Janino and the JIT compiled them again;
+# with room for them a repeated job compiles none. 1000 leaves headroom
+# for the other jobs and plan variants. A static SQL conf: it takes
+# effect when the SparkContext is created (on an existing session
+# PySpark logs a warning and keeps the old value).
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+CODEGEN_CACHE_MAX_ENTRIES = 1000
+
+
+def job_session(app_name: str) -> SparkSession:
+    """The session of a ``jobs/*.py`` entry point: the given app name
+    and the codegen-cache size; master, memory and everything else come
+    from spark-submit (or PYSPARK_SUBMIT_ARGS). An existing session is
+    returned with its static settings unchanged."""
+    return (SparkSession.builder.appName(app_name)
+            .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_MAX_ENTRIES))
+            .getOrCreate())
 
 
 def get_spark(
@@ -59,6 +88,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("T4L_DRIVER_MEM", default_mem))
         .config("spark.driver.extraJavaOptions", gc_opts)
         .config("spark.ui.enabled", "false")
+        .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_MAX_ENTRIES))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # InferFiltersFromGenerate copies the generator's input expression
         # into a `size(e) > 0` filter, which predicate pushdown then sinks
