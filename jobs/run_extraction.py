@@ -67,7 +67,8 @@ def main() -> int:
     result = lineage.run_with_resume(
         spark, docs, transform, args.output, args.lineage, n_buckets=args.buckets
     )
-    extracted = spark.read.parquet(args.output)
+    schema = result.pop("schema")  # None: nothing pending, infer it
+    extracted = (spark.read.schema(schema) if schema else spark.read).parquet(args.output)
     m = pipeline.metrics(extracted).collect()[0].asDict()
     print(json.dumps({"resume": result, "metrics": m}))
     spark.stop()

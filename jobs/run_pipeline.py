@@ -7,6 +7,9 @@ job, composed from the library stages:
     docs(doc_id, url, lang, spans | html)     [scan; --html DOM-tokenizes]
       -> extraction.extract[_arrow]           [F1,F2,F5,L2,L3,C1: one projection]
       -> write extracted (bucketed, lineage)  [kill/rerun resumes pending buckets]
+      -> read extracted/ (all buckets)        [the write's schema: no inference]
+      -> A7 tally                             [Observation on the doc MERGE's
+                                               source pass: no scan of its own]
       -> R5 gate: error rows stop here        [status-column filter, no exception]
       -> main_content join + hash embedding   [A1 + L4, L2-normalized]
       -> MERGE into doc table                 [S12/S14: snapshot-atomic upsert,
@@ -15,7 +18,7 @@ job, composed from the library stages:
       -> MERGE into vector table              [S13: embedding insert]
       -> optional incremental clustering      [--cluster: assign/merge/maintain
                                                with state under --workdir]
-      -> metrics JSON on stdout               [A7 tally]
+      -> metrics JSON on stdout               [the A7 tally]
 
 Every stage is idempotent: extraction resumes from per-bucket lineage,
 the MERGEs are keyed upserts into snapshot tables (re-merging the same
@@ -119,8 +122,17 @@ def main() -> int:
         n_buckets=args.buckets)
     _mark("extract_write")
 
-    extracted = spark.read.parquet(extracted_dir)
-    m = pipeline.metrics(extracted).collect()[0].asDict()
+    # every bucket of extracted/, done now or by an earlier run, read
+    # with the schema this run's write had (no schema-inference job;
+    # a run with no pending bucket infers it)
+    schema = resume.pop("schema")
+    extracted = (spark.read.schema(schema) if schema else spark.read).parquet(extracted_dir)
+    # the A7 tally rides the doc MERGE's source pass, which reads all
+    # of extracted/ anyway; it is observed before the R5 gate, so error
+    # rows count. (The vector MERGE's pass re-aggregates it unread: an
+    # Observation keeps its first action's result.)
+    tally = Observation("a7_tally")
+    tallied = extracted.observe(tally, *pipeline.metric_columns())
     _mark("metrics")
 
     # ---- stage 2: R5 gate + doc-table MERGE -------------------------
@@ -128,7 +140,7 @@ def main() -> int:
     # when a step fails — article_processor.py:108-146); they stay in
     # extracted/ for inspection and are NOT marked processed, so a
     # later code fix + lineage reset reprocesses exactly them.
-    ok = extracted.where(~F.col("error"))
+    ok = tallied.where(~F.col("error"))
     articles = ok.select(
         "doc_id", "url_norm", "title", "author", "publication_date",
         "cleaned_date", "content_type", "type_confidence",
@@ -137,6 +149,7 @@ def main() -> int:
     )
     doc_res = merge.merge_write(spark, doc_table, articles,
                                 key="doc_id", n_buckets=args.buckets)
+    m = tally.get
     _mark("doc_merge")
 
     # ---- stage 3: embed + vector-table MERGE ------------------------

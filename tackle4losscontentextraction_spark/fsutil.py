@@ -19,7 +19,9 @@ a JVM-local plan, so no Python worker starts for it.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import json
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -146,30 +148,47 @@ def publish_file(spark: SparkSession, src: str, dst: str) -> bool:
     return bool(fs.rename(p_src, p_dst))
 
 
-def _literal(value, dtype: T.DataType) -> Column:
-    """One Python value as a Catalyst literal of exactly ``dtype``."""
+# types whose values JSON carries exactly: from_json reads back the
+# same number, boolean or string; dates and decimals travel as their
+# text (ISO date, Python's decimal string), which from_json parses
+# exactly
+_JSON_SCALARS = (T.BooleanType, T.ByteType, T.ShortType, T.IntegerType,
+                 T.LongType, T.DoubleType, T.StringType)
+
+
+def _json_value(value, dtype: T.DataType):
+    """One Python value as the JSON value ``from_json`` reads back as
+    exactly ``value`` of ``dtype``; TypeError for a type JSON cannot
+    carry exactly (float, timestamps, binary, maps, ...)."""
     if value is None:
-        return F.lit(None).cast(dtype)
+        return None
     if isinstance(dtype, T.StructType):
-        return F.struct(*[_literal(v, f.dataType).alias(f.name)
-                          for v, f in zip(value, dtype.fields, strict=True)])
+        return {f.name: _json_value(v, f.dataType)
+                for v, f in zip(value, dtype.fields, strict=True)}
     if isinstance(dtype, T.ArrayType):
-        return F.array(*[_literal(v, dtype.elementType) for v in value]).cast(dtype)
-    return F.lit(value).cast(dtype)
+        return [_json_value(v, dtype.elementType) for v in value]
+    if isinstance(dtype, (T.DateType, T.DecimalType)):
+        return str(value)
+    if isinstance(dtype, _JSON_SCALARS):
+        return value
+    raise TypeError(f"local_frame cannot carry {dtype.simpleString()} values "
+                    "exactly through JSON")
 
 
 def local_frame(spark: SparkSession, rows: list, schema: str | T.StructType) -> DataFrame:
     """``spark.createDataFrame(rows, schema)`` for small driver-side
-    lists, planned in the JVM: ``inline(array(struct(lit ...)))`` over
-    a one-row ``range``, or a typed projection of an empty ``range`` for
-    no rows. createDataFrame ships a list through a PythonRDD, so every
-    action on it starts a Python-worker stage; this plan starts none.
-    Rows and struct values are positional sequences (tuples); the
-    literals are embedded in the plan, so keep the list small."""
+    lists, planned in the JVM: ``inline(from_json(<one JSON literal>))``
+    over a one-row ``range``. createDataFrame ships a list through a
+    PythonRDD, so every action on it starts a Python-worker stage; this
+    plan starts none, and it is built in a fixed ~20 py4j calls whatever
+    the row count (a Column tree of one ``lit`` per value cost ~35
+    calls per value: 1,652 for the 16x3 lineage publish). Rows
+    and struct values are positional sequences (tuples); every column
+    comes back nullable; FAILFAST parsing makes a value that does not
+    fit its type an error, not a NULL. The JSON text is embedded in the
+    plan, so keep the list small."""
     if isinstance(schema, str):
         schema = T.DataType.fromDDL(schema)
-    if not rows:
-        return spark.range(0, 0, 1, 1).select(
-            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields])
-    return spark.range(0, 1, 1, 1).select(F.inline(
-        F.array(*[_literal(r, schema) for r in rows]).cast(T.ArrayType(schema, False))))
+    text = json.dumps([_json_value(r, schema) for r in rows])
+    return spark.range(0, 1, 1, 1).select(F.inline(F.from_json(
+        F.lit(text), T.ArrayType(schema), {"mode": "FAILFAST"})))

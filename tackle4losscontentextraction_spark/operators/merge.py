@@ -35,6 +35,14 @@ Scale design (the part that must survive 100 TB):
   At thousands of buckets this is the same I/O profile as Iceberg COW:
   rewrite bytes proportional to touched partitions, not table size,
   and a kill at ANY point leaves the previous snapshot fully readable.
+- The rewrite runs ``min(touched buckets, defaultParallelism)`` write
+  tasks, one file per bucket (``lineage.cluster_by_bucket``). When the
+  touched buckets outnumber the slots, each task writes several
+  buckets in sequence; a task per bucket would add a task set-up
+  (~30 ms of deserialization CPU for a parquet write task) per bucket
+  and run no faster on the same slots.
+- Reads carry the manifest's stored schema, so no read of the table
+  starts a schema-inference job.
 """
 
 from __future__ import annotations
@@ -43,8 +51,10 @@ import json
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import fsutil
+from ..sources import lineage
 
 
 def upsert(target: DataFrame, source: DataFrame, key: str = "doc_id") -> DataFrame:
@@ -218,37 +228,47 @@ def read_table(
     """Read the table at the current (or a time-travel) snapshot.
 
     Buckets are grouped by the snapshot whose data dir serves them and
-    each group is read with its own basePath (keeps the ``bucket``
-    partition column + partition pruning); the groups union.  Group
-    count = distinct serving snapshots <= retained history depth, so
-    the plan stays small; :func:`expire_snapshots` (or any full
-    rewrite) collapses it back to one.
+    the groups union (:func:`_read_buckets`).  Group count = distinct
+    serving snapshots <= retained history depth, so the plan stays
+    small; :func:`expire_snapshots` (or any full rewrite) collapses it
+    back to one.
     """
     snap_id = snapshot if snapshot is not None else current_snapshot_id(spark, table_dir)
     if snap_id is None:
         raise FileNotFoundError(f"no published snapshot in {table_dir}")
     man = _read_manifest(spark, table_dir, snap_id)
-    if not man["buckets"]:
-        # every row deleted: serve the (schema-preserving) empty table
-        from pyspark.sql import types as T
+    return _read_buckets(spark, table_dir, man, [int(b) for b in man["buckets"]])
 
+
+def _read_buckets(spark: SparkSession, table_dir: str, man: dict,
+                  buckets: list[int]) -> DataFrame:
+    """``buckets`` of manifest ``man`` as one DataFrame: one read per
+    serving data dir, each with its own basePath (keeps the ``bucket``
+    partition column + partition pruning), unioned.
+
+    The read carries the manifest's ``schema_json`` (the schema of the
+    frame its snapshot wrote), so building it starts no
+    schema-inference job; the file source makes every field nullable,
+    exactly as inference does. Manifests written before delete mode
+    added that field are read with inference. No buckets (every row
+    deleted) serves the schema-preserving empty table."""
+    schema = None
+    if "schema_json" in man:
         schema = T.StructType.fromJson(
-            json.loads(man["schema_json"])
-        ).add("bucket", T.IntegerType())
+            json.loads(man["schema_json"])).add("bucket", T.IntegerType())
+    if not buckets:
         return fsutil.local_frame(spark, [], schema)
     by_serving: dict[str, list[int]] = {}
-    for b, serving in man["buckets"].items():
-        by_serving.setdefault(_serving_dirname(serving), []).append(int(b))
-    parts = []
+    for b in sorted(buckets):
+        by_serving.setdefault(_serving_dirname(man["buckets"][str(b)]), []).append(b)
+    out = None
     for serving, bs in sorted(by_serving.items()):
         base = f"{table_dir}/data/{serving}"
-        parts.append(
-            spark.read.option("basePath", base)
-            .parquet(*[f"{base}/bucket={b}" for b in sorted(bs)])
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+        reader = spark.read.option("basePath", base)
+        if schema is not None:
+            reader = reader.schema(schema)
+        part = reader.parquet(*[f"{base}/bucket={b}" for b in bs])
+        out = part if out is None else out.unionByName(part)
     return out
 
 
@@ -322,21 +342,7 @@ def _merge_buckets(spark: SparkSession, table_dir: str, src: DataFrame,
         [b for b in touched if str(b) in cur_man["buckets"]] if cur_man else []
     )
     if existing:
-        by_serving: dict[str, list[int]] = {}
-        for b in existing:
-            by_serving.setdefault(
-                _serving_dirname(cur_man["buckets"][str(b)]), []
-            ).append(b)
-        parts = []
-        for serving, bs in sorted(by_serving.items()):
-            base = f"{table_dir}/data/{serving}"
-            parts.append(
-                spark.read.option("basePath", base)
-                .parquet(*[f"{base}/bucket={b}" for b in sorted(bs)])
-            )
-        tgt = parts[0]
-        for p in parts[1:]:
-            tgt = tgt.unionByName(p)
+        tgt = _read_buckets(spark, table_dir, cur_man, existing)
         if mode == "upsert":
             merged = upsert(tgt, src.select(*tgt.columns), key)
         elif mode == "update":
@@ -361,17 +367,18 @@ def _merge_buckets(spark: SparkSession, table_dir: str, src: DataFrame,
     # rows all died writes no directory and must leave the manifest
     # (readers resolve only manifest-listed buckets)
     per_bucket = (
-        [F.sum((F.col("bucket") == b).cast("long")).alias(f"b{b}") for b in touched]
+        [F.expr(f"count_if(bucket = {b}) AS b{b}") for b in touched]
         if mode == "delete" else []
     )
     # cluster the write by bucket (Iceberg write.distribution-mode=hash):
     # one file per touched bucket instead of tasks x buckets shards —
-    # see lineage.run_with_resume for the measured small-file tax.
+    # see lineage.run_with_resume for the measured small-file tax — in
+    # at most one task per slot (lineage.cluster_by_bucket).
     # The observe sits ABOVE the repartition: below it, AQE's empty-
     # relation propagation can replace the post-shuffle subtree —
     # CollectMetrics included — when a delete empties the table, and
     # obs.get then has no row (measured: delete-everything failed).
-    merged = merged.repartition(max(len(touched), 1), F.col("bucket")).observe(
+    merged = lineage.cluster_by_bucket(merged, touched).observe(
         obs, F.count(F.lit(1)).alias("rows"), *per_bucket
     )
     merged.write.mode("overwrite").partitionBy("bucket").parquet(data_dir)

@@ -19,7 +19,10 @@ idempotently by the next run's single job.
 At 100 TB the bucket count is sized so each bucket is a few GB
 (thousands of buckets); the anti-join is against a tiny lineage table
 (broadcast), and bucket assignment is a pure projection — no extra
-shuffle beyond the partitioned write itself.
+shuffle beyond the partitioned write itself. The write runs one task
+per slot, not one per bucket (:func:`cluster_by_bucket`): with
+thousands of buckets and hundreds of slots each task writes its dozen
+or so buckets one after another, each still as one file.
 """
 
 from __future__ import annotations
@@ -32,6 +35,26 @@ from .. import fsutil
 
 def with_bucket(df: DataFrame, key: str = "doc_id", n_buckets: int = 16) -> DataFrame:
     return df.withColumn("bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int"))
+
+
+def cluster_by_bucket(df: DataFrame, buckets: list[int]) -> DataFrame:
+    """Shuffle ``df`` so every bucket of ``buckets`` (non-empty) lands
+    whole in one of ``min(len(buckets), defaultParallelism)``
+    partitions, dealt out round-robin by the bucket's rank, so a
+    ``partitionBy("bucket")`` write makes exactly one file per bucket in
+    at most one task per slot.
+
+    Why not a hash partition per bucket: 16 bucket ids hash into only
+    10 of 16 partitions, and each empty one still launches a write
+    task, which spends ~30 ms of CPU deserializing itself (a noop-sink
+    task ~5 ms). The trade: when the buckets
+    outnumber the slots, a task writes its buckets one after another
+    rather than in separate tasks — the same slot time, without a task
+    set-up per bucket."""
+    n = min(len(buckets), df.sparkSession.sparkContext.defaultParallelism)
+    rank = ", ".join(str(b) for b in sorted(buckets))
+    return df.repartitionById(
+        n, F.expr(f"CAST(array_position(array({rank}), bucket) AS INT)"))
 
 
 def completed_buckets(spark: SparkSession, lineage_dir: str) -> DataFrame:
@@ -81,16 +104,21 @@ def run_with_resume(
     lineage rows, so the next run redoes exactly those buckets.
 
     At thousands of buckets (the 100 TB sizing) the observation is one
-    conditional-sum column per pending bucket — wide but constant-space
+    conditional-count column per pending bucket — wide but constant-space
     per task; beyond ~10k pending buckets batch the run into waves.
 
-    Returns {"processed": [...], "skipped": [...], "rows": n}.
+    Returns {"processed": [...], "skipped": [...], "rows": n, "schema":
+    s}: ``s`` is the schema of the frame this run wrote, which a reader
+    of ``out_dir`` passes to ``spark.read.schema`` to start no
+    schema-inference job; it is None when nothing was pending (building
+    the transform's plan only for its schema costs more than the
+    inference job it saves).
     """
     pending = pending_buckets(spark, df, lineage_dir, n_buckets, key)
     skipped = [b for b in range(n_buckets) if b not in pending]
     fsutil.mkdirs(spark, lineage_dir)
     if not pending:
-        return {"processed": [], "skipped": skipped, "rows": 0}
+        return {"processed": [], "skipped": skipped, "rows": 0, "schema": None}
 
     # a pending bucket's directory, if present, is by definition an
     # uncommitted leftover from a crashed attempt (done buckets are
@@ -116,17 +144,14 @@ def run_with_resume(
     # for every bucket — input_partitions x n_buckets small files (2048
     # at 100k docs/32 buckets, measured 24.5s for the stage) — and every
     # downstream scan paid the listing + open tax. One exchange of the
-    # extracted rows buys one file per bucket and a 32-task write. The
-    # observe rides ABOVE the repartition so AQE's empty-relation
-    # propagation cannot drop the CollectMetrics node when a transform
-    # yields zero rows (see merge.merge_write).
-    part = part.repartition(n_buckets, F.col("bucket")).observe(
-        obs,
-        *[
-            F.sum((F.col("bucket") == b).cast("long")).alias(f"b{b}")
-            for b in pending
-        ],
-    )
+    # extracted rows buys one file per bucket, written by at most one
+    # task per slot (cluster_by_bucket). The observe rides ABOVE the
+    # repartition so AQE's empty-relation propagation cannot drop the
+    # CollectMetrics node when a transform yields zero rows (see
+    # merge.merge_write). Its columns are SQL text: one py4j call each,
+    # where a Column tree built in Python costs ~50.
+    part = cluster_by_bucket(part, pending).observe(
+        obs, *[F.expr(f"count_if(bucket = {b}) AS b{b}") for b in pending])
     # data commit first (one job, only pending partitions replaced) ...
     (
         part.write.mode("overwrite")
@@ -135,10 +160,11 @@ def run_with_resume(
         .parquet(out_dir)
     )
     metrics = obs.get
-    counts = {b: int(metrics[f"b{b}"] or 0) for b in pending}
+    counts = {b: metrics[f"b{b}"] for b in pending}
     # ... lineage publish second (write-audit-publish)
     fsutil.local_frame(
         spark, [(b, counts[b], "done") for b in pending],
         "bucket int, n_rows bigint, status string",
     ).write.mode("append").parquet(lineage_dir)
-    return {"processed": pending, "skipped": skipped, "rows": sum(counts.values())}
+    return {"processed": pending, "skipped": skipped, "rows": sum(counts.values()),
+            "schema": part.schema}

@@ -13,3 +13,28 @@ def final_plan(df) -> str:
     df.collect()  # let AQE finalize the executed plan
     plan = df._jdf.queryExecution().executedPlan().toString()
     return plan.split("== Initial Plan ==")[0]
+
+
+def spark_jobs(spark, fn):
+    """Run ``fn()`` under a job group of its own; return (its result,
+    the ids of the Spark jobs it submitted, ascending). The listener
+    bus is drained first, so a job whose start event is still queued
+    is counted too."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def stage_tasks(spark, job_id: int) -> list[int]:
+    """Task count of every stage of a job, in stage-id order (the last
+    is the job's result stage)."""
+    st = spark.sparkContext.statusTracker()
+    return [st.getStageInfo(s).numTasks for s in sorted(st.getJobInfo(job_id).stageIds)]

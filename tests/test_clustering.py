@@ -10,6 +10,7 @@ import time
 import numpy as np
 import pyoracle
 import pytest
+from planutil import spark_jobs
 from pyspark.sql import functions as F
 
 from tackle4losscontentextraction_spark.operators import cluster_kernel as ck
@@ -355,16 +356,6 @@ def test_pairing_cap_through_kernel(spark):
     assert got and min(r[3] for r in got) >= n - clustering.MAX_PENDING_PAIRING
 
 
-def _spark_jobs(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_merge_fixpoint_many_passes_is_one_job(spark):
     """ROADMAP Finding 1: near-identical centroids merge on every pass.
     The per-pass join plan grew its size estimate ~x4 in digits per pass
@@ -383,15 +374,13 @@ def test_merge_fixpoint_many_passes_is_one_job(spark):
     one = spark.createDataFrame(rows[:2] + [("z", [-x for x in base], 1)], schema)
 
     t0 = time.perf_counter()
-    res: dict = {}
-    jobs_many = _spark_jobs(spark, "fixpoint-many", lambda: res.update(
-        many=clustering.merge_clusters_fixpoint(many, return_mapping=True)))
+    (out, mapping), jobs_many = spark_jobs(
+        spark, lambda: clustering.merge_clusters_fixpoint(many, return_mapping=True))
     elapsed = time.perf_counter() - t0
-    jobs_one = _spark_jobs(spark, "fixpoint-one", lambda: res.update(
-        one=clustering.merge_clusters_fixpoint(one, return_mapping=True)))
+    _, jobs_one = spark_jobs(
+        spark, lambda: clustering.merge_clusters_fixpoint(one, return_mapping=True))
     assert elapsed < 30
-    assert jobs_many == jobs_one
+    assert len(jobs_many) == len(jobs_one)
 
-    out, mapping = res["many"]
     total = sum(r.member_count for r in out.collect())
     assert total == 300 and mapping.count() == 300 - out.count()

@@ -64,3 +64,63 @@ def test_local_frame_starts_no_python_worker(spark, rows):
     want = spark.createDataFrame(ROWS, SCHEMA)
     assert "PythonRDD" in _rdd_lineage(want)
     assert "ExistingRDD" in _physical(want)
+
+
+def test_local_frame_nonfinite_doubles(spark):
+    got = fsutil.local_frame(
+        spark, [(float("nan"), float("inf")), (float("-inf"), -0.0)], "a double, b double")
+    want = spark.createDataFrame([(float("nan"), float("inf")), (float("-inf"), -0.0)],
+                                 "a double, b double")
+    assert repr(got.collect()) == repr(want.collect())
+
+
+@pytest.mark.parametrize("ddl,value", [
+    ("a float", 1.5), ("a timestamp", datetime.datetime(2020, 1, 2, 3, 4, 5)),
+    ("a binary", b"x"), ("a map<string,int>", {"k": 1}),
+    ("a array<float>", [1.5]),
+    ("a struct<t:timestamp>", (datetime.datetime(2020, 1, 2),)),
+])
+def test_local_frame_refuses_types_json_cannot_carry_exactly(spark, ddl, value):
+    with pytest.raises(TypeError, match="cannot carry"):
+        fsutil.local_frame(spark, [(value,)], ddl)
+
+
+@pytest.mark.parametrize("rows", [[], [(None, None, None)]], ids=["empty", "nulls"])
+def test_local_frame_nulls_of_any_type(spark, rows):
+    """NULL carries exactly whatever the type, so an empty or all-NULL
+    frame of a type JSON cannot carry (an emptied table's schema) works."""
+    ddl = "t timestamp, b binary, m map<string,int>"
+    got = fsutil.local_frame(spark, rows, ddl)
+    want = spark.createDataFrame(rows, ddl)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+def test_local_frame_value_that_does_not_fit_fails(spark):
+    # PERMISSIVE parsing would turn it into a NULL without a word
+    with pytest.raises(Exception):
+        fsutil.local_frame(spark, [(2**40,)], "a int").collect()
+
+
+def test_local_frame_py4j_calls_do_not_grow_with_rows(spark):
+    """One JSON literal carries every row: a 48-row frame (the lineage
+    publish of 16 buckets) costs the py4j calls of a 1-row frame."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    def cost(n):
+        calls.clear()
+        client.send_command = counted
+        try:
+            fsutil.local_frame(spark, [(b, b * 10, "done") for b in range(n)],
+                               "bucket int, n_rows bigint, status string")
+        finally:
+            client.send_command = send
+        return len(calls)
+
+    assert cost(48) == cost(1) <= 30

@@ -144,14 +144,26 @@ def test_run_pipeline_spans_mode(tmp_path, spark):
     assert 0 < out["vec_table"]["rows_written"] <= out["doc_table"]["rows_written"]
 
 
-def test_run_pipeline_end_to_end_and_resume(tmp_path):
+def test_run_pipeline_end_to_end_and_resume(tmp_path, spark):
+    from tackle4losscontentextraction_spark.plans import pipeline
+
     wd = str(tmp_path / "wd")
     argv = ("--input", f"{SF}/documents.parquet",
             "--workdir", wd, "--buckets", "2", "--cluster")
 
+    def tally() -> dict:
+        # the A7 tally as a scan of its own: the printed metrics (an
+        # Observation on the doc MERGE's source pass) must equal it
+        extracted = spark.read.parquet(os.path.join(wd, "extracted"))
+        return pipeline.metrics(extracted).collect()[0].asDict()
+
     r1 = _run_job("run_pipeline.py", *argv)
     assert sorted(r1["resume"]["processed"]) == [0, 1]
     assert r1["metrics"]["n_docs"] == 500
+    # the batch has error-gated rows: they count, though the R5 gate
+    # keeps them out of the MERGE whose source pass tallies them
+    assert r1["metrics"]["n_errors"] > 0
+    assert r1["metrics"] == tally()
     # R5 gate: only non-error rows reach the doc table
     assert r1["doc_table"]["rows_written"] == 500 - r1["metrics"]["n_errors"]
     assert 0 < r1["vec_table"]["rows_written"] <= r1["doc_table"]["rows_written"]
@@ -164,6 +176,8 @@ def test_run_pipeline_end_to_end_and_resume(tmp_path):
     r2 = _run_job("run_pipeline.py", *argv)
     assert r2["resume"]["processed"] == []
     assert sorted(r2["resume"]["skipped"]) == [0, 1]
+    # skipped buckets still count: the tally covers all of extracted/
+    assert r2["metrics"] == r1["metrics"] == tally()
     assert r2["doc_table"]["rows_written"] == r1["doc_table"]["rows_written"]
     assert r2["doc_table"]["snapshot"] == r1["doc_table"]["snapshot"] + 1
     assert r2["clustering"]["state_version"] == 1

@@ -88,3 +88,36 @@ def test_resume_clears_stale_partial_bucket(spark, tmpdirs):
     # garbage gone; bucket 1 contributes zero rows, others complete
     assert got.where(F.col("bucket") == 1).count() == 0
     assert got.count() == r["rows"]
+
+
+def test_resume_write_is_slot_sized_and_its_schema_reads_without_a_job(spark, tmpdirs):
+    """The bucketed write runs at most one task per slot, still one
+    file per bucket; the returned schema reads the output (as
+    jobs/run_pipeline.py reads extracted/) without starting a
+    schema-inference job, and equals the inferred schema field for
+    field."""
+    import glob
+
+    from planutil import spark_jobs, stage_tasks
+
+    out_dir, lin_dir = tmpdirs
+    slots = spark.sparkContext.defaultParallelism
+    docs = synth.synth_docs(spark, 400, partitions=slots)
+    res, jobs = spark_jobs(spark, lambda: lineage.run_with_resume(
+        spark, docs, extraction.extract, out_dir, lin_dir, n_buckets=16))
+    assert len(res["processed"]) == 16 and res["rows"] == 400
+    # the input has one partition per slot, so every stage of the run
+    # (the extraction, the bucketed write, the lineage publish) fits
+    assert max(n for j in jobs for n in stage_tasks(spark, j)) <= slots
+    for b in range(16):
+        assert len(glob.glob(f"{out_dir}/bucket={b}/part-*.parquet")) == 1, b
+
+    got, jobs = spark_jobs(spark, lambda: spark.read.schema(res["schema"]).parquet(out_dir))
+    assert jobs == []
+    assert got.schema == spark.read.parquet(out_dir).schema
+    assert got.count() == 400
+
+    # nothing pending: no plan was built, so no schema is offered
+    again = lineage.run_with_resume(
+        spark, docs, extraction.extract, out_dir, lin_dir, n_buckets=16)
+    assert again["processed"] == [] and again["schema"] is None

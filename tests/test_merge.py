@@ -6,6 +6,10 @@ from __future__ import annotations
 
 import os
 
+import glob
+import json
+
+from planutil import spark_jobs, stage_tasks
 from pyspark.sql import functions as F
 
 from tackle4losscontentextraction_spark.operators import merge as merge_ops
@@ -457,3 +461,82 @@ def test_merge_write_evaluates_its_source_once(spark, tmp_path):
     assert res["touched_buckets"] and res["rows_written"] >= 20
     out = {r.doc_id: r.text for r in merge_ops.read_table(spark, table).collect()}
     assert out == {i: ("new" if i >= 30 else "old") for i in range(50)}
+
+
+def _bucket_files(table, snap, b):
+    return glob.glob(os.path.join(table, "data", f"snap-{snap}-*", f"bucket={b}", "part-*.parquet"))
+
+
+def test_merge_write_one_file_per_bucket_in_slot_sized_write(spark, tmp_path):
+    """Each MERGE writes exactly one file per touched bucket, in a
+    write stage of at most min(touched, defaultParallelism) tasks: a
+    task per bucket pays a task set-up per bucket, and hash partitions
+    left empty launch write tasks that write nothing."""
+    table = str(tmp_path / "t")
+    slots = spark.sparkContext.defaultParallelism
+    src = spark.range(0, 400, 1, 3).select(
+        F.col("id").alias("doc_id"), F.lit("v").alias("text"))
+    one = spark.range(0, 2, 1, 1).select(
+        F.col("id").alias("doc_id"), F.lit("w").alias("text"))
+    # insert into an empty table, upsert into every bucket, upsert into a few
+    for snap, source in enumerate((src, src, one)):
+        res, jobs = spark_jobs(
+            spark, lambda s=source: merge_ops.merge_write(spark, table, s, n_buckets=16))
+        touched = res["touched_buckets"]
+        assert res["snapshot"] == snap and touched
+        assert stage_tasks(spark, jobs[-1])[-1] <= min(len(touched), slots), snap
+        for b in touched:
+            assert len(_bucket_files(table, snap, b)) == 1, (snap, b)
+    assert merge_ops.read_table(spark, table).count() == 400
+
+
+def test_merge_reads_with_manifest_schema_start_no_job(spark, tmp_path):
+    """read_table over a manifest with schema_json plans its read from
+    that schema: no schema-inference job. The schema equals the
+    inferred one field for field, nullability included, so the next
+    manifest's schema_json does not change."""
+    table = str(tmp_path / "t")
+    base = spark.range(0, 60).select(
+        F.col("id").alias("doc_id"),
+        F.lit(True).alias("flag"),  # written NOT NULL
+        F.struct(F.col("id").alias("x"), F.lit("s").alias("y")).alias("st"),
+        F.array(F.col("id").cast("double")).alias("arr"),
+    )
+    merge_ops.merge_write(spark, table, base, n_buckets=4)
+    merge_ops.merge_write(spark, table, base.where("doc_id < 5"), n_buckets=4)
+
+    df, jobs = spark_jobs(spark, lambda: merge_ops.read_table(spark, table))
+    assert jobs == []
+    # the inferred schema: what a read without the manifest's sees
+    d0 = glob.glob(os.path.join(table, "data", "snap-0-*"))[0]
+    inferred = spark.read.option("basePath", d0).parquet(d0).schema
+    assert df.schema == inferred
+    assert [f.nullable for f in df.schema.fields] == [True] * 5
+    assert df.count() == 60
+
+    merge_ops.merge_write(spark, table, base.where("doc_id < 9"), n_buckets=4)
+
+    def schema_json(snap):
+        with open(os.path.join(table, "metadata", f"snap-{snap}.json")) as f:
+            return json.load(f)["schema_json"]
+
+    assert schema_json(2) == schema_json(1)
+
+
+def test_merge_reads_manifest_without_schema_by_inference(spark, tmp_path):
+    """A manifest written before delete mode added schema_json is still
+    readable: its buckets are read with schema inference."""
+    table = str(tmp_path / "t")
+    base = spark.range(0, 20).select(F.col("id").alias("doc_id"), F.lit("a").alias("text"))
+    merge_ops.merge_write(spark, table, base, n_buckets=4)
+    path = os.path.join(table, "metadata", "snap-0.json")
+    with open(path) as f:
+        man = json.load(f)
+    del man["schema_json"]
+    with open(path, "w") as f:
+        json.dump(man, f)
+    assert merge_ops.read_table(spark, table).count() == 20
+    upd = spark.range(0, 3).select(F.col("id").alias("doc_id"), F.lit("b").alias("text"))
+    merge_ops.merge_write(spark, table, upd, n_buckets=4)
+    out = {r.doc_id: r.text for r in merge_ops.read_table(spark, table).collect()}
+    assert out == {i: ("b" if i < 3 else "a") for i in range(20)}
