@@ -14,8 +14,8 @@ changes):
 
 On a real cluster: --master yarn/k8s, executors sized so a bucket's
 output fits in memory, AQE left on (session defaults). Kill the job at
-any point; rerunning the same command resumes from the lineage table
-without reprocessing completed buckets.
+any point; rerunning the same command resumes from the lineage
+manifests without reprocessing completed buckets.
 """
 
 from __future__ import annotations
@@ -37,7 +37,7 @@ def main() -> int:
     ap.add_argument("--lineage", required=True)
     ap.add_argument("--buckets", type=int, default=16)
     ap.add_argument("--arrow", action="store_true",
-                    help="use the mapInPandas extraction path")
+                    help="use the Arrow (mapInArrow) extraction path")
     ap.add_argument("--html", action="store_true",
                     help="input is raw HTML (doc_id, url, lang, html): "
                          "DOM-tokenize to spans before extraction")
@@ -67,8 +67,7 @@ def main() -> int:
     result = lineage.run_with_resume(
         spark, docs, transform, args.output, args.lineage, n_buckets=args.buckets
     )
-    schema = result.pop("schema")  # None: nothing pending, infer it
-    extracted = (spark.read.schema(schema) if schema else spark.read).parquet(args.output)
+    extracted = spark.read.schema(result.pop("schema")).parquet(args.output)
     m = pipeline.metrics(extracted).collect()[0].asDict()
     print(json.dumps({"resume": result, "metrics": m}))
     spark.stop()

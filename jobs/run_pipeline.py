@@ -37,7 +37,8 @@ manual cleanup for the same property (``lock_manager.py:13``).
 
 Workdir layout:
     extracted/   bucketed extraction output (resume unit)
-    lineage/     per-bucket done markers
+    lineage/     snap-<N>.json manifests: every done bucket with its row
+                 count, and the schema of extracted/; the largest N is live
     doc_table/   snapshot table of cleaned articles (is_processed=true)
     vec_table/   snapshot table of (doc_id, embedding)
     cluster_state/v<N>/{clusters,memberships}/   clustering state (with
@@ -123,10 +124,8 @@ def main() -> int:
     _mark("extract_write")
 
     # every bucket of extracted/, done now or by an earlier run, read
-    # with the schema this run's write had (no schema-inference job;
-    # a run with no pending bucket infers it)
-    schema = resume.pop("schema")
-    extracted = (spark.read.schema(schema) if schema else spark.read).parquet(extracted_dir)
+    # with the schema its lineage holds (no schema-inference job)
+    extracted = spark.read.schema(resume.pop("schema")).parquet(extracted_dir)
     # the A7 tally rides the doc MERGE's source pass, which reads all
     # of extracted/ anyway; it is observed before the R5 gate, so error
     # rows count. (The vector MERGE's pass re-aggregates it unread: an
@@ -183,73 +182,30 @@ def main() -> int:
             F.col("embedding").cast("array<double>").alias("embedding"),
         )
         all_vecs = vecs
-        from tackle4losscontentextraction_spark import fsutil
-
-        # clustering state is versioned as one unit: state/v<N>/ holds
-        # clusters/ + memberships/ together; publishing v<N> = writing
-        # both dirs fully, then renaming committed-v<N>.tmp into place
-        # (merge_write's manifest protocol: rename is the commit, the
-        # live version is the max committed N, a kill anywhere leaves
-        # v<N-1> fully readable and both tables always consistent)
+        # S4 semantics (fetch_unclustered_articles): an incremental
+        # run clusters only vectors without a membership — already-
+        # assigned vectors keep their cluster; prior pendings get
+        # re-tried against the clusters later runs created
         state_dir = f"{wd}/cluster_state"
-        committed = [int(n[len("committed-v"):]) for n in
-                     fsutil.list_names(spark, state_dir)
-                     if n.startswith("committed-v")
-                     and n[len("committed-v"):].isdigit()]
-        cur_ver = max(committed, default=-1)
-        clusters_dir = f"{state_dir}/v{cur_ver}/clusters"
-        members_dir = f"{state_dir}/v{cur_ver}/memberships"
-        prior = (spark.read.parquet(clusters_dir)
-                 if cur_ver >= 0 else None)
+        cur_ver, prior, prior_members = cluster_pipeline.read_state(spark, state_dir)
         if prior is not None:
-            # S4 semantics (fetch_unclustered_articles): an incremental
-            # run clusters only vectors without a membership — already-
-            # assigned vectors keep their cluster; prior pendings get
-            # re-tried against the clusters later runs created
-            vecs = vecs.join(
-                spark.read.parquet(members_dir).select("vec_id"),
-                "vec_id", "left_anti")
+            vecs = vecs.join(prior_members.select("vec_id"), "vec_id", "left_anti")
         cres = cluster_pipeline.run_clustering(spark, vecs, prior)
         members = cres["assignments"].select("vec_id", "cluster_id")
         if prior is not None:
             members = cluster_pipeline.reconcile_memberships(
-                members, spark.read.parquet(members_dir),
-                cres["merge_mapping"])
+                members, prior_members, cres["merge_mapping"])
         maint = cluster_pipeline.run_maintenance(
             cres["clusters"], members, all_vecs)
         # the unassign set is read twice (the anti-join below and its
-        # count), so it is materialized once; the clusters and
-        # memberships are each read once, by their write, which also
-        # counts them (Observation)
+        # count), so it is materialized once
         unassign = maint["unassign"].localCheckpoint()
         # the published membership state reflects maintenance: members
         # of dropped (<2-member) clusters are unassigned, not carried
         members = members.join(unassign.select("vec_id"), "vec_id", "left_anti")
-        # publish: write v<N+1> fully (the lazy plans read v<N>'s
-        # files, which stay untouched), then commit by atomic rename
-        new_ver = cur_ver + 1
-        counts = {}
-        for name, df in (("clusters", maint["clusters"]), ("memberships", members)):
-            obs = Observation(f"cluster_state_{name}")
-            df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-                "overwrite").parquet(f"{state_dir}/v{new_ver}/{name}")
-            counts[name] = obs.get["rows"]
-        tmp = f"{state_dir}/committed-v{new_ver}.tmp"
-        fsutil.write_text(spark, tmp, str(new_ver))
-        if not fsutil.publish_file(spark, tmp, f"{state_dir}/committed-v{new_ver}"):
-            # the marker already exists (lost race or leftover from a
-            # partial prior run): the v<N+1> dirs we wrote are NOT the
-            # committed state — surface the conflict instead of
-            # reporting a version that never published
-            fsutil.delete_dir(spark, tmp)
-            raise RuntimeError(
-                f"cluster-state version {new_ver} was already committed in "
-                f"{state_dir}; re-run to retry against the committed state"
-            )
         out["clustering"] = {
-            "state_version": new_ver,
-            "clusters": counts["clusters"],
-            "memberships": counts["memberships"],
+            **cluster_pipeline.commit_state(
+                spark, state_dir, cur_ver + 1, maint["clusters"], members),
             "unassigned": unassign.count(),
         }
 

@@ -12,14 +12,19 @@ the scheme is resolved per-path from the active Hadoop configuration.
 All calls are driver-side, O(1) or O(dir entries) metadata RPCs — never
 data movement.
 
-The same layers also turn small driver-side row lists (lineage rows,
-empty typed tables) into DataFrames; :func:`local_frame` does that as
+:class:`VersionLog` is the one commit protocol of the job's state:
+table MERGE manifests, the extraction lineage, the cluster-state marker.
+
+The same layers also turn small driver-side row lists (empty typed
+tables, for one) into DataFrames; :func:`local_frame` does that as
 a JVM-local plan, so no Python worker starts for it.
 """
 
 from __future__ import annotations
 
 import json
+import uuid
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -87,23 +92,6 @@ def read_text(spark: SparkSession, path: str) -> str:
         stream.close()
 
 
-def rename(spark: SparkSession, src: str, dst: str) -> bool:
-    """Atomic rename (no overwrite: returns False if dst exists on
-    HDFS/file:) — the commit primitive of the snapshot publish.
-
-    NOTE the ``file:`` caveat: Hadoop's local rename is File.renameTo,
-    which on POSIX silently REPLACES an existing dst, so the exists()
-    pre-check here is a TOCTOU window.  Single-writer callers (lineage
-    markers, job state publish) are fine; anything that needs a real
-    concurrent-writer guarantee must commit through
-    :func:`publish_file` instead."""
-    fs, p_src = _fs_and_path(spark, src)
-    _, p_dst = _fs_and_path(spark, dst)
-    if fs.exists(p_dst):
-        return False
-    return bool(fs.rename(p_src, p_dst))
-
-
 def publish_file(spark: SparkSession, src: str, dst: str) -> bool:
     """Atomically publish a fully-written file at ``dst`` with
     create-no-overwrite semantics: returns True and ``dst`` appears
@@ -115,8 +103,9 @@ def publish_file(spark: SparkSession, src: str, dst: str) -> bool:
       link(2)): kernel-atomic EEXIST, no TOCTOU, dst carries src's full
       content the instant it exists; src is unlinked afterwards.
     - other resolved schemes — ``FileSystem.rename``: atomic and
-      no-overwrite on HDFS (and object-store committers emulate it);
-      the local TOCTOU caveat of :func:`rename` does not apply there.
+      no-overwrite on HDFS (and object-store committers emulate it).
+      (Hadoop's local rename is File.renameTo, which on POSIX silently
+      replaces an existing dst — hence the link(2) branch above.)
     """
     fs, p_src = _fs_and_path(spark, src)
     _, p_dst = _fs_and_path(spark, dst)
@@ -146,6 +135,55 @@ def publish_file(spark: SparkSession, src: str, dst: str) -> bool:
     if fs.exists(p_dst):
         return False
     return bool(fs.rename(p_src, p_dst))
+
+
+@dataclass(frozen=True)
+class VersionLog:
+    """Versions ``N`` published as ``<directory>/<prefix><N><suffix>``.
+
+    A writer writes its data where no published version points, then
+    publishes ``N``: a text file staged under a writer-unique hidden
+    name and moved into place by :func:`publish_file`, so it appears
+    whole or not at all, and only one writer gets any ``N`` (the loser
+    sees False). Readers take the largest ``N`` (:meth:`latest`), so a
+    kill anywhere before the publish leaves ``N-1`` live."""
+
+    directory: str
+    prefix: str
+    suffix: str = ""
+
+    def path(self, n: int) -> str:
+        return f"{self.directory}/{self.prefix}{n}{self.suffix}"
+
+    def version_of(self, name: str) -> int | None:
+        """``N`` of a published entry's file name; None for any other
+        name (staged files, data directories)."""
+        n = name[len(self.prefix):len(name) - len(self.suffix)]
+        ok = name.startswith(self.prefix) and name.endswith(self.suffix)
+        return int(n) if ok and n.isascii() and n.isdigit() else None
+
+    def versions(self, spark: SparkSession) -> list[int]:
+        """Published versions, ascending ([] for a missing directory)."""
+        return sorted(n for name in list_names(spark, self.directory)
+                      if (n := self.version_of(name)) is not None)
+
+    def latest(self, spark: SparkSession) -> int | None:
+        ids = self.versions(spark)
+        return ids[-1] if ids else None
+
+    def read(self, spark: SparkSession, n: int) -> str:
+        return read_text(spark, self.path(n))
+
+    def publish(self, spark: SparkSession, n: int, text: str) -> bool:
+        """Publish version ``n`` as ``text``; False, leaving nothing of
+        this writer's behind, when ``n`` is already published."""
+        mkdirs(spark, self.directory)
+        tmp = f"{self.directory}/.tmp-{uuid.uuid4().hex[:12]}-{self.prefix}{n}{self.suffix}"
+        write_text(spark, tmp, text)
+        if publish_file(spark, tmp, self.path(n)):
+            return True
+        delete_dir(spark, tmp)
+        return False
 
 
 # types whose values JSON carries exactly: from_json reads back the
@@ -182,7 +220,7 @@ def local_frame(spark: SparkSession, rows: list, schema: str | T.StructType) -> 
     PythonRDD, so every action on it starts a Python-worker stage; this
     plan starts none, and it is built in a fixed ~20 py4j calls whatever
     the row count (a Column tree of one ``lit`` per value cost ~35
-    calls per value: 1,652 for the 16x3 lineage publish). Rows
+    calls per value: 1,652 for a 16x3 frame). Rows
     and struct values are positional sequences (tuples); every column
     comes back nullable; FAILFAST parsing makes a value that does not
     fit its type an error, not a NULL. The JSON text is embedded in the

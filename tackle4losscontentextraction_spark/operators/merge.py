@@ -31,7 +31,8 @@ Scale design (the part that must survive 100 TB):
   discovered from the source keys (an observed set of buckets —
   O(n_buckets), bounded), only those buckets are read and merged, and
   the result commits through a SINGLE atomic manifest publish (the
-  snapshot layer below) — Iceberg's snapshot swap, rebuilt on rename.
+  snapshot layer below) — Iceberg's snapshot swap, rebuilt on
+  ``fsutil.VersionLog``.
   At thousands of buckets this is the same I/O profile as Iceberg COW:
   rewrite bytes proportional to touched partitions, not table size,
   and a kill at ANY point leaves the previous snapshot fully readable.
@@ -133,59 +134,44 @@ def update_columns(
 #      data/snap-<N>-<token>/ — invisible to readers (no manifest
 #      references it yet) and unreachable by concurrent writers;
 #   2. audit (row counts via the Observation API — no re-read);
-#   3. publish: write metadata/.tmp-<token>-snap-<N>.json, then
-#      fsutil.publish_file it to metadata/snap-<N>.json — an atomic
-#      create-no-overwrite (POSIX link(2) on file:, HDFS rename
-#      elsewhere), so the table flips from snapshot N-1 to N in a
-#      single metadata operation across ALL buckets at once.  A kill
-#      anywhere before the publish leaves snapshot N-1 fully readable
-#      (orphan staging dirs are ignored by readers and reclaimed by
-#      :func:`remove_orphans`); a concurrent writer that lost the race
-#      gets publish_file()==False -> OCC conflict, and its cleanup
-#      touches ONLY its own token-suffixed staging paths — the
-#      winner's published snapshot is never disturbed.
+#   3. publish metadata/snap-<N>.json (fsutil.VersionLog), so the
+#      table flips from snapshot N-1 to N across ALL buckets at once.
+#      Orphan staging dirs of a killed writer are ignored by readers
+#      and reclaimed by :func:`remove_orphans`; a writer that lost the
+#      race for N raises an OCC conflict after cleaning ONLY its own
+#      token-suffixed staging — the winner's snapshot is never touched.
 #
-# Readers (:func:`read_table`) resolve the CURRENT snapshot by listing
-# metadata/snap-*.json and taking the max id — snapshot-id allocation
-# is monotonically increasing, so "max published" IS the committed
-# tip; passing ``snapshot=`` reads any retained older manifest (time
-# travel).  :func:`expire_snapshots` drops history.
+# Readers (:func:`read_table`) take the largest published snapshot;
+# ``snapshot=`` reads any retained older manifest (time travel).
+# :func:`expire_snapshots` drops history.
 
 
 def _new_staging(table_dir: str, new_id: int) -> tuple[str, str]:
-    """Writer-unique staging (token, data_dir) for snapshot ``new_id``.
+    """Writer-unique staging (dirname, data_dir) for snapshot ``new_id``.
 
-    The token format, staging dirname ``snap-<id>-<token>`` and the tmp
-    manifest name derived from it (see :func:`_publish_manifest`) are
-    load-bearing: _serving_dirname, remove_orphans and the snapshot
-    filename filter all match on them — this is the single site that
-    defines them."""
+    The staging dirname ``snap-<id>-<token>`` is load-bearing:
+    _serving_dirname and remove_orphans match on it — this is the
+    single site that defines it."""
     import uuid
 
-    token = uuid.uuid4().hex[:12]
-    return token, f"{table_dir}/data/snap-{new_id}-{token}"
+    dirname = f"snap-{new_id}-{uuid.uuid4().hex[:12]}"
+    return dirname, f"{table_dir}/data/{dirname}"
+
+
+def _manifests(table_dir: str) -> fsutil.VersionLog:
+    return fsutil.VersionLog(f"{table_dir}/metadata", "snap-", ".json")
 
 
 def _publish_manifest(spark: SparkSession, table_dir: str, new_id: int,
-                      token: str, data_dir: str, manifest: dict) -> None:
-    """Commit step shared by merge_write and compact: stage the manifest
-    under a token-suffixed tmp name, then atomically publish it with
-    create-no-overwrite semantics. On an optimistic-concurrency loss,
-    clean ONLY our own staging (never the winner's referenced data) and
-    raise."""
-    fsutil.mkdirs(spark, f"{table_dir}/metadata")
-    tmp = f"{table_dir}/metadata/.tmp-{token}-snap-{new_id}.json"
-    fsutil.write_text(spark, tmp, json.dumps(manifest, indent=1))
-    if not fsutil.publish_file(spark, tmp, _manifest_path(table_dir, new_id)):
-        fsutil.delete_dir(spark, tmp)
+                      data_dir: str, manifest: dict) -> None:
+    """Commit step shared by merge_write and compact. On an
+    optimistic-concurrency loss, clean ONLY our own staging (never the
+    winner's referenced data) and raise."""
+    if not _manifests(table_dir).publish(spark, new_id, json.dumps(manifest, indent=1)):
         fsutil.delete_dir(spark, data_dir)
         raise RuntimeError(
             f"snapshot {new_id} was published concurrently in {table_dir}; retry"
         )
-
-
-def _manifest_path(table_dir: str, snap_id: int) -> str:
-    return f"{table_dir}/metadata/snap-{snap_id}.json"
 
 
 def _serving_dirname(v) -> str:
@@ -197,29 +183,20 @@ def _serving_dirname(v) -> str:
 
 def snapshots(spark: SparkSession, table_dir: str) -> list[int]:
     """Published snapshot ids, ascending ([] for a missing table)."""
-    ids = []
-    for name in fsutil.list_names(spark, f"{table_dir}/metadata"):
-        if name.startswith("snap-") and name.endswith(".json"):
-            try:
-                ids.append(int(name[5:-5]))
-            except ValueError:
-                pass
-    return sorted(ids)
+    return _manifests(table_dir).versions(spark)
 
 
 def current_snapshot_id(spark: SparkSession, table_dir: str) -> int | None:
-    ids = snapshots(spark, table_dir)
-    return ids[-1] if ids else None
+    return _manifests(table_dir).latest(spark)
 
 
 def _read_manifest(spark: SparkSession, table_dir: str, snap_id: int) -> dict:
-
-    path = _manifest_path(table_dir, snap_id)
-    if not fsutil.exists(spark, path):
+    log = _manifests(table_dir)
+    if not fsutil.exists(spark, log.path(snap_id)):
         raise FileNotFoundError(
             f"snapshot {snap_id} is not published (or expired) in {table_dir}"
         )
-    return json.loads(fsutil.read_text(spark, path))
+    return json.loads(log.read(spark, snap_id))
 
 
 def read_table(
@@ -297,9 +274,9 @@ def merge_write(
          DELETE: anti-join on the source keys; a bucket left with zero
          rows is dropped from the manifest, so full deletion keeps the
          table readable via the manifest's stored schema);
-      4. write the merged buckets under data/snap-<N>/, then publish
-         manifest N by atomic rename — one metadata op commits every
-         touched bucket simultaneously.
+      4. write the merged buckets under data/snap-<N>-<token>/, then
+         publish manifest N (:func:`_publish_manifest`) — one metadata
+         op commits every touched bucket simultaneously.
 
     Returns {"snapshot": N, "touched_buckets": [...], "rows_written": n}.
     """
@@ -335,8 +312,7 @@ def _merge_buckets(spark: SparkSession, table_dir: str, src: DataFrame,
     # writer-unique staging: racing writers (and leftover dirs from
     # crashed ones) can never collide, so nothing is pre-deleted here —
     # unpublished orphans are reclaimed by remove_orphans()
-    token, data_dir = _new_staging(table_dir, new_id)
-    dirname = f"snap-{new_id}-{token}"
+    dirname, data_dir = _new_staging(table_dir, new_id)
 
     existing = (
         [b for b in touched if str(b) in cur_man["buckets"]] if cur_man else []
@@ -403,7 +379,7 @@ def _merge_buckets(spark: SparkSession, table_dir: str, src: DataFrame,
         # left to infer from)
         "schema_json": merged.drop("bucket").schema.json(),
     }
-    _publish_manifest(spark, table_dir, new_id, token, data_dir, manifest)
+    _publish_manifest(spark, table_dir, new_id, data_dir, manifest)
     return {"snapshot": new_id, "touched_buckets": touched, "rows_written": rows_written}
 
 
@@ -425,8 +401,7 @@ def compact(spark: SparkSession, table_dir: str) -> dict:
         # publish a manifest read_table can only serve via schema_json
         return {"snapshot": cur_id, "rows_written": 0}
     new_id = cur_id + 1
-    token, data_dir = _new_staging(table_dir, new_id)
-    dirname = f"snap-{new_id}-{token}"
+    dirname, data_dir = _new_staging(table_dir, new_id)
 
     tbl = read_table(spark, table_dir, snapshot=cur_id)
     obs = Observation(f"compact_snap{new_id}")
@@ -448,7 +423,7 @@ def compact(spark: SparkSession, table_dir: str) -> dict:
             "schema_json", tbl.drop("bucket").schema.json()
         ),
     }
-    _publish_manifest(spark, table_dir, new_id, token, data_dir, manifest)
+    _publish_manifest(spark, table_dir, new_id, data_dir, manifest)
     return {"snapshot": new_id, "rows_written": rows_written}
 
 
@@ -476,7 +451,7 @@ def expire_snapshots(
     for sid in ids:
         if sid in keep:
             continue
-        fsutil.delete_dir(spark, _manifest_path(table_dir, sid))
+        fsutil.delete_dir(spark, _manifests(table_dir).path(sid))
         dropped.append(sid)
     for name in sorted(dropped_refs - live_data):
         fsutil.delete_dir(spark, f"{table_dir}/data/{name}")

@@ -24,11 +24,13 @@ once, so the caller's writes and counts re-run none of it.
 
 The reference's greedy per-article order-dependence (SURVEY §3.3) is
 deliberately replaced by frozen-centroid passes — documented batch
-variant; outputs are deterministic and order-free."""
+variant; outputs are deterministic and order-free.
+
+Clustering state between runs: :func:`read_state`, :func:`commit_state`."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsutil
@@ -188,3 +190,43 @@ def run_maintenance(
     unassign = clustering.unassigned_members(memberships)
     repaired = clustering.repair_zero_centroids(kept, memberships, vectors)
     return {"clusters": repaired, "unassign": unassign}
+
+
+def _state_log(state_dir: str) -> fsutil.VersionLog:
+    return fsutil.VersionLog(state_dir, "committed-v")
+
+
+def read_state(spark: SparkSession, state_dir: str
+               ) -> tuple[int, DataFrame | None, DataFrame | None]:
+    """(live version, its clusters, its memberships) under
+    ``state_dir``; (-1, None, None) before the first commit."""
+    ver = _state_log(state_dir).latest(spark)
+    if ver is None:
+        return -1, None, None
+    return (ver, spark.read.parquet(f"{state_dir}/v{ver}/clusters"),
+            spark.read.parquet(f"{state_dir}/v{ver}/memberships"))
+
+
+def commit_state(spark: SparkSession, state_dir: str, version: int,
+                 clusters: DataFrame, memberships: DataFrame) -> dict:
+    """Write ``<state_dir>/v<version>/{clusters,memberships}`` in
+    full, then publish the marker ``committed-v<version>``
+    (``fsutil.VersionLog``), so a kill anywhere leaves the live version
+    whole and both tables consistent. The frames may lazily read the
+    live version's files, which stay untouched. Each write counts its
+    rows (Observation). A version already committed (a concurrent
+    writer won it) raises: the dirs just written are not the committed
+    state.
+
+    Returns {"state_version": version, "clusters": n, "memberships": n}."""
+    out = {"state_version": version}
+    for name, df in (("clusters", clusters), ("memberships", memberships)):
+        obs = Observation(f"cluster_state_{name}")
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite").parquet(f"{state_dir}/v{version}/{name}")
+        out[name] = obs.get["rows"]
+    if not _state_log(state_dir).publish(spark, version, str(version)):
+        raise RuntimeError(
+            f"cluster-state version {version} was already committed in "
+            f"{state_dir}; re-run to retry against the committed state")
+    return out

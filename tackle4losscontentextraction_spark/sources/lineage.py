@@ -8,27 +8,33 @@ article_processor.py:109-141, SURVEY §2.10 R6 / §2.4 J6).
 Spark design: work is split into deterministic *buckets*
 (``pmod(xxhash64(doc_id), n_buckets)``). All pending buckets are
 processed and written in ONE ``partitionBy("bucket")`` job (dynamic
-partition overwrite); lineage records (bucket id, row count, status)
-are appended ONLY AFTER that job commits, with counts taken from an
-Observation on the write itself (write-audit-publish ordering — the
-lineage write is the publish). Restart = anti-join of the bucket list
-against the lineage table, so completed buckets are never recomputed
-and half-written buckets (no lineage rows) are overwritten
-idempotently by the next run's single job.
+partition overwrite). Only AFTER that job commits does the run publish
+the next lineage manifest, ``lineage/snap-<N>.json``
+(``fsutil.VersionLog``, the same commit as a table MERGE's): it lists
+every done bucket so far with its row count, taken from an Observation
+on the write itself, and the written frame's schema (write-audit-publish
+ordering — the manifest is the publish). Restart reads the latest
+manifest — driver-side file reads, no Spark job — so completed buckets
+are never recomputed, half-written buckets (in no manifest) are
+overwritten idempotently by the next run's single job, and a reader of
+the output gets its schema without a schema-inference job.
 
 At 100 TB the bucket count is sized so each bucket is a few GB
-(thousands of buckets); the anti-join is against a tiny lineage table
-(broadcast), and bucket assignment is a pure projection — no extra
-shuffle beyond the partitioned write itself. The write runs one task
-per slot, not one per bucket (:func:`cluster_by_bucket`): with
-thousands of buckets and hundreds of slots each task writes its dozen
-or so buckets one after another, each still as one file.
+(thousands of buckets, so a manifest of a few hundred KB), and bucket
+assignment is a pure projection — no extra shuffle beyond the
+partitioned write itself. The write runs one task per slot, not one per
+bucket (:func:`cluster_by_bucket`): with thousands of buckets and
+hundreds of slots each task writes its dozen or so buckets one after
+another, each still as one file.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import json
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import fsutil
 
@@ -57,25 +63,9 @@ def cluster_by_bucket(df: DataFrame, buckets: list[int]) -> DataFrame:
         n, F.expr(f"CAST(array_position(array({rank}), bucket) AS INT)"))
 
 
-def completed_buckets(spark: SparkSession, lineage_dir: str) -> DataFrame:
-    schema = "bucket int, n_rows bigint, status string"
-    if not any(
-        f.endswith(".parquet") for f in fsutil.list_names(spark, lineage_dir)
-    ):
-        return fsutil.local_frame(spark, [], schema)
-    return (
-        spark.read.schema(schema).parquet(lineage_dir)
-        .where(F.col("status") == "done")
-        .select("bucket", "n_rows", "status")
-        .distinct()
-    )
-
-
-def pending_buckets(
-    spark: SparkSession, df: DataFrame, lineage_dir: str, n_buckets: int = 16, key: str = "doc_id"
-) -> list[int]:
-    done = {r.bucket for r in completed_buckets(spark, lineage_dir).collect()}
-    return [b for b in range(n_buckets) if b not in done]
+def manifests(lineage_dir: str) -> fsutil.VersionLog:
+    """The lineage manifests ``<lineage_dir>/snap-<N>.json``."""
+    return fsutil.VersionLog(lineage_dir, "snap-", ".json")
 
 
 def run_with_resume(
@@ -88,44 +78,38 @@ def run_with_resume(
     key: str = "doc_id",
 ) -> dict:
     """Process only not-yet-done buckets in ONE Spark job; publish the
-    lineage rows for all of them after the data commit.
+    next lineage manifest, which adds all of them, after the data
+    commit.
 
     ``transform`` must preserve the ``key`` column (the bucket is
     re-derived from it on the output side).
 
-    The whole pending set is written as a single
-    ``partitionBy("bucket")`` job with dynamic partition overwrite —
-    the previous per-bucket loop of tiny jobs left a large cluster idle
-    between scheduling waves and re-read every bucket for its count.
-    Per-bucket row counts now come from an ``Observation`` on the SAME
-    write job (write metrics, not a second scan). Ordering is still
-    write-audit-publish: a job killed mid-write leaves old partition
-    data intact (the overwrite commits at job completion) and no
-    lineage rows, so the next run redoes exactly those buckets.
-
-    At thousands of buckets (the 100 TB sizing) the observation is one
-    conditional-count column per pending bucket — wide but constant-space
-    per task; beyond ~10k pending buckets batch the run into waves.
+    The per-bucket row counts are an Observation on the write, one
+    conditional-count column per pending bucket: at thousands of
+    buckets (the 100 TB sizing) wide but constant-space per task;
+    beyond ~10k pending buckets batch the run into waves.
 
     Returns {"processed": [...], "skipped": [...], "rows": n, "schema":
-    s}: ``s`` is the schema of the frame this run wrote, which a reader
-    of ``out_dir`` passes to ``spark.read.schema`` to start no
-    schema-inference job; it is None when nothing was pending (building
-    the transform's plan only for its schema costs more than the
-    inference job it saves).
+    s}: ``s`` is the schema of the frame written into ``out_dir`` (by
+    this run, or as recorded by the run that wrote the last bucket),
+    which a reader passes to ``spark.read.schema`` to start no
+    schema-inference job.
     """
-    pending = pending_buckets(spark, df, lineage_dir, n_buckets, key)
+    log = manifests(lineage_dir)
+    cur = log.latest(spark)
+    done = json.loads(log.read(spark, cur)) if cur is not None else {"buckets": {}}
+    pending = [b for b in range(n_buckets) if str(b) not in done["buckets"]]
     skipped = [b for b in range(n_buckets) if b not in pending]
-    fsutil.mkdirs(spark, lineage_dir)
     if not pending:
-        return {"processed": [], "skipped": skipped, "rows": 0, "schema": None}
+        return {"processed": [], "skipped": skipped, "rows": 0,
+                "schema": T.StructType.fromJson(json.loads(done["schema_json"]))}
 
     # a pending bucket's directory, if present, is by definition an
     # uncommitted leftover from a crashed attempt (done buckets are
     # never pending). Clear them up front: dynamic overwrite only
     # replaces partitions PRESENT in the new output, so a transform
     # legitimately yielding 0 rows for a bucket would otherwise leave
-    # the garbage in place under a fresh 'done' lineage row. The delete
+    # the garbage in place under a fresh 'done' entry. The delete
     # goes through the Hadoop FileSystem API (fsutil), so it works
     # unchanged on HDFS/S3 table locations — or is simply unnecessary
     # with Iceberg, where uncommitted files are not in any snapshot.
@@ -135,8 +119,6 @@ def run_with_resume(
     bucketed = with_bucket(df, key, n_buckets)
     part = transform(bucketed.where(F.col("bucket").isin(pending)))
     part = with_bucket(part, key, n_buckets)
-
-    from pyspark.sql import Observation
 
     obs = Observation("lineage_counts")
     # The write is CLUSTERED by bucket (Iceberg write.distribution-mode=
@@ -162,9 +144,11 @@ def run_with_resume(
     metrics = obs.get
     counts = {b: metrics[f"b{b}"] for b in pending}
     # ... lineage publish second (write-audit-publish)
-    fsutil.local_frame(
-        spark, [(b, counts[b], "done") for b in pending],
-        "bucket int, n_rows bigint, status string",
-    ).write.mode("append").parquet(lineage_dir)
+    new = 0 if cur is None else cur + 1
+    manifest = {"buckets": {**done["buckets"], **{str(b): counts[b] for b in pending}},
+                "schema_json": part.schema.json()}
+    if not log.publish(spark, new, json.dumps(manifest, indent=1)):
+        raise RuntimeError(f"lineage version {new} was published concurrently in "
+                           f"{lineage_dir}; re-run to retry")
     return {"processed": pending, "skipped": skipped, "rows": sum(counts.values()),
             "schema": part.schema}

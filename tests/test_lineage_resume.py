@@ -3,6 +3,7 @@ buckets (north rule: killed job resumes without reprocessing)."""
 
 from __future__ import annotations
 
+import json
 import shutil
 import tempfile
 
@@ -46,13 +47,15 @@ def test_partial_failure_resume(spark, tmpdirs):
     docs = synth.synth_docs(spark, 120, partitions=4)
     bucketed = lineage.with_bucket(docs, "doc_id", 4)
 
-    # manually 'complete' buckets 0 and 1 (as a killed job would have)
+    # manually 'complete' buckets 0 and 1 (as a killed job would have):
+    # their data, then the lineage manifest that publishes them
+    done = {}
     for b in (0, 1):
         part = extraction.extract(bucketed.where(F.col("bucket") == b))
         part.write.mode("overwrite").parquet(f"{out_dir}/bucket={b}")
-        n = spark.read.parquet(f"{out_dir}/bucket={b}").count()
-        spark.createDataFrame([(b, n, "done")], "bucket int, n_rows bigint, status string") \
-            .write.mode("append").parquet(lin_dir)
+        done[str(b)] = spark.read.parquet(f"{out_dir}/bucket={b}").count()
+    assert lineage.manifests(lin_dir).publish(spark, 0, json.dumps(
+        {"buckets": done, "schema_json": part.schema.json()}))
 
     r = lineage.run_with_resume(
         spark, docs, extraction.extract, out_dir, lin_dir, n_buckets=4
@@ -95,7 +98,8 @@ def test_resume_write_is_slot_sized_and_its_schema_reads_without_a_job(spark, tm
     file per bucket; the returned schema reads the output (as
     jobs/run_pipeline.py reads extracted/) without starting a
     schema-inference job, and equals the inferred schema field for
-    field."""
+    field. The lineage bookkeeping starts no Spark job: a fresh run
+    starts only its write's jobs, a resumed run none."""
     import glob
 
     from planutil import spark_jobs, stage_tasks
@@ -106,8 +110,12 @@ def test_resume_write_is_slot_sized_and_its_schema_reads_without_a_job(spark, tm
     res, jobs = spark_jobs(spark, lambda: lineage.run_with_resume(
         spark, docs, extraction.extract, out_dir, lin_dir, n_buckets=16))
     assert len(res["processed"]) == 16 and res["rows"] == 400
+    # only the data write's jobs (its shuffle's map stage, then the
+    # write): finding the pending buckets and publishing the lineage
+    # run no Spark job
+    assert len(jobs) <= 2
     # the input has one partition per slot, so every stage of the run
-    # (the extraction, the bucketed write, the lineage publish) fits
+    # (the extraction, the bucketed write) fits
     assert max(n for j in jobs for n in stage_tasks(spark, j)) <= slots
     for b in range(16):
         assert len(glob.glob(f"{out_dir}/bucket={b}/part-*.parquet")) == 1, b
@@ -117,7 +125,12 @@ def test_resume_write_is_slot_sized_and_its_schema_reads_without_a_job(spark, tm
     assert got.schema == spark.read.parquet(out_dir).schema
     assert got.count() == 400
 
-    # nothing pending: no plan was built, so no schema is offered
-    again = lineage.run_with_resume(
-        spark, docs, extraction.extract, out_dir, lin_dir, n_buckets=16)
-    assert again["processed"] == [] and again["schema"] is None
+    # nothing pending: the schema comes from the lineage manifest, and
+    # it reads the output without a job too
+    again, jobs = spark_jobs(spark, lambda: lineage.run_with_resume(
+        spark, docs, extraction.extract, out_dir, lin_dir, n_buckets=16))
+    assert jobs == []
+    assert again["processed"] == [] and again["schema"] == res["schema"]
+    got, jobs = spark_jobs(spark, lambda: spark.read.schema(again["schema"]).parquet(out_dir))
+    assert jobs == []
+    assert got.schema == spark.read.parquet(out_dir).schema

@@ -8,7 +8,11 @@
   purpose: it returns real replay rows computed in Python.
 - The jobs take their session from session.job_session, never from
   SparkSession.builder, so the session settings every job needs (the
-  generated-code cache size) have one home."""
+  generated-code cache size) have one home.
+- The jobs hold no commit code: they neither publish files
+  (fsutil.publish_file / write_text) nor parse cluster-state marker
+  names (``committed-v``); the commit protocol (fsutil.VersionLog) is
+  called only from the library."""
 
 from __future__ import annotations
 
@@ -88,3 +92,42 @@ def test_builder_check_catches_a_call(tmp_path):
         "other = pyspark.sql.SparkSession.builder.getOrCreate()\n"
         "fine = job_session('x')\n")
     assert _session_builder_uses(str(p)) == [3, 4]
+
+
+def _commit_code(path: str) -> list[int]:
+    """Lines that call ``publish_file``/``write_text`` (as a name or an
+    attribute) or hold a ``committed-v`` string outside a docstring."""
+    tree = _parse(path)
+    docstrings = {id(n.value) for n in ast.walk(tree)
+                  if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant)}
+    lines = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name in ("publish_file", "write_text"):
+                lines.add(node.lineno)
+        elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+              and "committed-v" in node.value and id(node) not in docstrings):
+            lines.add(node.lineno)
+    return sorted(lines)
+
+
+def test_jobs_hold_no_commit_code():
+    found = {os.path.relpath(p, REPO): lines
+             for p in JOBS if (lines := _commit_code(p))}
+    assert not found, f"commit through the library (fsutil.VersionLog callers): {found}"
+
+
+def test_commit_check_catches_a_call(tmp_path):
+    p = tmp_path / "job.py"
+    p.write_text(
+        '"""Writes cluster_state/committed-v<N> through the library."""\n'
+        "from tackle4losscontentextraction_spark import fsutil\n"
+        "from tackle4losscontentextraction_spark.fsutil import publish_file\n"
+        "fsutil.write_text(spark, tmp, '0')\n"
+        "publish_file(spark, tmp, dst)\n"
+        "live = [n for n in names if n.startswith('committed-v')]\n"
+        "marker = f'{state}/committed-v{ver}'\n"
+        "fine = cluster_pipeline.commit_state(spark, state, 1, c, m)\n")
+    assert _commit_code(str(p)) == [4, 5, 6, 7]

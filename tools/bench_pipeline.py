@@ -87,8 +87,11 @@ def _run(argv: list[str], cores: int) -> tuple[float, dict]:
 def _run_kill_at_lineage(argv: list[str], cores: int, lineage_dir: str,
                          timeout: float = 3600.0) -> float:
     """Launch the job, SIGKILL its process group the moment the
-    extraction lineage dir holds a committed parquet part (the resume
+    extraction lineage dir holds a published manifest (the resume
     point), return elapsed seconds at the kill."""
+    from tackle4losscontentextraction_spark.sources.lineage import manifests
+
+    log = manifests(lineage_dir)
     t0 = time.monotonic()
     proc = subprocess.Popen(argv, stdout=subprocess.DEVNULL,
                             stderr=subprocess.DEVNULL, env=_env(cores),
@@ -98,9 +101,10 @@ def _run_kill_at_lineage(argv: list[str], cores: int, lineage_dir: str,
             if time.monotonic() - t0 > timeout:
                 raise RuntimeError("kill-phase run exceeded timeout")
             try:
-                # _SUCCESS = the lineage write committed; killing any
+                # a manifest = the lineage committed; killing any
                 # earlier is equivalent to a fresh run (no resume)
-                published = "_SUCCESS" in os.listdir(lineage_dir)
+                published = any(log.version_of(n) is not None
+                                for n in os.listdir(lineage_dir))
             except FileNotFoundError:
                 published = False
             if published:
