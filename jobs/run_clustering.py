@@ -44,6 +44,7 @@ def main() -> int:
     ap.add_argument("--merge-threshold", type=float, default=None)
     args = ap.parse_args()
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from tackle4losscontentextraction_spark.session import job_session
@@ -51,7 +52,6 @@ def main() -> int:
     spark = job_session("t4l-clustering")
     spark.sparkContext.setLogLevel("WARN")
 
-    from tackle4losscontentextraction_spark import fsutil
     from tackle4losscontentextraction_spark.plans import cluster_pipeline
 
     vectors = spark.read.parquet(args.vectors).select(
@@ -59,48 +59,26 @@ def main() -> int:
         F.col("embedding").cast("array<double>").alias("embedding"),
     )
     prior = spark.read.parquet(args.clusters) if args.clusters else None
+    members = spark.read.parquet(args.memberships) if args.memberships else None
     kw = {}
     if args.assign_threshold is not None:
         kw["assign_threshold"] = args.assign_threshold
     if args.merge_threshold is not None:
         kw["merge_threshold"] = args.merge_threshold
-    out = cluster_pipeline.run_clustering(spark, vectors, prior, **kw)
-
     # maintenance (recount + unassign + zero-centroid repair) is only
     # valid against the COMPLETE membership table: on an incremental
     # run this batch's assignments alone would make every idle prior
-    # cluster recount to 0 (and be wrongly dropped/unassigned). Union
-    # prior memberships when given; skip maintenance when incremental
-    # without them.
-    memberships = out["assignments"].select("vec_id", "cluster_id")
-    if args.memberships:
-        memberships = cluster_pipeline.reconcile_memberships(
-            memberships,
-            spark.read.parquet(args.memberships),
-            out["merge_mapping"],
-        )
-    run_maint = args.clusters is None or args.memberships is not None
-    if run_maint:
-        maint = cluster_pipeline.run_maintenance(out["clusters"], memberships, vectors)
-        clusters_out, unassign_out = maint["clusters"], maint["unassign"]
-    else:
-        clusters_out = out["clusters"]
-        unassign_out = fsutil.local_frame(spark, [], "vec_id bigint, old_cluster_id string")
+    # cluster recount to 0 (and be wrongly dropped/unassigned). The
+    # stage skips it when incremental without --memberships.
+    out = cluster_pipeline.run_clustering(spark, vectors, prior, members, **kw)
 
-    # each output is materialized once, then written and counted from
-    # the materialized rows — not written, then read back to count,
-    # which re-planned and re-ran the clustering lineage per output
-    frames = {
-        "clusters": clusters_out,
-        "assignments": out["assignments"],
-        "pending": out["pending"],
-        "unassign": unassign_out,
-    }
+    # each output is written once and counted on its write
     counts = {}
-    for name, df in frames.items():
-        df = df.localCheckpoint()
-        df.write.mode("overwrite").parquet(os.path.join(args.out, name))
-        counts[name] = df.count()
+    for name in ("clusters", "assignments", "pending", "unassign"):
+        obs = Observation(name)
+        out[name].observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite").parquet(os.path.join(args.out, name))
+        counts[name] = obs.get["rows"]
     print(json.dumps({"counts": counts, "out": args.out}))
     spark.stop()
     return 0

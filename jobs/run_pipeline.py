@@ -181,32 +181,22 @@ def main() -> int:
             F.xxhash64("doc_id").alias("vec_id"),
             F.col("embedding").cast("array<double>").alias("embedding"),
         )
-        all_vecs = vecs
         # S4 semantics (fetch_unclustered_articles): an incremental
         # run clusters only vectors without a membership — already-
         # assigned vectors keep their cluster; prior pendings get
         # re-tried against the clusters later runs created
         state_dir = f"{wd}/cluster_state"
         cur_ver, prior, prior_members = cluster_pipeline.read_state(spark, state_dir)
-        if prior is not None:
-            vecs = vecs.join(prior_members.select("vec_id"), "vec_id", "left_anti")
-        cres = cluster_pipeline.run_clustering(spark, vecs, prior)
-        members = cres["assignments"].select("vec_id", "cluster_id")
-        if prior is not None:
-            members = cluster_pipeline.reconcile_memberships(
-                members, prior_members, cres["merge_mapping"])
-        maint = cluster_pipeline.run_maintenance(
-            cres["clusters"], members, all_vecs)
-        # the unassign set is read twice (the anti-join below and its
-        # count), so it is materialized once
-        unassign = maint["unassign"].localCheckpoint()
-        # the published membership state reflects maintenance: members
-        # of dropped (<2-member) clusters are unassigned, not carried
-        members = members.join(unassign.select("vec_id"), "vec_id", "left_anti")
+        unclustered = vecs if prior is None else vecs.join(
+            prior_members.select("vec_id"), "vec_id", "left_anti")
+        # the stage recounts, unassigns and repairs against the
+        # complete membership table: the prior one plus this run's
+        cres = cluster_pipeline.run_clustering(
+            spark, unclustered, prior, prior_members, member_vectors=vecs)
         out["clustering"] = {
             **cluster_pipeline.commit_state(
-                spark, state_dir, cur_ver + 1, maint["clusters"], members),
-            "unassigned": unassign.count(),
+                spark, state_dir, cur_ver + 1, cres["clusters"], cres["memberships"]),
+            "unassigned": cres["unassigned"].get["rows"],
         }
 
     print(json.dumps(out, default=str))

@@ -1,11 +1,16 @@
-"""numpy kernels for the clustering stage's two quadratic steps: the
-pending x pending pairing and the cluster x cluster merge fixpoint.
+"""numpy kernels for the clustering stage's bounded steps: the
+pending x pending pairing, the cluster x cluster merge fixpoint, and
+the cluster stage's single pass (:func:`cluster_stage`: centroid
+update, pairing, merge, recount, unassign and zero-centroid repair).
 
-Both run over a bounded working set (pairing is capped at
-``MAX_PENDING_PAIRING`` rows; the merge input is the cluster table), so
-:mod:`.clustering` hands each one its whole input as ONE Arrow batch
-stream in one ``mapInArrow`` task and gets the result back in one pass
-— no per-pass Spark jobs, no plan that grows with the pass count.
+Each runs over a bounded working set (pairing is capped at
+``MAX_PENDING_PAIRING`` rows; the merge input is the cluster table;
+the stage adds the per-cluster counts and per-position sums Spark
+aggregates), so its caller hands it the whole input as ONE Arrow
+batch stream in one ``mapInArrow`` task and gets the result back in
+one pass — no per-pass Spark jobs, no plan that grows with the pass
+count. The stage's input and output are each one frame whose ``kind``
+column tells its row kinds apart (:func:`stage_batches`).
 
 The arithmetic is the Catalyst expressions' (functions/vectors.py),
 operation for operation, so results are bit-identical to them:
@@ -25,9 +30,13 @@ with NaN marking NULL elements; inputs are otherwise assumed finite.
 
 Memory: similarities are computed ``BLOCK_ROWS`` rows at a time against
 the whole set, so the working memory is O(BLOCK_ROWS x n) doubles plus
-the O(n x dim) vectors themselves — never the n x n matrix. Time is
-O(n^2 x dim) per pairing or merge pass, on one core: the pair count the
-cross join scored, without its per-pass planning and jobs.
+the O(n x dim) vectors themselves — never the n x n matrix. The stage
+holds in addition one count per membership key, the membership rows of
+the capped pending vectors and, for the clusters being repaired, one
+sum and count per position; never another membership row or a vector
+outside the capped pending set. Time is O(n^2 x dim)
+per pairing or merge pass, on one core: the pair count the cross join
+scored, without its per-pass planning and jobs.
 """
 
 from __future__ import annotations
@@ -51,6 +60,14 @@ PAIR_SCHEMA = (
 MERGE_SCHEMA = (
     "cluster_id string, centroid array<double>, member_count bigint, "
     "new_cluster_id string"
+)
+# the cluster stage's kernel (stage_batches): input rows of several
+# kinds in one frame, and output rows of several kinds
+STAGE_INPUT = (("kind", "string"), ("cluster_id", "string"), ("vec_id", "bigint"),
+               ("vec", "array<double>"), ("n", "bigint"), ("pos", "int"), ("x", "double"))
+STAGE_SCHEMA = (
+    "kind string, cluster_id string, centroid array<double>, member_count bigint, "
+    "repaired boolean, vec_id bigint, new_cluster_id string, unassigned boolean"
 )
 
 
@@ -211,6 +228,127 @@ def merge_fixpoint(ids: list[str], vecs: list, counts: list[int],
     return ids, vecs, counts, mapping
 
 
+def running_mean(c, s, n: int, k: int):
+    """``zip_with(c, s, (x*n + y) / (n+k))`` over nullable vectors
+    (bigint n, k, as update_centroids casts them)."""
+    if c is None:
+        return None
+    m = min(len(c), len(s))
+    out = np.full(max(len(c), len(s)), np.nan)
+    out[:m] = (c[:m] * float(n) + s[:m]) / float(n + k)
+    return out
+
+
+def is_broken(v) -> bool:
+    """``repair_zero_centroids``' test: a NULL centroid, or one whose
+    elements are all exactly 0.0 (empty included). A NULL element makes
+    the SQL ``exists`` NULL, which is not broken."""
+    return v is None or (not np.isnan(v).any() and not np.any(v != 0.0))
+
+
+def cluster_stage(clusters: tuple[list, list, list], sums: dict,
+                  pending: tuple[list, list], counts: dict | None,
+                  prior_of: dict, repair: dict, assign_threshold: float,
+                  merge_threshold: float, max_passes: int):
+    """The cluster stage's whole bounded step: the centroid update, the
+    pending pairing, the merge fixpoint over the cluster table plus the
+    new pairs, then recount, the unassign set and the zero-centroid
+    repair.
+
+    - ``clusters``: (ids, centroids, member counts) of the cluster table;
+    - ``sums``: cluster id -> (per-position sums, assigned vector count)
+      of this batch's fresh assignments (``clustering.update_sums``),
+      folded in as ``update_centroids`` does;
+    - ``pending``: (vec ids, vectors), the capped pending set;
+    - ``counts``: membership rows per cluster id held before the
+      pairing (prior rows a fresh assignment did not replace, plus the
+      fresh assignments); None skips maintenance;
+    - ``prior_of``: vec id -> the cluster ids of its held membership
+      rows, for the pending vectors that have any (a pair replaces them);
+    - ``repair``: cluster id -> (per-position sums, per-position
+      non-NULL counts) of its held members' vectors outside the pending
+      set, for the clusters whose input centroid is broken; the pending
+      members that stay unpaired are added here.
+
+    Returns (clusters, members, redirect): the live clusters as (id,
+    centroid, member count, repaired; None without maintenance); the
+    pair members as (vec id, cluster id, unassigned); and, for every
+    membership key that moves or loses its members, key -> (key after
+    the merge mapping, unassigned). Recount and unassign follow
+    ``clustering.recount_members`` / ``unassigned_members``: a key with
+    fewer than 2 rows loses them, a cluster with fewer than 2 is gone.
+    Repair is exact when the thresholds are >= 0: a broken centroid
+    then scores 0.0 or NULL against everything, so it takes no fresh
+    member and no merge, and its members are the held ones that no
+    pair took."""
+    c_ids, c_vecs, c_ns = clusters
+    c_vecs = [running_mean(v, sums[i][0], n, sums[i][1]) if i in sums else v
+              for i, v, n in zip(c_ids, c_vecs, c_ns)]
+    c_ns = [n + sums[i][1] if i in sums else n for i, n in zip(c_ids, c_ns)]
+    p_ids, p_vecs = pending
+    pairs = pair_pending(p_ids, p_vecs, assign_threshold)
+    ids, vecs, ns, mapping = merge_fixpoint(
+        list(c_ids) + [p[0] for p in pairs], c_vecs + [p[1] for p in pairs],
+        c_ns + [2] * len(pairs), merge_threshold, max_passes)
+    live = [(i, v, n) for i, v, n in zip(ids, vecs, ns) if n >= 2]
+    members = [(m, mapping.get(cid, cid)) for cid, _, a, b in pairs for m in (a, b)]
+    if counts is None:
+        return ([(i, v, n, None) for i, v, n in live],
+                [(m, cid, False) for m, cid in members],
+                {k: (t, False) for k, t in mapping.items()})
+    held = dict(counts)
+    for cid, _, a, b in pairs:
+        for m in (a, b):
+            for k in prior_of.get(m, ()):
+                held[k] -= 1
+        held[cid] = held.get(cid, 0) + 2
+    paired = {m for _, _, a, b in pairs for m in (a, b)}
+    broken = {i for i, v in zip(c_ids, clusters[1]) if is_broken(v)}
+    repair = dict(repair)
+    for m, v in zip(p_ids, p_vecs):
+        for k in () if m in paired or v is None or not len(v) else prior_of.get(m, ()):
+            if k in broken:
+                repair[k] = _add_member(repair.get(k), v)
+    final: dict = {}
+    for k, n in held.items():
+        if n:
+            t = mapping.get(k, k)
+            final[t] = final.get(t, 0) + n
+    gone = {k for k, n in final.items() if n < 2}
+    out = []
+    for i, v, _ in live:
+        n = final.get(i, 0)
+        if n < 2:
+            continue
+        fixed = is_broken(v) and i in repair
+        if fixed:
+            s, c = repair[i]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                v = np.where(c > 0, s / c, np.nan)
+        out.append((i, v, n, fixed))
+    redirect = {}
+    for k in held.keys() | mapping.keys():
+        t = mapping.get(k, k)
+        if t != k or t in gone:
+            redirect[k] = (t, t in gone)
+    return out, [(m, cid, cid in gone) for m, cid in members], redirect
+
+
+def _add_member(acc, v):
+    """Per-position (sums, non-NULL counts) ``acc`` (None: no rows yet)
+    with the vector ``v`` added, as the SQL ``sum`` / ``count`` over
+    its posexploded elements would: a NULL element adds a position but
+    no value, and a sum with no value yet is NULL (NaN)."""
+    size = max(len(v), 0 if acc is None else len(acc[0]))
+    xs, ns = np.full(size, np.nan), np.zeros(size, dtype=np.int64)
+    if acc is not None:
+        xs[:len(acc[0])], ns[:len(acc[1])] = acc
+    ok = ~np.isnan(v)
+    xs[:len(v)][ok] = np.where(ns[:len(v)][ok] > 0, xs[:len(v)][ok], 0.0) + v[ok]
+    ns[:len(v)][ok] += 1
+    return xs, ns
+
+
 # ---- Arrow boundary -------------------------------------------------------
 
 
@@ -230,7 +368,7 @@ def _vector_array(vecs: list) -> pa.Array:
     values = pa.array(flat, pa.float64(), mask=np.isnan(flat))
     return pa.ListArray.from_arrays(
         pa.array(offsets), values,
-        mask=pa.array([v is None for v in vecs]))
+        mask=pa.array([v is None for v in vecs], pa.bool_()))
 
 
 def _table(batches: Iterator[pa.RecordBatch]) -> pa.Table | None:
@@ -279,3 +417,79 @@ def merge_batches(batches: Iterator[pa.RecordBatch], threshold: float,
          pa.array([None] * len(ids) + [mapping[o] for o in old], pa.string())],
         names=["cluster_id", "centroid", "member_count", "new_cluster_id"],
     )
+
+
+def _by_position(ids: list, pos: list, x: list, n: list) -> dict:
+    """Per-position rows (id, pos, x, n) -> {id: (x array, n array)},
+    NaN (SQL NULL) for a NULL x."""
+    out: dict = {}
+    for i, p, xv, nv in zip(ids, pos, x, n):
+        out.setdefault(i, []).append((p, xv, nv))
+    arrays = {}
+    for i, rows in out.items():
+        size = max(p for p, _, _ in rows) + 1
+        xs, ns = np.full(size, np.nan), np.zeros(size, dtype=np.int64)
+        for p, xv, nv in rows:
+            xs[p] = np.nan if xv is None else xv
+            ns[p] = nv
+        arrays[i] = (xs, ns)
+    return arrays
+
+
+def stage_batches(batches: Iterator[pa.RecordBatch], assign_threshold: float,
+                  merge_threshold: float, max_passes: int, maintain: bool
+                  ) -> Iterator[pa.RecordBatch]:
+    """mapInArrow body of :func:`cluster_stage`: STAGE_INPUT rows, told
+    apart by ``kind``, -> STAGE_SCHEMA rows ('cluster', 'member',
+    'redirect'). Input kinds: 'cluster' (cluster_id, vec, n); 'sum'
+    (cluster_id, vec_id, pos, x, n): the centroid sums, and with a NULL
+    pos the held membership rows, per cluster and, for a pending vector
+    (vec_id not NULL), per vector; 'repair' (cluster_id, pos, x, n);
+    'pending' (vec_id, vec)."""
+    pyworker.drop_spark_zip_importers()
+    t = _table(batches)
+    rows: dict[str, list[int]] = {}
+    for r, k in enumerate([] if t is None else t.column("kind").to_pylist()):
+        rows.setdefault(k, []).append(r)
+
+    def pick(kind: str, *names: str) -> list:
+        idx = rows.get(kind, [])
+        if not idx:
+            return [[] for _ in names]
+        part = t.take(idx)
+        return [_read_vectors(part.column(c)) if c == "vec" else part.column(c).to_pylist()
+                for c in names]
+
+    c_ids, c_vecs, c_ns = pick("cluster", "cluster_id", "vec", "n")
+    if None in c_ns:
+        raise ValueError("cluster stage: member_count must not be NULL")
+    s_ids, s_vids, s_pos, s_x, s_n = pick("sum", "cluster_id", "vec_id", "pos", "x", "n")
+    at = [r for r, p in enumerate(s_pos) if p is not None]
+    sums = {i: (x, int(n[0])) for i, (x, n) in _by_position(
+        *[[col[r] for r in at] for col in (s_ids, s_pos, s_x, s_n)]).items()}
+    counts: dict = {}
+    prior_of: dict = {}
+    for i, v, p, n in zip(s_ids, s_vids, s_pos, s_n):
+        if p is None:
+            counts[i] = counts.get(i, 0) + n
+            if v is not None:
+                prior_of.setdefault(v, []).extend([i] * n)
+    clusters, members, redirect = cluster_stage(
+        (c_ids, c_vecs, c_ns), sums, tuple(pick("pending", "vec_id", "vec")),
+        counts if maintain else None,
+        prior_of, _by_position(*pick("repair", "cluster_id", "pos", "x", "n")),
+        assign_threshold, merge_threshold, max_passes)
+    nc, nm, nr = len(clusters), len(members), len(redirect)
+    yield pa.RecordBatch.from_arrays([
+        pa.array(["cluster"] * nc + ["member"] * nm + ["redirect"] * nr, pa.string()),
+        pa.array([c[0] for c in clusters] + [m[1] for m in members] + list(redirect),
+                 pa.string()),
+        _vector_array([c[1] for c in clusters] + [None] * (nm + nr)),
+        pa.array([c[2] for c in clusters] + [None] * (nm + nr), pa.int64()),
+        pa.array([c[3] for c in clusters] + [None] * (nm + nr), pa.bool_()),
+        pa.array([None] * nc + [m[0] for m in members] + [None] * nr, pa.int64()),
+        pa.array([None] * (nc + nm) + [r[0] for r in redirect.values()], pa.string()),
+        pa.array([None] * nc + [m[2] for m in members] + [r[1] for r in redirect.values()],
+                 pa.bool_()),
+    ], names=["kind", "cluster_id", "centroid", "member_count", "repaired", "vec_id",
+              "new_cluster_id", "unassigned"])

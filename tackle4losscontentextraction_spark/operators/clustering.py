@@ -27,19 +27,26 @@ rendition here:
   (sql/recalculate_all_cluster_member_counts.sql): recount, delete
   0/1-member clusters, unassign their members.
 
-Scale: assignment and the centroid update touch every vector, so they
+Scale: assignment and the centroid sums touch every vector, so they
 stay Spark joins and aggregates — centroids are O(clusters) and
-broadcast; vectors never shuffle for scoring. Pairing and merging are
-quadratic over BOUNDED sets (the capped pending set; the cluster
-table), where a cross-join plan costs more in query planning and job
-scheduling than in arithmetic: each runs as one numpy kernel
-(:mod:`.cluster_kernel`) over its whole set in ONE mapInArrow task —
-one Spark job however many merge passes run. The kernels compute
-similarities in row blocks against the whole set, so their memory is
-O(BLOCK_ROWS x set size) plus the vectors, and they reproduce the
-Catalyst cosine's sequential fold, so results are bit-identical to it.
-The kernel module (numpy, pyarrow) is imported on the first call that
-needs it, not when this module is."""
+broadcast; vectors never shuffle for scoring. Everything after them
+works on BOUNDED sets (the capped pending set; the cluster table and
+its per-cluster counts and sums), where a cross-join plan costs more
+in query planning and job scheduling than in arithmetic, so it runs
+in numpy (:mod:`.cluster_kernel`) over the whole set in ONE
+mapInArrow task. The cluster stage (plans/cluster_pipeline.py) makes
+the update, pairing, merge, recount, unassign and repair one kernel
+call; :func:`new_clusters_from_pairs` and
+:func:`merge_clusters_fixpoint` run the pairing or the merge alone.
+The kernels compute similarities in row blocks against the whole set,
+so their memory is O(BLOCK_ROWS x set size) plus the set, and they
+reproduce the Catalyst cosine's sequential fold, so results are
+bit-identical to it. :func:`update_centroids`,
+:func:`recount_members`, :func:`unassigned_members` and
+:func:`repair_zero_centroids` stay the Catalyst statements of what the
+stage's kernel does (oracle queries use the last three). The kernel
+module (numpy, pyarrow) is imported on the first call that needs it,
+not when this module is."""
 
 from __future__ import annotations
 
@@ -90,18 +97,34 @@ def assign_to_clusters(
     )
 
 
+def assigned_elements(
+    vectors: DataFrame, assignments: DataFrame,
+    vec_id: str = "vec_id", vec_col: str = "embedding",
+) -> DataFrame:
+    """(cluster_id, pos, val): every element of every assigned vector."""
+    joined = assignments.join(vectors, vec_id).select(
+        "cluster_id", F.col(vec_col).cast("array<double>").alias("v")
+    )
+    return joined.select("cluster_id", F.posexplode("v").alias("pos", "val"))
+
+
+def update_sums(elements: DataFrame, *keys: str) -> DataFrame:
+    """(cluster_id, pos, *keys, s, k) from :func:`assigned_elements`
+    rows: per cluster and position (and ``keys``), the sum of the
+    assigned elements and their count — the cluster-table-sized
+    aggregate :func:`update_centroids` (and the cluster stage's kernel)
+    fold into the running mean."""
+    return elements.groupBy("cluster_id", "pos", *keys).agg(
+        F.sum("val").alias("s"), F.count("*").alias("k"))
+
+
 def update_centroids(
     clusters: DataFrame, vectors: DataFrame, assignments: DataFrame,
     vec_id: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """Batch running-mean update: (old*n + sum(new members)) / (n + k)."""
-    joined = assignments.join(vectors, vec_id).select(
-        "cluster_id", F.col(vec_col).cast("array<double>").alias("v")
-    )
     sums = (
-        joined.select("cluster_id", F.posexplode("v").alias("pos", "val"))
-        .groupBy("cluster_id", "pos")
-        .agg(F.sum("val").alias("s"), F.count("*").alias("k"))
+        update_sums(assigned_elements(vectors, assignments, vec_id, vec_col))
         .groupBy("cluster_id")
         .agg(
             F.transform(F.array_sort(F.collect_list(F.struct("pos", "s"))), lambda p: p["s"]).alias("vsum"),

@@ -11,27 +11,48 @@ Stages (reference line refs in operators/clustering.py):
   4. pair clusters  : mutual-best pending x pending pairs > 0.82 seed
                       2-member clusters
   5. merge fixpoint : weighted-mean merging > 0.9, <= 10 passes
-  6. recount        : drop 0/1-member clusters
+  6. maintenance    : recount, drop 0/1-member clusters and unassign
+                      their members, zero-centroid repair
 
-Stages 2-3 are Spark joins and aggregates over all vectors. Stages 4-5
-work on bounded sets — the pending pairing is capped at
-MAX_PENDING_PAIRING rows, the merge sees the cluster table — and each
-runs as one numpy kernel (operators/cluster_kernel.py) in one
-mapInArrow task, in O(BLOCK_ROWS x set size) memory: one Spark job
-each, however many merge passes run. :func:`run_clustering`
-materializes the assignments, the pair clusters and the merged state
-once, so the caller's writes and counts re-run none of it.
+:func:`run_clustering` is the stage, for a run from scratch and for a
+run over committed state alike. Spark runs only the passes over
+unbounded sets: scoring the vectors to cluster against the broadcast
+centroids (2); one aggregate of the assigned vectors' sums per
+(cluster, position) and the held memberships per cluster (and per
+vector for the capped pending ones); the member vectors' sums of the
+clusters whose centroid is broken, but for the capped pending members
+(a branch that adaptive execution drops when no centroid is broken);
+and re-pointing and filtering the memberships through the kernel's
+redirect rows. Every branch that reads an unbounded table ends in a
+shuffle, so the kernel's one task reads only bounded rows. Everything
+over the bounded working set (the cluster table, the pending set capped
+at MAX_PENDING_PAIRING, the per-cluster counts and sums) is steps 3-6 in
+ONE ``cluster_kernel.stage_batches`` call, in one mapInArrow task,
+materialized once; both state tables are written from it. The kernel's
+memory is the set itself (clusters and pending vectors x dim, the
+counts) plus O(BLOCK_ROWS x set size) for the similarity blocks; it
+never holds the memberships or the vectors to cluster. The
+perfbench upsert_cluster job (corpus seed 21) runs 3 Spark jobs in the
+stage from scratch and 16 over its committed state.
 
 The reference's greedy per-article order-dependence (SURVEY §3.3) is
 deliberately replaced by frozen-centroid passes — documented batch
 variant; outputs are deterministic and order-free.
 
+:func:`reconcile_memberships` and :func:`run_maintenance` state the
+membership reconciliation and the maintenance pass as Catalyst
+operators; the tests hold the kernel to them.
+
 Clustering state between runs: :func:`read_state`, :func:`commit_state`."""
 
 from __future__ import annotations
 
+import functools
+import json
+
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import fsutil
 from ..operators import clustering
@@ -73,86 +94,181 @@ def run_clustering(
     spark: SparkSession,
     vectors: DataFrame,
     clusters: DataFrame | None = None,
+    memberships: DataFrame | None = None,
+    member_vectors: DataFrame | None = None,
     assign_threshold: float = clustering.ASSIGN_THRESHOLD,
     merge_threshold: float = clustering.MERGE_THRESHOLD,
-) -> dict[str, DataFrame]:
-    """vectors(vec_id, embedding) [+ existing clusters(cluster_id,
-    centroid, member_count)] -> {clusters, assignments, pending,
-    merge_mapping}.
+) -> dict:
+    """The cluster stage: vectors(vec_id, embedding) to cluster [+ the
+    cluster table(cluster_id, centroid, member_count) and its
+    memberships(vec_id, cluster_id)] -> {clusters, memberships,
+    unassign, unassigned, assignments, pending, merge_mapping}.
 
-    The fresh assignments and the new pair clusters are materialized
-    once (localCheckpoint): the centroid update, the pending anti-join,
-    the merge input and the returned assignments all read them, and
-    each read would otherwise re-run the assignment scoring or the
-    pairing kernel. An empty cluster table needs no branch of its own
-    — it assigns nothing."""
+    Spark scores ``vectors`` against the broadcast centroids, sums the
+    assigned vectors per cluster and position
+    (:func:`clustering.update_sums`) in the aggregate that counts the
+    held memberships per cluster (a fresh assignment replaces a
+    vector's prior rows) and, for the capped pending vectors, whose
+    rows a pair replaces, per vector; and it sums the held members'
+    vectors of the clusters whose centroid is broken, less the capped
+    pending ones, which the kernel adds back unless a pair takes them.
+    One ``cluster_kernel.stage_batches`` task then does the rest over
+    the bounded set, and its output is materialized once. The memberships
+    are re-pointed and filtered through that output's redirect rows.
+
+    Maintenance (recount, unassign, zero-centroid repair) needs the
+    complete membership table, so it runs when ``memberships`` is given
+    or there is no cluster table; with a cluster table and no
+    memberships, ``clusters`` is the merged table with its stored
+    counts and nothing is unassigned. ``member_vectors`` (default
+    ``vectors``) holds the prior members' vectors for the repair; a
+    vector in both frames has the same embedding in each.
+
+    Returns DataFrames but for ``unassigned``: an Observation of the
+    unassign rows' count (``.get["rows"]``), filled by the first action
+    on ``memberships``."""
+    from ..operators import cluster_kernel as ck
+
+    if min(assign_threshold, merge_threshold) < 0:
+        raise ValueError("cluster thresholds must be >= 0 (cosine similarity)")
+    maintain = clusters is None or memberships is not None
+    vectors = vectors.select(F.col("vec_id").cast("bigint"),
+                             F.col("embedding").cast("array<double>"))
+    parts = []
     if clusters is None:
-        clusters = fsutil.local_frame(
-            spark, [], "cluster_id string, centroid array<double>, member_count bigint"
-        )
-        assignments = fsutil.local_frame(
+        fresh = fsutil.local_frame(
             spark, [], "vec_id bigint, cluster_id string, cosine double")
+        pending = vectors
     else:
-        assignments = clustering.assign_to_clusters(
+        # read by the centroid sums, the pending set, the held counts
+        # and the memberships: materialized once
+        fresh = clustering.assign_to_clusters(
             vectors, clusters, assign_threshold).localCheckpoint()
-        clusters = clustering.update_centroids(clusters, vectors, assignments)
+        pending = vectors.join(fresh.select("vec_id"), "vec_id", "left_anti")
+        parts.append(_kernel_rows(clusters, "cluster", cluster_id=F.col("cluster_id"),
+                                  vec=F.col("centroid"), n=F.col("member_count")))
+    capped = pending.orderBy(F.desc("vec_id")).limit(clustering.MAX_PENDING_PAIRING)
+    parts.append(_kernel_rows(capped, "pending", vec_id=F.col("vec_id"),
+                              vec=F.col("embedding")))
+    fresh_rows = fresh.select("vec_id", "cluster_id")
+    # one aggregate: the centroid sums per (cluster, position), and the
+    # held membership rows (position NULL) per cluster and, for the
+    # capped pending vectors, whose rows a pair replaces, per vector
+    counted = []
+    if clusters is not None:
+        counted.append(clustering.assigned_elements(vectors, fresh).withColumn(
+            "vec_id", F.lit(None).cast("bigint")))
+    if memberships is not None:
+        prior = memberships.select("vec_id", "cluster_id")
+        # a fresh assignment replaces a vector's prior rows
+        held = fresh_rows.unionByName(
+            prior.join(fresh_rows.select("vec_id"), "vec_id", "left_anti"))
+        held = held.join(F.broadcast(capped.select(
+            "vec_id", F.lit(True).alias("_capped"))), "vec_id", "left")
+        counted.append(held.select(
+            "cluster_id", F.lit(None).cast("int").alias("pos"),
+            F.lit(None).cast("double").alias("val"),
+            F.when(F.col("_capped"), F.col("vec_id")).alias("vec_id")))
+        if clusters is not None:
+            # the kernel adds the pending members no pair takes (the
+            # same broadcast as above, where an anti-join would be another)
+            parts.append(_kernel_rows(
+                _broken_member_sums(clusters, held.where(F.col("_capped").isNull()),
+                                    vectors if member_vectors is None else member_vectors),
+                "repair", cluster_id=F.col("cluster_id"), pos=F.col("pos"),
+                x=F.col("s"), n=F.col("c")))
+    if counted:
+        parts.append(_kernel_rows(
+            clustering.update_sums(functools.reduce(DataFrame.unionByName, counted),
+                                   "vec_id"),
+            "sum", cluster_id=F.col("cluster_id"), vec_id=F.col("vec_id"),
+            pos=F.col("pos"), x=F.col("s"), n=F.col("k")))
 
-    pending = vectors.join(assignments.select("vec_id"), "vec_id", "left_anti")
-    new_clusters = clustering.new_clusters_from_pairs(
-        pending, assign_threshold).localCheckpoint()
-    pair_assignments = new_clusters.selectExpr(
-        "member_a as vec_id", "cluster_id", "cast(1.0 as double) as cosine"
-    ).union(
-        new_clusters.selectExpr("member_b as vec_id", "cluster_id", "cast(1.0 as double) as cosine")
-    )
-    all_clusters = clusters.unionByName(
-        new_clusters.select("cluster_id", "centroid", F.col("member_count").cast("bigint"))
-    )
-    all_assignments = assignments.unionByName(pair_assignments)
+    def body(batches):
+        return ck.stage_batches(batches, assign_threshold, merge_threshold,
+                                clustering.MAX_MERGE_PASSES, maintain)
 
-    merged, mapping = clustering.merge_clusters_fixpoint(
-        all_clusters, merge_threshold, return_mapping=True
-    )
-    # re-point members of absorbed clusters at their survivor — without
-    # this, assignments recorded under an absorbed id reference a
-    # cluster that no longer exists (and any later recount undercounts
-    # the survivor). mapping is cluster-sized (and materialized by the
-    # fixpoint) -> broadcast join.
-    all_assignments = (
-        all_assignments.join(
-            F.broadcast(mapping.withColumnRenamed("old_cluster_id", "cluster_id")),
-            "cluster_id", "left",
-        )
-        .select(
-            "vec_id",
+    state = functools.reduce(DataFrame.unionByName, parts).coalesce(1).mapInArrow(
+        body, ck.STAGE_SCHEMA).localCheckpoint()
+
+    redirect = F.broadcast(state.where(F.col("kind") == "redirect").select(
+        F.col("cluster_id").alias("_key"), "new_cluster_id",
+        F.col("unassigned").alias("_gone")))
+    pairs = state.where(F.col("kind") == "member")
+
+    def repoint(df: DataFrame) -> DataFrame:
+        return df.join(redirect, df["cluster_id"].eqNullSafe(F.col("_key")), "left").select(
+            *[c for c in df.columns if c != "cluster_id"],
             F.coalesce("new_cluster_id", "cluster_id").alias("cluster_id"),
-            "cosine",
-        )
-    )
-    # drop degenerate (<2 member) clusters; the full recount against the
-    # complete membership table (recount_members) is a separate
-    # maintenance job in the reference too (cluster count fixer) —
-    # this batch only sees its own assignments.
-    final = merged.where(F.col("member_count") >= 2)
-    still_pending = vectors.join(all_assignments.select("vec_id"), "vec_id", "left_anti")
-    # merge_mapping is part of the contract: an incremental caller holds
-    # membership rows from PRIOR runs, and if this run's fixpoint
-    # absorbed one of those clusters the caller must re-point them too
-    # (jobs/run_clustering.py) — otherwise a later recount undercounts
-    # the survivor and can wrongly drop it.
+            F.coalesce("_gone", F.lit(False)).alias("unassigned"))
+
+    members = pairs.select("vec_id", "cluster_id", "unassigned")
+    assignments = pairs.select("vec_id", "cluster_id", F.lit(1.0).alias("cosine"))
+    if clusters is not None:
+        assignments = repoint(fresh).select(
+            "vec_id", "cluster_id", "cosine").unionByName(assignments)
+    if memberships is not None:
+        # this run's assignments (fresh and pairs) replace prior rows
+        won = fresh_rows.select("vec_id").unionByName(pairs.select("vec_id"))
+        members = members.unionByName(repoint(fresh_rows.unionByName(
+            prior.join(F.broadcast(won), "vec_id", "left_anti"))))
+    elif clusters is not None:
+        members = members.unionByName(repoint(fresh_rows))
+    unassigned = Observation("cluster_unassigned")
     return {
-        "clusters": final,
-        "assignments": all_assignments,
-        "pending": still_pending,
-        "merge_mapping": mapping,
+        # a recount is never NULL (the Catalyst recount's column is NOT NULL)
+        "clusters": state.where(F.col("kind") == "cluster").select(
+            "cluster_id", "centroid",
+            F.coalesce("member_count", F.lit(0)).alias("member_count") if maintain
+            else "member_count", *(["repaired"] if maintain else [])),
+        "memberships": members.observe(
+            unassigned, F.count(F.when(F.col("unassigned"), 1)).alias("rows"))
+        .where(~F.col("unassigned")).select("vec_id", "cluster_id"),
+        "unassign": members.where(F.col("unassigned")).select(
+            "vec_id", F.col("cluster_id").alias("old_cluster_id")),
+        "unassigned": unassigned,
+        "assignments": assignments,
+        "pending": vectors.join(assignments.select("vec_id"), "vec_id", "left_anti"),
+        "merge_mapping": state.where(
+            (F.col("kind") == "redirect") & (F.col("new_cluster_id") != F.col("cluster_id"))
+        ).select(F.col("cluster_id").alias("old_cluster_id"), "new_cluster_id"),
     }
+
+
+def _kernel_rows(df: DataFrame, kind: str, **cols) -> DataFrame:
+    """``df`` as kernel input rows of ``kind`` (cluster_kernel.STAGE_INPUT)."""
+    from ..operators import cluster_kernel as ck
+
+    return df.select(F.lit(kind).alias("kind"), *[
+        cols.get(name, F.lit(None)).cast(dtype).alias(name)
+        for name, dtype in ck.STAGE_INPUT[1:]])
+
+
+def _broken_member_sums(clusters: DataFrame, members: DataFrame,
+                        vectors: DataFrame) -> DataFrame:
+    """(cluster_id, pos, s, c): per position, the sum and the non-NULL
+    count of the member vectors of each cluster whose centroid is
+    broken — the aggregate :func:`clustering.repair_zero_centroids`
+    averages. The broken set is cluster-table-sized and broadcast; when
+    it is empty, adaptive execution drops this branch before any member
+    or vector is read."""
+    broken = clusters.where(
+        F.col("centroid").isNull() | ~F.exists("centroid", lambda x: x != 0.0)
+    ).select("cluster_id")
+    vecs = members.join(F.broadcast(broken), "cluster_id").join(
+        vectors.select("vec_id", F.col("embedding").cast("array<double>").alias("v")),
+        "vec_id")
+    return (vecs.select("cluster_id", F.posexplode("v").alias("pos", "val"))
+            .groupBy("cluster_id", "pos")
+            .agg(F.sum("val").alias("s"), F.count("val").alias("c")))
 
 
 def reconcile_memberships(
     fresh: DataFrame, prior: DataFrame, merge_mapping: DataFrame
 ) -> DataFrame:
-    """Build the COMPLETE membership table an incremental run must feed
-    into maintenance: prior rows are (1) re-pointed through this run's
+    """The COMPLETE membership table an incremental run feeds into
+    maintenance, as Catalyst operators (:func:`run_clustering` does it
+    through its kernel's redirect rows): prior rows are (1) re-pointed through this run's
     merge mapping (their cluster may have been absorbed — without the
     re-point, recount undercounts the survivor and can wrongly drop it
     and unassign its members) and (2) anti-joined against the fresh
@@ -174,7 +290,8 @@ def reconcile_memberships(
 def run_maintenance(
     clusters: DataFrame, memberships: DataFrame, vectors: DataFrame
 ) -> dict[str, DataFrame]:
-    """The reference's scheduled maintenance pass, as one dataflow:
+    """The reference's scheduled maintenance pass, as one Catalyst
+    dataflow (:func:`run_clustering` runs it inside its kernel):
 
       1. count fixer keep side — true recount, drop <2-member clusters
          (sql/recalculate_all_cluster_member_counts.sql:14-85);
@@ -199,12 +316,24 @@ def _state_log(state_dir: str) -> fsutil.VersionLog:
 def read_state(spark: SparkSession, state_dir: str
                ) -> tuple[int, DataFrame | None, DataFrame | None]:
     """(live version, its clusters, its memberships) under
-    ``state_dir``; (-1, None, None) before the first commit."""
-    ver = _state_log(state_dir).latest(spark)
+    ``state_dir``; (-1, None, None) before the first commit. The tables
+    are read with the schemas their marker records, so no Spark job
+    runs; a marker that holds only the version number is read by
+    schema inference."""
+    log = _state_log(state_dir)
+    ver = log.latest(spark)
     if ver is None:
         return -1, None, None
-    return (ver, spark.read.parquet(f"{state_dir}/v{ver}/clusters"),
-            spark.read.parquet(f"{state_dir}/v{ver}/memberships"))
+    text = log.read(spark, ver).strip()
+    schemas = {} if text.isdigit() else json.loads(text)["schemas"]
+
+    def table(name: str) -> DataFrame:
+        reader = spark.read
+        if name in schemas:
+            reader = reader.schema(T.StructType.fromJson(schemas[name]))
+        return reader.parquet(f"{state_dir}/v{ver}/{name}")
+
+    return ver, table("clusters"), table("memberships")
 
 
 def commit_state(spark: SparkSession, state_dir: str, version: int,
@@ -212,20 +341,24 @@ def commit_state(spark: SparkSession, state_dir: str, version: int,
     """Write ``<state_dir>/v<version>/{clusters,memberships}`` in
     full, then publish the marker ``committed-v<version>``
     (``fsutil.VersionLog``), so a kill anywhere leaves the live version
-    whole and both tables consistent. The frames may lazily read the
-    live version's files, which stay untouched. Each write counts its
-    rows (Observation). A version already committed (a concurrent
-    writer won it) raises: the dirs just written are not the committed
-    state.
+    whole and both tables consistent. The marker is JSON holding the
+    version and both tables' schemas, which :func:`read_state` reads
+    them with. The frames may lazily read the live version's files,
+    which stay untouched. Each write counts its rows (Observation). A
+    version already committed (a concurrent writer won it) raises: the
+    dirs just written are not the committed state.
 
     Returns {"state_version": version, "clusters": n, "memberships": n}."""
     out = {"state_version": version}
+    schemas = {}
     for name, df in (("clusters", clusters), ("memberships", memberships)):
         obs = Observation(f"cluster_state_{name}")
         df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
             "overwrite").parquet(f"{state_dir}/v{version}/{name}")
         out[name] = obs.get["rows"]
-    if not _state_log(state_dir).publish(spark, version, str(version)):
+        schemas[name] = df.schema.jsonValue()
+    marker = json.dumps({"version": version, "schemas": schemas})
+    if not _state_log(state_dir).publish(spark, version, marker):
         raise RuntimeError(
             f"cluster-state version {version} was already committed in "
             f"{state_dir}; re-run to retry against the committed state")

@@ -2,9 +2,15 @@
 
 from __future__ import annotations
 
+import os
+import random
+
 import pytest
+from planutil import spark_jobs
 
 from tackle4losscontentextraction_spark.plans import cluster_pipeline
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_cold_start_forms_pair_clusters(spark):
@@ -82,3 +88,290 @@ def test_run_maintenance(spark):
     assert kept["a"].repaired and not kept["c"].repaired
     unassign = [(r.vec_id, r.old_cluster_id) for r in out["unassign"].collect()]
     assert unassign == [(3, "b")]
+
+
+# ---------------------------------------------------------------------------
+# the stage's kernel against the Catalyst operators
+# ---------------------------------------------------------------------------
+
+
+def _catalyst_stage(vectors, clusters, memberships, member_vectors):
+    """The cluster stage as a chain of Catalyst operators: assign,
+    centroid update, pairing, merge fixpoint, re-pointing,
+    reconcile_memberships and run_maintenance (recount_members,
+    unassigned_members, repair_zero_centroids). Returns (clusters,
+    memberships, unassign)."""
+    from pyspark.sql import functions as F
+
+    from tackle4losscontentextraction_spark.operators import clustering
+
+    fresh = clustering.assign_to_clusters(vectors, clusters).localCheckpoint()
+    updated = clustering.update_centroids(clusters, vectors, fresh)
+    pending = vectors.join(fresh.select("vec_id"), "vec_id", "left_anti")
+    pairs = clustering.new_clusters_from_pairs(pending).localCheckpoint()
+    merged, mapping = clustering.merge_clusters_fixpoint(
+        updated.unionByName(pairs.select(
+            "cluster_id", "centroid", F.col("member_count").cast("bigint"))),
+        return_mapping=True)
+    assigned = fresh.select("vec_id", "cluster_id").unionByName(
+        pairs.selectExpr("member_a as vec_id", "cluster_id")).unionByName(
+        pairs.selectExpr("member_b as vec_id", "cluster_id"))
+    assigned = assigned.join(
+        F.broadcast(mapping.withColumnRenamed("old_cluster_id", "cluster_id")),
+        "cluster_id", "left").select(
+        "vec_id", F.coalesce("new_cluster_id", "cluster_id").alias("cluster_id"))
+    members = cluster_pipeline.reconcile_memberships(assigned, memberships, mapping)
+    maint = cluster_pipeline.run_maintenance(
+        merged.where(F.col("member_count") >= 2), members, member_vectors)
+    unassign = maint["unassign"]
+    return (maint["clusters"], members.join(unassign.select("vec_id"), "vec_id", "left_anti"),
+            unassign)
+
+
+def _random_state(rng, overlap: bool):
+    """A cluster table, its memberships, the vectors to cluster and the
+    member vectors: near-duplicate centroids (merges, so absorbed ids),
+    1-member clusters (stored and true counts), orphan and NULL
+    membership keys, and zero, NULL and NULL-element centroids whose
+    members' vectors repair them. With ``overlap`` the vectors to
+    cluster include the members (a fresh or pair assignment replaces
+    their prior rows; a member of the zero centroid leaves it as a new
+    pair, and two members that score NULL against everything stay and
+    repair it); without it they are the unclustered ones, as in the
+    composed job."""
+    dim = 4
+    bases = [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(4)]
+
+    def near(b, eps=0.03):
+        return [x + rng.gauss(0, eps) for x in b]
+
+    clusters = []
+    for i in range(rng.randint(5, 9)):
+        clusters.append((f"c{i}", near(rng.choice(bases), 0.02), rng.randint(1, 4)))
+    clusters += [("zero", [0.0] * dim, 2), ("null", None, 3),
+                 ("nullel", [None, 0.0, 0.0, 0.0], 2), ("empty", [], 2)]
+    ids = [c[0] for c in clusters] + ["orphan"]
+    vid = iter(range(1000, 10**6))
+    members, member_vecs = [], []
+    for cid in ids:
+        for _ in range(rng.choice([0, 1, 1, 2, 3])):
+            v = next(vid)
+            members.append((v, cid))
+            r = rng.random()
+            member_vecs.append((v, None if r < 0.1 else [None] * dim if r < 0.15
+                                else near(rng.choice(bases), 0.3)))
+    members.append((next(vid), None))
+    if overlap:  # two members that leave their clusters as a new pair
+        d = [rng.uniform(-1, 1) for _ in range(dim)]
+        for cid in ("zero", rng.choice(ids)):
+            members.append((next(vid), cid))
+            member_vecs.append((members[-1][0], near(d, 0.01)))
+        for _ in range(2):  # a NULL element: never assigned nor paired
+            members.append((next(vid), "zero"))
+            member_vecs.append((members[-1][0], [rng.uniform(-1, 1), None, 1.0, 0.5]))
+    to_cluster = []
+    for _ in range(rng.randint(6, 14)):  # some assign, some pair up
+        b = near(rng.choice(bases), 0.05)
+        to_cluster.append((next(vid), b))
+        if rng.random() < 0.5:
+            to_cluster.append((next(vid), near(b, 0.01)))
+    to_cluster.append((next(vid), [rng.uniform(-1, 1) for _ in range(dim)]))
+    if overlap:
+        to_cluster += [(v, e) for v, e in member_vecs if e is not None]
+        member_vecs = to_cluster
+    else:
+        member_vecs = member_vecs + to_cluster
+    return clusters, members, to_cluster, member_vecs
+
+
+def _sorted(rows):
+    return sorted(rows, key=lambda r: tuple((x is None, str(x)) for x in r))
+
+
+def test_stage_equals_catalyst_operators_property(spark, tmp_path):
+    """run_clustering's one kernel pass (centroid update, pairing,
+    merge, recount, unassign, repair) gives the rows of the Catalyst
+    operator chain on random states: ids, counts, flags and
+    memberships exactly, centroids bit for bit but a repaired mean's.
+    A sum of three or more doubles depends on the order Spark adds them
+    in, which follows the plan: the inputs are parquet tables, as in
+    the jobs, so the centroid sums take the Catalyst chain's plan; the
+    repair sums cannot (the chain aggregates its own reconciled
+    memberships), so a repaired mean is held to 1e-12."""
+    vec_ddl = "vec_id bigint, embedding array<double>"
+    seen = {"absorbed": 0, "repaired": 0, "unassigned": 0, "dropped": 0,
+            "paired_member": 0, "repaired_after_pairing": 0}
+
+    def table(rows, ddl, name):
+        spark.createDataFrame(rows, ddl).write.parquet(str(tmp_path / name))
+        return spark.read.parquet(str(tmp_path / name))
+
+    for seed in range(4):
+        rng = random.Random(seed)
+        overlap = seed == 2
+        clusters, members, to_cluster, member_vecs = _random_state(rng, overlap)
+        cl = table(clusters, "cluster_id string, centroid array<double>, member_count bigint",
+                   f"clusters{seed}")
+        mem = table(members, "vec_id bigint, cluster_id string", f"members{seed}")
+        vecs = table(to_cluster, vec_ddl, f"vectors{seed}")
+        mvecs = table(member_vecs, vec_ddl, f"member_vectors{seed}")
+
+        got = cluster_pipeline.run_clustering(spark, vecs, cl, mem, member_vectors=mvecs)
+        want_c, want_m, want_u = _catalyst_stage(vecs, cl, mem, mvecs)
+
+        def cluster_rows(df):
+            return _sorted((r.cluster_id, _hex(r.centroid), r.member_count, r.repaired)
+                           for r in df.collect())
+
+        got_c, want_rows = cluster_rows(got["clusters"]), cluster_rows(want_c)
+        assert [r[:1] + r[2:] for r in got_c] == [r[:1] + r[2:] for r in want_rows], seed
+        for g, w in zip(got_c, want_rows):
+            if g[3]:  # a repaired mean: its member sums follow another plan
+                assert _close(g[1], w[1]), (seed, g, w)
+            else:
+                assert g[1] == w[1], (seed, g, w)
+        got_m = _sorted(tuple(r) for r in got["memberships"].collect())
+        assert got_m == _sorted(tuple(r) for r in want_m.collect()), seed
+        unassign = _sorted(tuple(r) for r in got["unassign"].collect())
+        assert unassign == _sorted(tuple(r) for r in want_u.collect()), seed
+        assert got["unassigned"].get["rows"] == len(unassign), seed
+        seen["absorbed"] += got["merge_mapping"].count()
+        seen["repaired"] += sum(r.repaired for r in got["clusters"].collect())
+        seen["unassigned"] += len(unassign)
+        seen["dropped"] += len(clusters) - got["clusters"].count()
+        # a member that became pending and paired: its pair row replaces it
+        held = dict(members)
+        paired = {r.vec_id for r in got["assignments"].collect() if r.cosine == 1.0}
+        seen["paired_member"] += len(paired & held.keys())
+        # a repaired cluster one of whose members left it as a pair
+        seen["repaired_after_pairing"] += sum(
+            r.repaired and any(held.get(v) == r.cluster_id for v in paired)
+            for r in got["clusters"].collect())
+    # the random states do reach every branch
+    assert all(seen.values()), seen
+
+
+def _close(a, b):
+    """Element-wise equal to 1e-12, NULLs in the same places."""
+    import math
+
+    return len(a) == len(b) and all(
+        (x is None) == (y is None) and (x is None or math.isclose(
+            float.fromhex(x), float.fromhex(y), rel_tol=1e-12, abs_tol=1e-300))
+        for x, y in zip(a, b))
+
+
+def _hex(v):
+    return None if v is None else [None if x is None else float(x).hex() for x in v]
+
+
+def test_stage_thresholds_must_be_cosines(spark):
+    vecs = spark.createDataFrame([(1, [1.0])], "vec_id bigint, embedding array<double>")
+    with pytest.raises(ValueError):
+        cluster_pipeline.run_clustering(spark, vecs, assign_threshold=-0.5)
+
+
+# ---------------------------------------------------------------------------
+# Spark jobs of the composed job's cluster stage
+# ---------------------------------------------------------------------------
+
+
+def _run_pipeline(monkeypatch, argv: list[str]) -> dict:
+    import contextlib
+    import io
+    import json
+    import runpy
+    import sys
+
+    from pyspark.sql import SparkSession
+
+    out = io.StringIO()
+    with monkeypatch.context() as m:
+        m.setattr(SparkSession, "stop", lambda self: None)
+        m.setattr(sys, "argv", ["run_pipeline.py", *argv])
+        with contextlib.redirect_stdout(out), pytest.raises(SystemExit) as done:
+            runpy.run_path(os.path.join(REPO, "jobs", "run_pipeline.py"), run_name="__main__")
+    assert done.value.code == 0
+    return json.loads([ln for ln in out.getvalue().splitlines() if ln.startswith("{")][-1])
+
+
+def _cluster_stage_jobs(spark, monkeypatch, argv: list[str]) -> tuple[dict, int]:
+    """(the job's JSON, the Spark jobs it ran after its vector MERGE —
+    the cluster stage, as perfbench's trace cuts it)."""
+    from tackle4losscontentextraction_spark.operators import merge
+
+    sc = spark.sparkContext
+    before: list[int] = []
+    real = merge.merge_write
+
+    def merge_write(*a, **k):
+        out = real(*a, **k)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        before[:] = sc.statusTracker().getJobIdsForGroup(
+            sc.getLocalProperty("spark.jobGroup.id"))
+        return out
+
+    with monkeypatch.context() as m:
+        m.setattr(merge, "merge_write", merge_write)
+        res, jobs = spark_jobs(spark, lambda: _run_pipeline(monkeypatch, argv))
+    return res, len(set(jobs) - set(before))
+
+
+def test_cluster_stage_spark_jobs(spark, tmp_path, monkeypatch):
+    """The cluster stage of the perfbench upsert_cluster job (corpus
+    seed 21): from scratch it runs the kernel's materialization and the
+    two state writes; over the committed state it runs no more jobs
+    than the stage from scratch did before it became one kernel pass
+    (17). Either way every output count is consistent."""
+    import shutil
+    import sys
+
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    import corpus
+
+    prior, batch = corpus.incremental(21, 40, 40, 20)
+    corpus.write_input(corpus.span_docs(prior), str(tmp_path / "prior_in"), False)
+    corpus.write_input(corpus.span_docs(batch), str(tmp_path / "in"), False)
+    wd = str(tmp_path / "wd")
+    _run_pipeline(monkeypatch, ["--input", str(tmp_path / "prior_in"), "--workdir", wd,
+                                "--spans", "--cluster"])
+    for d in ("cluster_state", "lineage", "extracted"):
+        shutil.rmtree(os.path.join(wd, d))
+    argv = ["--input", str(tmp_path / "in"), "--workdir", wd, "--spans", "--cluster"]
+
+    scratch, n_scratch = _cluster_stage_jobs(spark, monkeypatch, argv)
+    again, n_again = _cluster_stage_jobs(spark, monkeypatch, argv)
+    spark.sparkContext.setLogLevel("ERROR")
+    assert scratch["clustering"]["state_version"] == 0
+    assert again["clustering"]["state_version"] == 1
+    assert scratch["clustering"]["clusters"] > 0
+    assert n_scratch <= 4, n_scratch
+    assert n_again <= 17, n_again
+
+
+def test_read_state_reads_with_the_marker_schemas(spark, tmp_path):
+    """commit_state records both tables' schemas in its marker, so
+    read_state starts no Spark job; a marker holding only the version
+    number is still read, by schema inference."""
+    from tackle4losscontentextraction_spark import fsutil
+
+    state = str(tmp_path / "state")
+    clusters = spark.createDataFrame(
+        [("a", [1.0, None], 2, False)],
+        "cluster_id string, centroid array<double>, member_count bigint not null, "
+        "repaired boolean")
+    members = spark.createDataFrame([(1, "a"), (2, "a")], "vec_id bigint, cluster_id string")
+    cluster_pipeline.commit_state(spark, state, 0, clusters, members)
+
+    (ver, c, m), jobs = spark_jobs(spark, lambda: cluster_pipeline.read_state(spark, state))
+    assert ver == 0 and jobs == []
+    for got, name in ((c, "clusters"), (m, "memberships")):
+        inferred = spark.read.parquet(f"{state}/v0/{name}")
+        assert got.schema == inferred.schema, name
+        assert sorted(got.collect()) == sorted(inferred.collect()), name
+
+    fsutil.write_text(spark, f"{state}/committed-v0", "0")
+    (ver, c, m), jobs = spark_jobs(spark, lambda: cluster_pipeline.read_state(spark, state))
+    assert ver == 0 and jobs
+    assert c.schema == spark.read.parquet(f"{state}/v0/clusters").schema
+    assert sorted(m.collect()) == sorted(members.collect())

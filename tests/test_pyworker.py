@@ -33,12 +33,19 @@ def test_drop_spark_zip_importers_inside_a_task(spark):
 
     def first_task(batches):
         import importlib
+        import os
         import sys
         import zipimport
         from importlib.machinery import FileFinder
 
         for _ in batches:
             pass
+        # a reused worker may have had its importers dropped by an
+        # earlier kernel: put one back for every Spark archive on the
+        # path (from the cached archive directory), as a fresh worker has
+        for entry in sys.path:
+            if pyworker.is_spark_archive(entry) and os.path.isfile(entry):
+                sys.path_importer_cache[entry] = zipimport.zipimporter(entry)
         spark_zip = [f for f in finders(zipimport.zipimporter).values()
                      if pyworker.is_spark_archive(f.archive)]
         file_finders = set(finders(FileFinder))

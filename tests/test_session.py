@@ -42,11 +42,14 @@ for i in range(2):
         assert e.code in (0, None), e.code
     added.append(compiled() - before)
 print("COMPILED " + json.dumps(added))
+print("CACHE " + SparkSession.getActiveSession().conf.get(
+    "spark.sql.codegen.cache.maxEntries"))
 """
 
 
 @pytest.mark.skipif(not os.path.isdir(SF), reason="driver testdata absent")
 def test_repeated_pipeline_job_compiles_nothing(tmp_path, spark):
+    from tackle4losscontentextraction_spark import session
     from tackle4losscontentextraction_spark.sources import synth
 
     spans_in = str(tmp_path / "spans_in")
@@ -62,11 +65,17 @@ def test_repeated_pipeline_job_compiles_nothing(tmp_path, spark):
     assert proc.returncode == 0, proc.stderr[-3000:]
     (line,) = [l for l in proc.stdout.splitlines() if l.startswith("COMPILED ")]
     first, second = json.loads(line[len("COMPILED "):])
-    # the first run compiles its working set (~140 sources); with the
-    # default 100-entry cache the second recompiled nearly all of it
-    # (~136). What a warm cache still compiles are plan variants: AQE
-    # re-plans as stages finish, so a different finishing order can
-    # number whole-stage codegen stages differently or propagate an
-    # empty relation (0-6 new sources a run on 2-4 cores)
-    assert first > 100
+    (line,) = [l for l in proc.stdout.splitlines() if l.startswith("CACHE ")]
+    cache = int(line[len("CACHE "):])
+    # the first run compiles its working set (~70 sources on 2 cores);
+    # the job's session sizes the cache to hold it. A counter that read
+    # 0 would pass the last check vacuously: each of the job's five
+    # stages (extraction write, metrics, document MERGE, vector MERGE,
+    # clustering) compiles at least one source. What a warm cache still
+    # compiles are plan variants: AQE re-plans as stages finish, so a
+    # different finishing order can number whole-stage codegen stages
+    # differently or propagate an empty relation (0-6 new sources a run
+    # on 2-4 cores)
+    assert cache == session.CODEGEN_CACHE_MAX_ENTRIES
+    assert 5 <= first <= cache
     assert second <= first // 10
