@@ -16,8 +16,12 @@ Writes ``<out>/clusters``, ``<out>/assignments``, ``<out>/pending``,
 ``<out>/unassign`` and prints a one-line JSON summary. Rerunning with
 ``--clusters <out>/clusters --memberships <accumulated assignments>``
 continues from the previous state — the reference's nightly
-incremental mode. (The maintenance pass needs the complete membership
-table; incremental runs without ``--memberships`` skip it.)
+incremental mode. As in the reference (S4, ``cluster_id IS NULL``),
+such a run clusters only the ``--vectors`` rows with no membership
+row: a member keeps its cluster and is not scored again, and
+``pending`` holds only unclustered vectors that got no assignment.
+(The maintenance pass needs the complete membership table; incremental
+runs without ``--memberships`` skip it and score every vector.)
 """
 
 from __future__ import annotations
@@ -37,6 +41,7 @@ def main() -> int:
     ap.add_argument("--clusters", default=None, help="prior clusters parquet (incremental mode)")
     ap.add_argument("--memberships", default=None,
                     help="prior assignments parquet (vec_id, cluster_id); "
+                         "only vectors without a row here are clustered. "
                          "REQUIRED with --clusters for the maintenance pass — "
                          "recount/unassign need the COMPLETE membership table, "
                          "not just this batch's assignments")

@@ -181,18 +181,13 @@ def main() -> int:
             F.xxhash64("doc_id").alias("vec_id"),
             F.col("embedding").cast("array<double>").alias("embedding"),
         )
-        # S4 semantics (fetch_unclustered_articles): an incremental
-        # run clusters only vectors without a membership — already-
-        # assigned vectors keep their cluster; prior pendings get
-        # re-tried against the clusters later runs created
+        # the stage clusters only the vectors without a membership
+        # (S4) — prior pendings get re-tried against the clusters later
+        # runs created — and recounts, unassigns and repairs against the
+        # complete membership table: the prior one plus this run's
         state_dir = f"{wd}/cluster_state"
         cur_ver, prior, prior_members = cluster_pipeline.read_state(spark, state_dir)
-        unclustered = vecs if prior is None else vecs.join(
-            prior_members.select("vec_id"), "vec_id", "left_anti")
-        # the stage recounts, unassigns and repairs against the
-        # complete membership table: the prior one plus this run's
-        cres = cluster_pipeline.run_clustering(
-            spark, unclustered, prior, prior_members, member_vectors=vecs)
+        cres = cluster_pipeline.run_clustering(spark, vecs, prior, prior_members)
         out["clustering"] = {
             **cluster_pipeline.commit_state(
                 spark, state_dir, cur_ver + 1, cres["clusters"], cres["memberships"]),

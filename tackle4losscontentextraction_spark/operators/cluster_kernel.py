@@ -1,16 +1,18 @@
-"""numpy kernels for the clustering stage's bounded steps: the
-pending x pending pairing, the cluster x cluster merge fixpoint, and
-the cluster stage's single pass (:func:`cluster_stage`: centroid
-update, pairing, merge, recount, unassign and zero-centroid repair).
+"""numpy kernels for the cluster stage's bounded steps: the pending x
+pending pairing (:func:`pair_pending`), the cluster x cluster merge
+fixpoint (:func:`merge_fixpoint`), and the stage's single pass that
+runs them (:func:`cluster_stage`: centroid update, pairing, merge,
+recount, unassign and zero-centroid repair).
 
-Each runs over a bounded working set (pairing is capped at
-``MAX_PENDING_PAIRING`` rows; the merge input is the cluster table;
-the stage adds the per-cluster counts and per-position sums Spark
-aggregates), so its caller hands it the whole input as ONE Arrow
-batch stream in one ``mapInArrow`` task and gets the result back in
-one pass — no per-pass Spark jobs, no plan that grows with the pass
-count. The stage's input and output are each one frame whose ``kind``
-column tells its row kinds apart (:func:`stage_batches`).
+The stage runs over a bounded working set: the pending vectors capped
+at ``MAX_PENDING_PAIRING`` rows, the cluster table, and the
+per-cluster counts and per-position sums Spark aggregates. Its caller
+(``plans/cluster_pipeline.run_clustering``, the only Spark entry to
+these kernels) hands it the whole input as ONE Arrow batch stream in
+one ``mapInArrow`` task and gets the result back in one pass — no
+per-pass Spark jobs, no plan that grows with the pass count. The
+input and output are each one frame whose ``kind`` column tells its
+row kinds apart (:func:`stage_batches`).
 
 The arithmetic is the Catalyst expressions' (functions/vectors.py),
 operation for operation, so results are bit-identical to them:
@@ -31,11 +33,10 @@ with NaN marking NULL elements; inputs are otherwise assumed finite.
 Memory: similarities are computed ``BLOCK_ROWS`` rows at a time against
 the whole set, so the working memory is O(BLOCK_ROWS x n) doubles plus
 the O(n x dim) vectors themselves — never the n x n matrix. The stage
-holds in addition one count per membership key, the membership rows of
-the capped pending vectors and, for the clusters being repaired, one
-sum and count per position; never another membership row or a vector
-outside the capped pending set. Time is O(n^2 x dim)
-per pairing or merge pass, on one core: the pair count the cross join
+holds in addition one count per membership key and, for the clusters
+being repaired, one sum and count per position; never a membership row
+or a vector outside the capped pending set. Time is O(n^2 x dim) per
+pairing or merge pass, on one core: the pair count the cross join
 scored, without its per-pass planning and jobs.
 """
 
@@ -51,16 +52,6 @@ from ..functions.ids import deterministic_uuid_py
 
 BLOCK_ROWS = 256
 
-PAIR_SCHEMA = (
-    "cluster_id string, centroid array<double>, member_count int, "
-    "member_a bigint, member_b bigint"
-)
-# one row per input cluster: survivors carry their merged state and a
-# NULL new_cluster_id; absorbed ids carry only their final survivor
-MERGE_SCHEMA = (
-    "cluster_id string, centroid array<double>, member_count bigint, "
-    "new_cluster_id string"
-)
 # the cluster stage's kernel (stage_batches): input rows of several
 # kinds in one frame, and output rows of several kinds
 STAGE_INPUT = (("kind", "string"), ("cluster_id", "string"), ("vec_id", "bigint"),
@@ -248,7 +239,7 @@ def is_broken(v) -> bool:
 
 def cluster_stage(clusters: tuple[list, list, list], sums: dict,
                   pending: tuple[list, list], counts: dict | None,
-                  prior_of: dict, repair: dict, assign_threshold: float,
+                  repair: dict, assign_threshold: float,
                   merge_threshold: float, max_passes: int):
     """The cluster stage's whole bounded step: the centroid update, the
     pending pairing, the merge fixpoint over the cluster table plus the
@@ -259,16 +250,14 @@ def cluster_stage(clusters: tuple[list, list, list], sums: dict,
     - ``sums``: cluster id -> (per-position sums, assigned vector count)
       of this batch's fresh assignments (``clustering.update_sums``),
       folded in as ``update_centroids`` does;
-    - ``pending``: (vec ids, vectors), the capped pending set;
-    - ``counts``: membership rows per cluster id held before the
-      pairing (prior rows a fresh assignment did not replace, plus the
-      fresh assignments); None skips maintenance;
-    - ``prior_of``: vec id -> the cluster ids of its held membership
-      rows, for the pending vectors that have any (a pair replaces them);
+    - ``pending``: (vec ids, vectors), the capped pending set, none of
+      which holds a membership row;
+    - ``counts``: membership rows per cluster id before the pairing
+      (the prior rows plus the fresh assignments); None skips
+      maintenance;
     - ``repair``: cluster id -> (per-position sums, per-position
-      non-NULL counts) of its held members' vectors outside the pending
-      set, for the clusters whose input centroid is broken; the pending
-      members that stay unpaired are added here.
+      non-NULL counts) of its members' vectors, for the clusters whose
+      input centroid is broken.
 
     Returns (clusters, members, redirect): the live clusters as (id,
     centroid, member count, repaired; None without maintenance); the
@@ -279,8 +268,7 @@ def cluster_stage(clusters: tuple[list, list, list], sums: dict,
     fewer than 2 rows loses them, a cluster with fewer than 2 is gone.
     Repair is exact when the thresholds are >= 0: a broken centroid
     then scores 0.0 or NULL against everything, so it takes no fresh
-    member and no merge, and its members are the held ones that no
-    pair took."""
+    member and no merge, and its members are its prior ones."""
     c_ids, c_vecs, c_ns = clusters
     c_vecs = [running_mean(v, sums[i][0], n, sums[i][1]) if i in sums else v
               for i, v, n in zip(c_ids, c_vecs, c_ns)]
@@ -297,23 +285,12 @@ def cluster_stage(clusters: tuple[list, list, list], sums: dict,
                 [(m, cid, False) for m, cid in members],
                 {k: (t, False) for k, t in mapping.items()})
     held = dict(counts)
-    for cid, _, a, b in pairs:
-        for m in (a, b):
-            for k in prior_of.get(m, ()):
-                held[k] -= 1
+    for cid, _, _, _ in pairs:
         held[cid] = held.get(cid, 0) + 2
-    paired = {m for _, _, a, b in pairs for m in (a, b)}
-    broken = {i for i, v in zip(c_ids, clusters[1]) if is_broken(v)}
-    repair = dict(repair)
-    for m, v in zip(p_ids, p_vecs):
-        for k in () if m in paired or v is None or not len(v) else prior_of.get(m, ()):
-            if k in broken:
-                repair[k] = _add_member(repair.get(k), v)
     final: dict = {}
     for k, n in held.items():
-        if n:
-            t = mapping.get(k, k)
-            final[t] = final.get(t, 0) + n
+        t = mapping.get(k, k)
+        final[t] = final.get(t, 0) + n
     gone = {k for k, n in final.items() if n < 2}
     out = []
     for i, v, _ in live:
@@ -332,21 +309,6 @@ def cluster_stage(clusters: tuple[list, list, list], sums: dict,
         if t != k or t in gone:
             redirect[k] = (t, t in gone)
     return out, [(m, cid, cid in gone) for m, cid in members], redirect
-
-
-def _add_member(acc, v):
-    """Per-position (sums, non-NULL counts) ``acc`` (None: no rows yet)
-    with the vector ``v`` added, as the SQL ``sum`` / ``count`` over
-    its posexploded elements would: a NULL element adds a position but
-    no value, and a sum with no value yet is NULL (NaN)."""
-    size = max(len(v), 0 if acc is None else len(acc[0]))
-    xs, ns = np.full(size, np.nan), np.zeros(size, dtype=np.int64)
-    if acc is not None:
-        xs[:len(acc[0])], ns[:len(acc[1])] = acc
-    ok = ~np.isnan(v)
-    xs[:len(v)][ok] = np.where(ns[:len(v)][ok] > 0, xs[:len(v)][ok], 0.0) + v[ok]
-    ns[:len(v)][ok] += 1
-    return xs, ns
 
 
 # ---- Arrow boundary -------------------------------------------------------
@@ -376,49 +338,6 @@ def _table(batches: Iterator[pa.RecordBatch]) -> pa.Table | None:
     return pa.Table.from_batches(batches) if batches else None
 
 
-def pair_batches(batches: Iterator[pa.RecordBatch], threshold: float
-                 ) -> Iterator[pa.RecordBatch]:
-    """mapInArrow body: (vec_id, embedding) -> PAIR_SCHEMA rows."""
-    pyworker.drop_spark_zip_importers()
-    t = _table(batches)
-    if t is None:
-        return
-    ids = t.column(0).to_pylist()
-    rows = pair_pending(ids, _read_vectors(t.column(1)), threshold)
-    if not rows:
-        return
-    cid, cen, a, b = zip(*rows)
-    yield pa.RecordBatch.from_arrays(
-        [pa.array(cid, pa.string()), _vector_array(list(cen)),
-         pa.array([2] * len(rows), pa.int32()),
-         pa.array(a, pa.int64()), pa.array(b, pa.int64())],
-        names=["cluster_id", "centroid", "member_count", "member_a", "member_b"],
-    )
-
-
-def merge_batches(batches: Iterator[pa.RecordBatch], threshold: float,
-                  max_passes: int) -> Iterator[pa.RecordBatch]:
-    """mapInArrow body: (cluster_id, centroid, member_count) ->
-    MERGE_SCHEMA rows (survivors, then absorbed ids)."""
-    pyworker.drop_spark_zip_importers()
-    t = _table(batches)
-    if t is None:
-        return
-    if t.column(2).null_count:
-        raise ValueError("merge_clusters_fixpoint: member_count must not be NULL")
-    ids, vecs, counts, mapping = merge_fixpoint(
-        t.column(0).to_pylist(), _read_vectors(t.column(1)),
-        t.column(2).to_pylist(), threshold, max_passes)
-    old = list(mapping)
-    none = [None] * len(old)
-    yield pa.RecordBatch.from_arrays(
-        [pa.array(ids + old, pa.string()), _vector_array(vecs + none),
-         pa.array(counts + none, pa.int64()),
-         pa.array([None] * len(ids) + [mapping[o] for o in old], pa.string())],
-        names=["cluster_id", "centroid", "member_count", "new_cluster_id"],
-    )
-
-
 def _by_position(ids: list, pos: list, x: list, n: list) -> dict:
     """Per-position rows (id, pos, x, n) -> {id: (x array, n array)},
     NaN (SQL NULL) for a NULL x."""
@@ -442,9 +361,8 @@ def stage_batches(batches: Iterator[pa.RecordBatch], assign_threshold: float,
     """mapInArrow body of :func:`cluster_stage`: STAGE_INPUT rows, told
     apart by ``kind``, -> STAGE_SCHEMA rows ('cluster', 'member',
     'redirect'). Input kinds: 'cluster' (cluster_id, vec, n); 'sum'
-    (cluster_id, vec_id, pos, x, n): the centroid sums, and with a NULL
-    pos the held membership rows, per cluster and, for a pending vector
-    (vec_id not NULL), per vector; 'repair' (cluster_id, pos, x, n);
+    (cluster_id, pos, x, n): the centroid sums, and with a NULL pos the
+    membership rows per cluster; 'repair' (cluster_id, pos, x, n);
     'pending' (vec_id, vec)."""
     pyworker.drop_spark_zip_importers()
     t = _table(batches)
@@ -463,21 +381,15 @@ def stage_batches(batches: Iterator[pa.RecordBatch], assign_threshold: float,
     c_ids, c_vecs, c_ns = pick("cluster", "cluster_id", "vec", "n")
     if None in c_ns:
         raise ValueError("cluster stage: member_count must not be NULL")
-    s_ids, s_vids, s_pos, s_x, s_n = pick("sum", "cluster_id", "vec_id", "pos", "x", "n")
+    s_ids, s_pos, s_x, s_n = pick("sum", "cluster_id", "pos", "x", "n")
     at = [r for r, p in enumerate(s_pos) if p is not None]
     sums = {i: (x, int(n[0])) for i, (x, n) in _by_position(
         *[[col[r] for r in at] for col in (s_ids, s_pos, s_x, s_n)]).items()}
-    counts: dict = {}
-    prior_of: dict = {}
-    for i, v, p, n in zip(s_ids, s_vids, s_pos, s_n):
-        if p is None:
-            counts[i] = counts.get(i, 0) + n
-            if v is not None:
-                prior_of.setdefault(v, []).extend([i] * n)
+    counts = {i: n for i, p, n in zip(s_ids, s_pos, s_n) if p is None}
     clusters, members, redirect = cluster_stage(
         (c_ids, c_vecs, c_ns), sums, tuple(pick("pending", "vec_id", "vec")),
         counts if maintain else None,
-        prior_of, _by_position(*pick("repair", "cluster_id", "pos", "x", "n")),
+        _by_position(*pick("repair", "cluster_id", "pos", "x", "n")),
         assign_threshold, merge_threshold, max_passes)
     nc, nm, nr = len(clusters), len(members), len(redirect)
     yield pa.RecordBatch.from_arrays([

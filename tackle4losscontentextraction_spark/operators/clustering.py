@@ -3,8 +3,10 @@
 Reference (src/modules/clustering/cluster_articles.py:38-142 +
 cluster_manager.py): greedy sequential assignment of each unclustered
 article to the best cosine-matching cluster (> 0.82), running-mean
-centroid updates, pairwise cluster merging (> 0.9, <= 10 passes),
-member-count recount.
+centroid updates, pairing of the still-pending articles, pairwise
+cluster merging (> 0.9, <= 10 passes), member-count recount. Only
+articles with no cluster yet are clustered (``cluster_id IS NULL``,
+the 1000 most recent; db_access.py:71-115, SURVEY S4).
 
 The reference's assignment is order-dependent (each assignment mutates
 the centroids seen by later articles — SURVEY §3.3). The faithful batch
@@ -17,36 +19,34 @@ rendition here:
   (old*n + sum(assigned)) / (n + k)  — the k-step composition of the
   reference's per-row update (cluster_manager.py:81), exact for the
   same membership set.
-- :func:`new_clusters_from_pairs` — disjoint mutual-best pairing of
-  the pending vectors (capped at MAX_PENDING_PAIRING) into 2-member
-  clusters.
-- :func:`merge_clusters_fixpoint` — repeated mutual-best merging above
-  the merge threshold with the reference's weighted mean
-  (cluster_manager.py:239-241), <= max_passes (:128).
-- :func:`recount_members` — the count fixer
-  (sql/recalculate_all_cluster_member_counts.sql): recount, delete
-  0/1-member clusters, unassign their members.
+- pairing and merging — disjoint mutual-best pairing of the pending
+  vectors (capped at MAX_PENDING_PAIRING) into 2-member clusters, then
+  repeated mutual-best merging above the merge threshold with the
+  reference's weighted mean (cluster_manager.py:239-241), <=
+  MAX_MERGE_PASSES (:128): numpy kernels
+  (:func:`.cluster_kernel.pair_pending`, :func:`.cluster_kernel.merge_fixpoint`).
+- :func:`recount_members` / :func:`unassigned_members` — the count
+  fixer (sql/recalculate_all_cluster_member_counts.sql): recount,
+  delete 0/1-member clusters, unassign their members;
+  :func:`repair_zero_centroids` — the zero-centroid repair.
 
-Scale: assignment and the centroid sums touch every vector, so they
-stay Spark joins and aggregates — centroids are O(clusters) and
-broadcast; vectors never shuffle for scoring. Everything after them
-works on BOUNDED sets (the capped pending set; the cluster table and
-its per-cluster counts and sums), where a cross-join plan costs more
-in query planning and job scheduling than in arithmetic, so it runs
-in numpy (:mod:`.cluster_kernel`) over the whole set in ONE
-mapInArrow task. The cluster stage (plans/cluster_pipeline.py) makes
-the update, pairing, merge, recount, unassign and repair one kernel
-call; :func:`new_clusters_from_pairs` and
-:func:`merge_clusters_fixpoint` run the pairing or the merge alone.
-The kernels compute similarities in row blocks against the whole set,
-so their memory is O(BLOCK_ROWS x set size) plus the set, and they
-reproduce the Catalyst cosine's sequential fold, so results are
-bit-identical to it. :func:`update_centroids`,
+Scale: assignment and the centroid sums touch every vector to cluster,
+so they stay Spark joins and aggregates — centroids are O(clusters)
+and broadcast; vectors never shuffle for scoring. Everything after
+them works on BOUNDED sets (the capped pending set; the cluster table
+and its per-cluster counts and sums), where a cross-join plan costs
+more in query planning and job scheduling than in arithmetic, so it
+runs in numpy (:mod:`.cluster_kernel`) over the whole set in ONE
+mapInArrow task. That task is the cluster stage's
+(plans/cluster_pipeline.run_clustering), the only Spark entry to the
+kernels: the update, pairing, merge, recount, unassign and repair in
+one call. The kernels compute similarities in row blocks against the
+whole set, so their memory is O(BLOCK_ROWS x set size) plus the set,
+and they reproduce the Catalyst cosine's sequential fold, so results
+are bit-identical to it. :func:`update_centroids`,
 :func:`recount_members`, :func:`unassigned_members` and
 :func:`repair_zero_centroids` stay the Catalyst statements of what the
-stage's kernel does (oracle queries use the last three). The kernel
-module (numpy, pyarrow) is imported on the first call that needs it,
-not when this module is."""
+stage's kernel does (oracle queries use the last two)."""
 
 from __future__ import annotations
 
@@ -59,6 +59,7 @@ from ..functions import vectors as vec_fn
 ASSIGN_THRESHOLD = 0.82  # cluster_manager.py:41
 MERGE_THRESHOLD = 0.9    # cluster_pipeline.py:62
 MAX_MERGE_PASSES = 10    # cluster_articles.py:128-130
+MAX_PENDING_PAIRING = 1000  # db_access.py:93-94 (LIMIT 1000 working set)
 
 
 def assign_to_clusters(
@@ -108,13 +109,12 @@ def assigned_elements(
     return joined.select("cluster_id", F.posexplode("v").alias("pos", "val"))
 
 
-def update_sums(elements: DataFrame, *keys: str) -> DataFrame:
-    """(cluster_id, pos, *keys, s, k) from :func:`assigned_elements`
-    rows: per cluster and position (and ``keys``), the sum of the
-    assigned elements and their count — the cluster-table-sized
-    aggregate :func:`update_centroids` (and the cluster stage's kernel)
-    fold into the running mean."""
-    return elements.groupBy("cluster_id", "pos", *keys).agg(
+def update_sums(elements: DataFrame) -> DataFrame:
+    """(cluster_id, pos, s, k) from :func:`assigned_elements` rows: per
+    cluster and position, the sum of the assigned elements and their
+    count — the cluster-table-sized aggregate :func:`update_centroids`
+    (and the cluster stage's kernel) fold into the running mean."""
+    return elements.groupBy("cluster_id", "pos").agg(
         F.sum("val").alias("s"), F.count("*").alias("k"))
 
 
@@ -145,85 +145,6 @@ def update_centroids(
             (F.col("member_count") + F.coalesce(F.col("k"), F.lit(0))).alias("member_count"),
         )
     )
-
-
-MAX_PENDING_PAIRING = 1000  # db_access.py:93-94 (LIMIT 1000 working set)
-
-
-def new_clusters_from_pairs(
-    pending: DataFrame, threshold: float = ASSIGN_THRESHOLD,
-    vec_id: str = "vec_id", vec_col: str = "embedding",
-    max_pending: int = MAX_PENDING_PAIRING,
-) -> DataFrame:
-    """J4 analog: pending vectors pair up into 2-member clusters
-    (centroid = pair mean). The matching is DISJOINT mutual-best: a pair
-    above ``threshold`` is kept iff each member is the other's best
-    partner (ties to the smaller vec id), so each pending vector seeds
-    at most one cluster — the parallel analog of the reference's
-    sequential greedy pairing.
-
-    The pairing is quadratic, so the working set is capped at
-    ``max_pending`` rows exactly as the reference caps its fetch
-    (db_access.py:93-94, LIMIT 1000 most-recent): top-k by descending
-    id (the corpus' recency proxy) via TakeOrderedAndProject — never a
-    global sort. Overflow rows stay pending for the next pipeline run,
-    which is the reference's behavior too. The capped set is paired by
-    :func:`cluster_kernel.pair_pending` in ONE mapInArrow task, in
-    O(BLOCK_ROWS x max_pending) memory.
-
-    Cluster ids are C10's deterministic form of the reference's uuid4
-    (db_access.py:249): a name-based UUID over "vid#vid_b", so a
-    retried/replayed batch mints the SAME cluster id."""
-    from . import cluster_kernel as ck
-
-    if max_pending is not None:
-        pending = pending.orderBy(F.desc(vec_id)).limit(max_pending)
-
-    def pair(batches):
-        return ck.pair_batches(batches, threshold)
-
-    return pending.select(
-        F.col(vec_id).cast("bigint"), F.col(vec_col).cast("array<double>")
-    ).coalesce(1).mapInArrow(pair, ck.PAIR_SCHEMA)
-
-
-def merge_clusters_fixpoint(
-    clusters: DataFrame, threshold: float = MERGE_THRESHOLD, max_passes: int = MAX_MERGE_PASSES,
-    return_mapping: bool = False,
-):
-    """Pairwise cluster merging (weighted mean, cluster_manager.py:
-    239-241), <= max_passes (cluster_articles.py:128): each pass merges
-    the disjoint mutual-best pairs above ``threshold`` (ties to the
-    smaller cluster id) into the smaller id, until a pass merges nothing.
-
-    The whole fixpoint is :func:`cluster_kernel.merge_fixpoint` run ONCE
-    over the cluster table in one mapInArrow task (O(BLOCK_ROWS x
-    clusters) memory), and its output is localCheckpointed: one Spark
-    job however many passes run, and the returned plan is a scan of the
-    materialized state, not a pass-deep join tower.
-
-    With ``return_mapping=True`` also returns (clusters, mapping) where
-    mapping = (old_cluster_id, new_cluster_id) for every ABSORBED id,
-    transitively resolved across passes — the UPDATE set callers apply
-    to their membership table (the reference likewise re-points members
-    when clusters merge); without remapping, members recorded under an
-    absorbed id would reference a nonexistent cluster."""
-    from . import cluster_kernel as ck
-
-    def merge(batches):
-        return ck.merge_batches(batches, threshold, max_passes)
-
-    state = clusters.select(
-        "cluster_id",
-        F.col("centroid").cast("array<double>"),
-        F.col("member_count").cast("bigint"),
-    ).coalesce(1).mapInArrow(merge, ck.MERGE_SCHEMA).localCheckpoint(eager=True)
-    out = state.where(F.col("new_cluster_id").isNull()).drop("new_cluster_id")
-    if return_mapping:
-        mapping = state.where(F.col("new_cluster_id").isNotNull()).select(
-            F.col("cluster_id").alias("old_cluster_id"), "new_cluster_id")
-        return out, mapping
-    return out
 
 
 def recount_members(clusters: DataFrame, memberships: DataFrame) -> DataFrame:

@@ -15,25 +15,28 @@ Stages (reference line refs in operators/clustering.py):
                       their members, zero-centroid repair
 
 :func:`run_clustering` is the stage, for a run from scratch and for a
-run over committed state alike. Spark runs only the passes over
-unbounded sets: scoring the vectors to cluster against the broadcast
-centroids (2); one aggregate of the assigned vectors' sums per
-(cluster, position) and the held memberships per cluster (and per
-vector for the capped pending ones); the member vectors' sums of the
-clusters whose centroid is broken, but for the capped pending members
-(a branch that adaptive execution drops when no centroid is broken);
-and re-pointing and filtering the memberships through the kernel's
+run over committed state alike. Like the reference, it clusters only
+the vectors with no membership row (S4: ``cluster_id IS NULL``,
+db_access.py:71-115); its callers hand it every vector. Spark runs
+only the passes over unbounded sets: the anti-join of the vectors
+against the memberships; scoring the unclustered vectors against the
+broadcast centroids (2); one aggregate of the assigned vectors' sums
+per (cluster, position) and the membership rows per cluster; the
+members' vector sums of the clusters whose centroid is broken (a
+branch that adaptive execution drops when no centroid is broken); and
+re-pointing and filtering the memberships through the kernel's
 redirect rows. Every branch that reads an unbounded table ends in a
 shuffle, so the kernel's one task reads only bounded rows. Everything
 over the bounded working set (the cluster table, the pending set capped
 at MAX_PENDING_PAIRING, the per-cluster counts and sums) is steps 3-6 in
 ONE ``cluster_kernel.stage_batches`` call, in one mapInArrow task,
-materialized once; both state tables are written from it. The kernel's
-memory is the set itself (clusters and pending vectors x dim, the
-counts) plus O(BLOCK_ROWS x set size) for the similarity blocks; it
-never holds the memberships or the vectors to cluster. The
-perfbench upsert_cluster job (corpus seed 21) runs 3 Spark jobs in the
-stage from scratch and 16 over its committed state.
+materialized once — the only Spark entry to the cluster kernels; both
+state tables are written from it. The kernel's memory is the set
+itself (clusters and pending vectors x dim, the counts) plus
+O(BLOCK_ROWS x set size) for the similarity blocks; it never holds the
+memberships or the vectors to cluster. The perfbench upsert_cluster
+job (corpus seed 21) runs 3 Spark jobs in the stage from scratch and
+14 over its committed state.
 
 The reference's greedy per-article order-dependence (SURVEY §3.3) is
 deliberately replaced by frozen-centroid passes — documented batch
@@ -95,38 +98,35 @@ def run_clustering(
     vectors: DataFrame,
     clusters: DataFrame | None = None,
     memberships: DataFrame | None = None,
-    member_vectors: DataFrame | None = None,
     assign_threshold: float = clustering.ASSIGN_THRESHOLD,
     merge_threshold: float = clustering.MERGE_THRESHOLD,
 ) -> dict:
-    """The cluster stage: vectors(vec_id, embedding) to cluster [+ the
-    cluster table(cluster_id, centroid, member_count) and its
-    memberships(vec_id, cluster_id)] -> {clusters, memberships,
-    unassign, unassigned, assignments, pending, merge_mapping}.
+    """The cluster stage: every vector(vec_id, embedding) [+ the cluster
+    table(cluster_id, centroid, member_count) and its memberships(vec_id,
+    cluster_id)] -> {clusters, memberships, unassign, unassigned,
+    assignments, pending, merge_mapping}.
 
-    Spark scores ``vectors`` against the broadcast centroids, sums the
-    assigned vectors per cluster and position
-    (:func:`clustering.update_sums`) in the aggregate that counts the
-    held memberships per cluster (a fresh assignment replaces a
-    vector's prior rows) and, for the capped pending vectors, whose
-    rows a pair replaces, per vector; and it sums the held members'
-    vectors of the clusters whose centroid is broken, less the capped
-    pending ones, which the kernel adds back unless a pair takes them.
-    One ``cluster_kernel.stage_batches`` task then does the rest over
-    the bounded set, and its output is materialized once. The memberships
+    Only the vectors with no membership row are clustered (S4): a
+    member keeps its row, and its vector, already in its centroid, is
+    not scored again. Spark scores those vectors against the broadcast
+    centroids and sums the assigned ones per cluster and position
+    (:func:`clustering.update_sums`) in the aggregate that also counts
+    the membership rows per cluster; and it sums the members' vectors
+    of the clusters whose centroid is broken. One
+    ``cluster_kernel.stage_batches`` task then does the rest over the
+    bounded set, and its output is materialized once. The memberships
     are re-pointed and filtered through that output's redirect rows.
 
     Maintenance (recount, unassign, zero-centroid repair) needs the
     complete membership table, so it runs when ``memberships`` is given
     or there is no cluster table; with a cluster table and no
-    memberships, ``clusters`` is the merged table with its stored
-    counts and nothing is unassigned. ``member_vectors`` (default
-    ``vectors``) holds the prior members' vectors for the repair; a
-    vector in both frames has the same embedding in each.
+    memberships, every vector is scored, ``clusters`` is the merged
+    table with its stored counts and nothing is unassigned.
 
     Returns DataFrames but for ``unassigned``: an Observation of the
     unassign rows' count (``.get["rows"]``), filled by the first action
-    on ``memberships``."""
+    on ``memberships``. ``pending`` holds the vectors clustered but not
+    assigned."""
     from ..operators import cluster_kernel as ck
 
     if min(assign_threshold, merge_threshold) < 0:
@@ -134,55 +134,44 @@ def run_clustering(
     maintain = clusters is None or memberships is not None
     vectors = vectors.select(F.col("vec_id").cast("bigint"),
                              F.col("embedding").cast("array<double>"))
+    unclustered = vectors if memberships is None else vectors.join(
+        memberships.select("vec_id"), "vec_id", "left_anti")
     parts = []
     if clusters is None:
         fresh = fsutil.local_frame(
             spark, [], "vec_id bigint, cluster_id string, cosine double")
-        pending = vectors
+        pending = unclustered
     else:
-        # read by the centroid sums, the pending set, the held counts
-        # and the memberships: materialized once
+        # read by the centroid sums, the pending set, the counts and
+        # the memberships: materialized once
         fresh = clustering.assign_to_clusters(
-            vectors, clusters, assign_threshold).localCheckpoint()
-        pending = vectors.join(fresh.select("vec_id"), "vec_id", "left_anti")
+            unclustered, clusters, assign_threshold).localCheckpoint()
+        pending = unclustered.join(fresh.select("vec_id"), "vec_id", "left_anti")
         parts.append(_kernel_rows(clusters, "cluster", cluster_id=F.col("cluster_id"),
                                   vec=F.col("centroid"), n=F.col("member_count")))
     capped = pending.orderBy(F.desc("vec_id")).limit(clustering.MAX_PENDING_PAIRING)
     parts.append(_kernel_rows(capped, "pending", vec_id=F.col("vec_id"),
                               vec=F.col("embedding")))
-    fresh_rows = fresh.select("vec_id", "cluster_id")
-    # one aggregate: the centroid sums per (cluster, position), and the
-    # held membership rows (position NULL) per cluster and, for the
-    # capped pending vectors, whose rows a pair replaces, per vector
+    held = fresh.select("vec_id", "cluster_id")
+    # one aggregate: the centroid sums per (cluster, position) and the
+    # membership rows (position NULL) per cluster
     counted = []
     if clusters is not None:
-        counted.append(clustering.assigned_elements(vectors, fresh).withColumn(
-            "vec_id", F.lit(None).cast("bigint")))
+        counted.append(clustering.assigned_elements(unclustered, fresh))
     if memberships is not None:
         prior = memberships.select("vec_id", "cluster_id")
-        # a fresh assignment replaces a vector's prior rows
-        held = fresh_rows.unionByName(
-            prior.join(fresh_rows.select("vec_id"), "vec_id", "left_anti"))
-        held = held.join(F.broadcast(capped.select(
-            "vec_id", F.lit(True).alias("_capped"))), "vec_id", "left")
-        counted.append(held.select(
-            "cluster_id", F.lit(None).cast("int").alias("pos"),
-            F.lit(None).cast("double").alias("val"),
-            F.when(F.col("_capped"), F.col("vec_id")).alias("vec_id")))
+        held = held.unionByName(prior)
+        counted.append(held.select("cluster_id", F.lit(None).cast("int").alias("pos"),
+                                   F.lit(None).cast("double").alias("val")))
         if clusters is not None:
-            # the kernel adds the pending members no pair takes (the
-            # same broadcast as above, where an anti-join would be another)
             parts.append(_kernel_rows(
-                _broken_member_sums(clusters, held.where(F.col("_capped").isNull()),
-                                    vectors if member_vectors is None else member_vectors),
-                "repair", cluster_id=F.col("cluster_id"), pos=F.col("pos"),
-                x=F.col("s"), n=F.col("c")))
+                _broken_member_sums(clusters, prior, vectors), "repair",
+                cluster_id=F.col("cluster_id"), pos=F.col("pos"), x=F.col("s"), n=F.col("c")))
     if counted:
         parts.append(_kernel_rows(
-            clustering.update_sums(functools.reduce(DataFrame.unionByName, counted),
-                                   "vec_id"),
-            "sum", cluster_id=F.col("cluster_id"), vec_id=F.col("vec_id"),
-            pos=F.col("pos"), x=F.col("s"), n=F.col("k")))
+            clustering.update_sums(functools.reduce(DataFrame.unionByName, counted)),
+            "sum", cluster_id=F.col("cluster_id"), pos=F.col("pos"), x=F.col("s"),
+            n=F.col("k")))
 
     def body(batches):
         return ck.stage_batches(batches, assign_threshold, merge_threshold,
@@ -207,13 +196,8 @@ def run_clustering(
     if clusters is not None:
         assignments = repoint(fresh).select(
             "vec_id", "cluster_id", "cosine").unionByName(assignments)
-    if memberships is not None:
-        # this run's assignments (fresh and pairs) replace prior rows
-        won = fresh_rows.select("vec_id").unionByName(pairs.select("vec_id"))
-        members = members.unionByName(repoint(fresh_rows.unionByName(
-            prior.join(F.broadcast(won), "vec_id", "left_anti"))))
-    elif clusters is not None:
-        members = members.unionByName(repoint(fresh_rows))
+    if clusters is not None or memberships is not None:
+        members = members.unionByName(repoint(held))
     unassigned = Observation("cluster_unassigned")
     return {
         # a recount is never NULL (the Catalyst recount's column is NOT NULL)
@@ -228,7 +212,7 @@ def run_clustering(
             "vec_id", F.col("cluster_id").alias("old_cluster_id")),
         "unassigned": unassigned,
         "assignments": assignments,
-        "pending": vectors.join(assignments.select("vec_id"), "vec_id", "left_anti"),
+        "pending": unclustered.join(assignments.select("vec_id"), "vec_id", "left_anti"),
         "merge_mapping": state.where(
             (F.col("kind") == "redirect") & (F.col("new_cluster_id") != F.col("cluster_id"))
         ).select(F.col("cluster_id").alias("old_cluster_id"), "new_cluster_id"),

@@ -90,55 +90,125 @@ def test_run_maintenance(spark):
     assert unassign == [(3, "b")]
 
 
+def test_run_clustering_returns_merge_mapping(spark):
+    # two near-identical seed pairs -> the fixpoint merges the two
+    # 2-member clusters into one; the absorbed id must appear in the
+    # returned mapping
+    base = [1.0, 0.0, 0.0, 0.0]
+    near = [0.999, 0.01, 0.0, 0.0]
+    rows = [(1, base), (2, near), (3, [0.998, 0.02, 0.0, 0.0]), (4, [0.997, 0.03, 0.0, 0.0])]
+    vectors = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    out = cluster_pipeline.run_clustering(spark, vectors, None)
+    assert "merge_mapping" in out
+    mapping = out["merge_mapping"].collect()
+    clusters = [r.cluster_id for r in out["clusters"].collect()]
+    assigned = out["assignments"].select("cluster_id").distinct().collect()
+    # every assignment points at a SURVIVING cluster (the mapping was
+    # applied to this batch's own assignments)
+    assert {r.cluster_id for r in assigned} <= set(clusters)
+    # and the mapping's new ids are all survivors too (transitive)
+    assert all(r.new_cluster_id in clusters for r in mapping)
+
+
+def test_reconcile_memberships_repoints_prior_and_fresh_wins(spark):
+    fresh = spark.createDataFrame(
+        [(1, "cA"), (2, "cB")], "vec_id bigint, cluster_id string")
+    prior = spark.createDataFrame(
+        [(2, "cOLD"),   # re-assigned this run: fresh cB must win
+         (3, "cGONE"),  # cluster absorbed by this run's merge -> cA
+         (4, "cB")],    # untouched prior row survives as-is
+        "vec_id bigint, cluster_id string")
+    mapping = spark.createDataFrame(
+        [("cGONE", "cA")], "old_cluster_id string, new_cluster_id string")
+    got = {r.vec_id: r.cluster_id
+           for r in cluster_pipeline.reconcile_memberships(fresh, prior, mapping).collect()}
+    assert got == {1: "cA", 2: "cB", 3: "cA", 4: "cB"}
+
+
+def test_mark_content_stale_dedups_touched(spark):
+    clusters = spark.createDataFrame(
+        [("c1", True), ("c2", True)], "cluster_id string, is_content boolean")
+    # touched at member grain: c1 appears 3x
+    touched = spark.createDataFrame(
+        [("c1",), ("c1",), ("c1",)], "cluster_id string")
+    out = cluster_pipeline.mark_content_stale(clusters, touched)
+    rows = {r.cluster_id: r.is_content for r in out.collect()}
+    assert out.count() == 2  # no duplicated cluster rows
+    assert rows == {"c1": False, "c2": True}
+
+
 # ---------------------------------------------------------------------------
 # the stage's kernel against the Catalyst operators
 # ---------------------------------------------------------------------------
 
 
-def _catalyst_stage(vectors, clusters, memberships, member_vectors):
-    """The cluster stage as a chain of Catalyst operators: assign,
-    centroid update, pairing, merge fixpoint, re-pointing,
+def _catalyst_stage(spark, vectors, clusters, memberships):
+    """The cluster stage as a chain of Catalyst operators and the numpy
+    cores run on the driver: the S4 anti-join, assign, centroid update,
+    pairing (``pair_pending``) and merge fixpoint (``merge_fixpoint``)
+    over the collected bounded sets, re-pointing,
     reconcile_memberships and run_maintenance (recount_members,
     unassigned_members, repair_zero_centroids). Returns (clusters,
     memberships, unassign)."""
     from pyspark.sql import functions as F
 
+    from tackle4losscontentextraction_spark.operators import cluster_kernel as ck
     from tackle4losscontentextraction_spark.operators import clustering
 
-    fresh = clustering.assign_to_clusters(vectors, clusters).localCheckpoint()
-    updated = clustering.update_centroids(clusters, vectors, fresh)
-    pending = vectors.join(fresh.select("vec_id"), "vec_id", "left_anti")
-    pairs = clustering.new_clusters_from_pairs(pending).localCheckpoint()
-    merged, mapping = clustering.merge_clusters_fixpoint(
-        updated.unionByName(pairs.select(
-            "cluster_id", "centroid", F.col("member_count").cast("bigint"))),
-        return_mapping=True)
-    assigned = fresh.select("vec_id", "cluster_id").unionByName(
-        pairs.selectExpr("member_a as vec_id", "cluster_id")).unionByName(
-        pairs.selectExpr("member_b as vec_id", "cluster_id"))
+    unclustered = vectors.join(memberships.select("vec_id"), "vec_id", "left_anti")
+    fresh = clustering.assign_to_clusters(unclustered, clusters).localCheckpoint()
+    updated = clustering.update_centroids(clusters, unclustered, fresh).collect()
+    pending = unclustered.join(fresh.select("vec_id"), "vec_id", "left_anti").orderBy(
+        F.desc("vec_id")).limit(clustering.MAX_PENDING_PAIRING).collect()
+    pairs = ck.pair_pending([r.vec_id for r in pending],
+                            [_np_vec(r.embedding) for r in pending],
+                            clustering.ASSIGN_THRESHOLD)
+    ids, vecs, counts, mapping = ck.merge_fixpoint(
+        [r.cluster_id for r in updated] + [p[0] for p in pairs],
+        [_np_vec(r.centroid) for r in updated] + [p[1] for p in pairs],
+        [r.member_count for r in updated] + [2] * len(pairs),
+        clustering.MERGE_THRESHOLD, clustering.MAX_MERGE_PASSES)
+    merged = spark.createDataFrame(
+        [(i, _list_vec(v), n) for i, v, n in zip(ids, vecs, counts) if n >= 2],
+        "cluster_id string, centroid array<double>, member_count bigint")
+    mapping = spark.createDataFrame(
+        list(mapping.items()), "old_cluster_id string, new_cluster_id string")
+    assigned = fresh.select("vec_id", "cluster_id").unionByName(spark.createDataFrame(
+        [(m, cid) for cid, _, a, b in pairs for m in (a, b)],
+        "vec_id bigint, cluster_id string"))
     assigned = assigned.join(
         F.broadcast(mapping.withColumnRenamed("old_cluster_id", "cluster_id")),
         "cluster_id", "left").select(
         "vec_id", F.coalesce("new_cluster_id", "cluster_id").alias("cluster_id"))
     members = cluster_pipeline.reconcile_memberships(assigned, memberships, mapping)
-    maint = cluster_pipeline.run_maintenance(
-        merged.where(F.col("member_count") >= 2), members, member_vectors)
+    maint = cluster_pipeline.run_maintenance(merged, members, vectors)
     unassign = maint["unassign"]
     return (maint["clusters"], members.join(unassign.select("vec_id"), "vec_id", "left_anti"),
             unassign)
 
 
+def _np_vec(v):
+    # the kernels carry a NULL element as NaN
+    import numpy as np
+
+    return None if v is None else np.array([np.nan if x is None else x for x in v])
+
+
+def _list_vec(v):
+    import math
+
+    return None if v is None else [None if math.isnan(x) else float(x) for x in v]
+
+
 def _random_state(rng, overlap: bool):
-    """A cluster table, its memberships, the vectors to cluster and the
-    member vectors: near-duplicate centroids (merges, so absorbed ids),
-    1-member clusters (stored and true counts), orphan and NULL
-    membership keys, and zero, NULL and NULL-element centroids whose
-    members' vectors repair them. With ``overlap`` the vectors to
-    cluster include the members (a fresh or pair assignment replaces
-    their prior rows; a member of the zero centroid leaves it as a new
-    pair, and two members that score NULL against everything stay and
-    repair it); without it they are the unclustered ones, as in the
-    composed job."""
+    """A cluster table, its memberships and every vector: near-duplicate
+    centroids (merges, so absorbed ids), 1-member clusters (stored and
+    true counts), orphan and NULL membership keys, and zero, NULL and
+    NULL-element centroids whose members' vectors repair them. The
+    vectors hold the unclustered ones (some assign, some pair up) and
+    the members'. With ``overlap`` the members' vectors would assign
+    or pair if they were scored: two near-duplicate members (one of the
+    zero centroid) and members that sit next to the unclustered ones."""
     dim = 4
     bases = [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(4)]
 
@@ -159,14 +229,14 @@ def _random_state(rng, overlap: bool):
             members.append((v, cid))
             r = rng.random()
             member_vecs.append((v, None if r < 0.1 else [None] * dim if r < 0.15
-                                else near(rng.choice(bases), 0.3)))
+                                else near(rng.choice(bases), 0.3 if not overlap else 0.03)))
     members.append((next(vid), None))
-    if overlap:  # two members that leave their clusters as a new pair
+    if overlap:
         d = [rng.uniform(-1, 1) for _ in range(dim)]
         for cid in ("zero", rng.choice(ids)):
             members.append((next(vid), cid))
             member_vecs.append((members[-1][0], near(d, 0.01)))
-        for _ in range(2):  # a NULL element: never assigned nor paired
+        for _ in range(2):  # a NULL element: repairs with a NULL position
             members.append((next(vid), "zero"))
             member_vecs.append((members[-1][0], [rng.uniform(-1, 1), None, 1.0, 0.5]))
     to_cluster = []
@@ -176,12 +246,7 @@ def _random_state(rng, overlap: bool):
         if rng.random() < 0.5:
             to_cluster.append((next(vid), near(b, 0.01)))
     to_cluster.append((next(vid), [rng.uniform(-1, 1) for _ in range(dim)]))
-    if overlap:
-        to_cluster += [(v, e) for v, e in member_vecs if e is not None]
-        member_vecs = to_cluster
-    else:
-        member_vecs = member_vecs + to_cluster
-    return clusters, members, to_cluster, member_vecs
+    return clusters, members, member_vecs + to_cluster
 
 
 def _sorted(rows):
@@ -189,18 +254,22 @@ def _sorted(rows):
 
 
 def test_stage_equals_catalyst_operators_property(spark, tmp_path):
-    """run_clustering's one kernel pass (centroid update, pairing,
-    merge, recount, unassign, repair) gives the rows of the Catalyst
-    operator chain on random states: ids, counts, flags and
-    memberships exactly, centroids bit for bit but a repaired mean's.
-    A sum of three or more doubles depends on the order Spark adds them
-    in, which follows the plan: the inputs are parquet tables, as in
-    the jobs, so the centroid sums take the Catalyst chain's plan; the
-    repair sums cannot (the chain aggregates its own reconciled
-    memberships), so a repaired mean is held to 1e-12."""
+    """run_clustering's one kernel pass (S4 anti-join, centroid update,
+    pairing, merge, recount, unassign, repair) over every vector gives
+    the rows of the operator chain run on the unclustered ones, on
+    random states: ids, counts, flags and memberships exactly,
+    centroids bit for bit but a repaired mean's, and no member is
+    scored again. A sum of three or more doubles depends on the order
+    Spark adds them in, which follows the plan: the inputs are parquet
+    tables, as in the jobs, so the centroid sums take the Catalyst
+    chain's plan; the repair sums cannot (the chain aggregates its own
+    reconciled memberships), so a repaired mean is held to 1e-12."""
+    from tackle4losscontentextraction_spark.operators import cluster_kernel as ck
+    from tackle4losscontentextraction_spark.operators import clustering
+
     vec_ddl = "vec_id bigint, embedding array<double>"
     seen = {"absorbed": 0, "repaired": 0, "unassigned": 0, "dropped": 0,
-            "paired_member": 0, "repaired_after_pairing": 0}
+            "member_would_assign": 0, "member_would_pair": 0}
 
     def table(rows, ddl, name):
         spark.createDataFrame(rows, ddl).write.parquet(str(tmp_path / name))
@@ -208,16 +277,14 @@ def test_stage_equals_catalyst_operators_property(spark, tmp_path):
 
     for seed in range(4):
         rng = random.Random(seed)
-        overlap = seed == 2
-        clusters, members, to_cluster, member_vecs = _random_state(rng, overlap)
+        clusters, members, all_vecs = _random_state(rng, overlap=seed == 2)
         cl = table(clusters, "cluster_id string, centroid array<double>, member_count bigint",
                    f"clusters{seed}")
         mem = table(members, "vec_id bigint, cluster_id string", f"members{seed}")
-        vecs = table(to_cluster, vec_ddl, f"vectors{seed}")
-        mvecs = table(member_vecs, vec_ddl, f"member_vectors{seed}")
+        vecs = table(all_vecs, vec_ddl, f"vectors{seed}")
 
-        got = cluster_pipeline.run_clustering(spark, vecs, cl, mem, member_vectors=mvecs)
-        want_c, want_m, want_u = _catalyst_stage(vecs, cl, mem, mvecs)
+        got = cluster_pipeline.run_clustering(spark, vecs, cl, mem)
+        want_c, want_m, want_u = _catalyst_stage(spark, vecs, cl, mem)
 
         def cluster_rows(df):
             return _sorted((r.cluster_id, _hex(r.centroid), r.member_count, r.repaired)
@@ -235,18 +302,21 @@ def test_stage_equals_catalyst_operators_property(spark, tmp_path):
         unassign = _sorted(tuple(r) for r in got["unassign"].collect())
         assert unassign == _sorted(tuple(r) for r in want_u.collect()), seed
         assert got["unassigned"].get["rows"] == len(unassign), seed
+        # S4: no member is scored again, and pending is unclustered only
+        held = {v for v, _ in members}
+        assert not {r.vec_id for r in got["assignments"].collect()} & held, seed
+        assert not {r.vec_id for r in got["pending"].collect()} & held, seed
         seen["absorbed"] += got["merge_mapping"].count()
         seen["repaired"] += sum(r.repaired for r in got["clusters"].collect())
         seen["unassigned"] += len(unassign)
         seen["dropped"] += len(clusters) - got["clusters"].count()
-        # a member that became pending and paired: its pair row replaces it
-        held = dict(members)
-        paired = {r.vec_id for r in got["assignments"].collect() if r.cosine == 1.0}
-        seen["paired_member"] += len(paired & held.keys())
-        # a repaired cluster one of whose members left it as a pair
-        seen["repaired_after_pairing"] += sum(
-            r.repaired and any(held.get(v) == r.cluster_id for v in paired)
-            for r in got["clusters"].collect())
+        # members whose vectors would assign or pair were they scored
+        given = [(v, e) for v, e in all_vecs if v in held and e is not None]
+        seen["member_would_assign"] += clustering.assign_to_clusters(
+            spark.createDataFrame(given, vec_ddl), cl).count()
+        seen["member_would_pair"] += len(ck.pair_pending(
+            [v for v, _ in given], [_np_vec(e) for _, e in given],
+            clustering.ASSIGN_THRESHOLD))
     # the random states do reach every branch
     assert all(seen.values()), seen
 
@@ -320,9 +390,9 @@ def _cluster_stage_jobs(spark, monkeypatch, argv: list[str]) -> tuple[dict, int]
 def test_cluster_stage_spark_jobs(spark, tmp_path, monkeypatch):
     """The cluster stage of the perfbench upsert_cluster job (corpus
     seed 21): from scratch it runs the kernel's materialization and the
-    two state writes; over the committed state it runs no more jobs
-    than the stage from scratch did before it became one kernel pass
-    (17). Either way every output count is consistent."""
+    two state writes; over the committed state, where it also scores
+    the unclustered vectors and re-points the memberships, at most 14.
+    Either way every output count is consistent."""
     import shutil
     import sys
 
@@ -345,8 +415,8 @@ def test_cluster_stage_spark_jobs(spark, tmp_path, monkeypatch):
     assert scratch["clustering"]["state_version"] == 0
     assert again["clustering"]["state_version"] == 1
     assert scratch["clustering"]["clusters"] > 0
-    assert n_scratch <= 4, n_scratch
-    assert n_again <= 17, n_again
+    assert n_scratch <= 3, n_scratch
+    assert n_again <= 14, n_again
 
 
 def test_read_state_reads_with_the_marker_schemas(spark, tmp_path):

@@ -1,5 +1,8 @@
 """Clustering batch-dataflow semantics (reference
-tests/test_cluster_process.py + test_pipeline_functional.py analogs)."""
+tests/test_cluster_process.py + test_pipeline_functional.py analogs):
+the Catalyst operators, the numpy kernels against a straight-loop
+reference, and the pairing and merge as the cluster stage
+(``cluster_pipeline.run_clustering``) runs them through Spark."""
 
 from __future__ import annotations
 
@@ -15,6 +18,18 @@ from pyspark.sql import functions as F
 
 from tackle4losscontentextraction_spark.operators import cluster_kernel as ck
 from tackle4losscontentextraction_spark.operators import clustering
+from tackle4losscontentextraction_spark.plans import cluster_pipeline
+
+VEC_DDL = "vec_id bigint, embedding array<double>"
+CLUSTER_DDL = "cluster_id string, centroid array<double>, member_count bigint"
+
+
+def _merge_only(spark, clusters, **kw):
+    """The stage over a cluster table alone: no vector to score, no
+    memberships, so its clusters are the merge fixpoint's survivors
+    with 2 or more members, and its merge_mapping the absorbed ids."""
+    return cluster_pipeline.run_clustering(
+        spark, spark.createDataFrame([], VEC_DDL), clusters, **kw)
 
 
 def test_assign_above_threshold(spark):
@@ -39,26 +54,23 @@ def test_two_similar_vectors_form_pair_cluster(spark):
     """Reference test_cluster_process.py: two near-identical vectors +
     empty cluster set -> one new 2-member cluster."""
     pending = spark.createDataFrame(
-        [(10, [0.6, 0.8]), (11, [0.61, 0.79]), (12, [-1.0, 0.0])],
-        "vec_id bigint, embedding array<double>",
-    )
-    out = clustering.new_clusters_from_pairs(pending).collect()
-    assert len(out) == 1
-    row = out[0]
-    assert {row.member_a, row.member_b} == {10, 11}
+        [(10, [0.6, 0.8]), (11, [0.61, 0.79]), (12, [-1.0, 0.0])], VEC_DDL)
+    out = cluster_pipeline.run_clustering(spark, pending)
+    row, = out["clusters"].collect()
     assert row.member_count == 2
     mid = [(0.6 + 0.61) / 2, (0.8 + 0.79) / 2]
     assert list(row.centroid) == pytest.approx(mid)
+    assert {(r.vec_id, r.cluster_id) for r in out["assignments"].collect()} == {
+        (10, row.cluster_id), (11, row.cluster_id)}
+    assert [r.vec_id for r in out["pending"].collect()] == [12]
 
 
 def test_weighted_merge_fixpoint(spark):
     """Two centroids with cos > 0.9 merge with the weighted mean
     (test_pipeline_functional.py:159-192 analog)."""
     clusters = spark.createDataFrame(
-        [("a", [1.0, 0.0], 1), ("b", [0.98, 0.05], 3), ("c", [0.0, 1.0], 2)],
-        "cluster_id string, centroid array<double>, member_count bigint",
-    )
-    out = {r.cluster_id: r for r in clustering.merge_clusters_fixpoint(clusters).collect()}
+        [("a", [1.0, 0.0], 1), ("b", [0.98, 0.05], 3), ("c", [0.0, 1.0], 2)], CLUSTER_DDL)
+    out = {r.cluster_id: r for r in _merge_only(spark, clusters)["clusters"].collect()}
     assert set(out) == {"a", "c"}
     merged = out["a"]
     assert merged.member_count == 4
@@ -317,70 +329,204 @@ def test_kernel_dim_rules():
     assert _out_vec(c) == [1.0, 4.5, None, None]
 
 
+def _ref_stage(ids, vs):
+    """The stage from scratch by the reference: pair, then merge the
+    pairs. Returns (sorted survivors, {vec id: cluster id})."""
+    pairs = _ref_pairs(ids, vs, 0.82)
+    want, mapping, _ = _ref_merge([p[0] for p in pairs], [p[1] for p in pairs],
+                                  [2] * len(pairs), 0.9)
+    members = {m: mapping.get(cid, cid) for cid, _, _, a, b in pairs for m in (a, b)}
+    return [(i, _hex(v), n) for i, v, n in want], members
+
+
+def _stage_rows(out):
+    return (sorted((r.cluster_id, _hex(r.centroid), r.member_count)
+                   for r in out["clusters"].collect()),
+            {r.vec_id: r.cluster_id for r in out["assignments"].collect()})
+
+
 def test_kernels_through_spark_equal_reference(spark):
+    """The stage's pairing and merge, through Spark and Arrow, equal
+    the reference: from scratch (pairs, then their merge) and over a
+    cluster table alone (the merge and its mapping)."""
     for seed in (101, 102):
         rng = random.Random(seed)
         vs = _random_set(rng, 30, 4)
         ids = rng.sample(range(-10**12, 10**12), len(vs))
-        pend = spark.createDataFrame(list(zip(ids, vs)), "vec_id bigint, embedding array<double>")
-        got = sorted((r.cluster_id, _hex(r.centroid), r.member_count, r.member_a, r.member_b)
-                     for r in clustering.new_clusters_from_pairs(pend).collect())
-        assert got == [(cid, _hex(c), n, a, b) for cid, c, n, a, b in _ref_pairs(ids, vs, 0.82)]
+        out = cluster_pipeline.run_clustering(
+            spark, spark.createDataFrame(list(zip(ids, vs)), VEC_DDL))
+        assert _stage_rows(out) == _ref_stage(ids, vs), seed
 
         vs = _random_set(rng, 30, 4)
         cids = _random_ids(rng, len(vs))
         counts = [rng.randint(1, 6) for _ in vs]
-        cl = spark.createDataFrame(list(zip(cids, vs, counts)),
-                                   "cluster_id string, centroid array<double>, member_count bigint")
-        out, mapping = clustering.merge_clusters_fixpoint(cl, return_mapping=True)
+        out = _merge_only(spark, spark.createDataFrame(list(zip(cids, vs, counts)), CLUSTER_DDL))
         want, want_map, _ = _ref_merge(cids, vs, counts, 0.9)
-        assert sorted((r.cluster_id, _hex(r.centroid), r.member_count) for r in out.collect()) \
-            == [(i, _hex(v), n) for i, v, n in want]
-        assert {r.old_cluster_id: r.new_cluster_id for r in mapping.collect()} == want_map
+        assert _stage_rows(out)[0] == [(i, _hex(v), n) for i, v, n in want if n >= 2], seed
+        assert {r.old_cluster_id: r.new_cluster_id
+                for r in out["merge_mapping"].collect()} == want_map, seed
 
 
-def test_pairing_cap_through_kernel(spark):
-    """Only the MAX_PENDING_PAIRING highest vec ids are paired; the
-    result equals the reference over exactly that window."""
+def _kernel_input(spark, monkeypatch, run):
+    """(the result of ``run()``, the rows and executed plan of the
+    frame the stage hands its kernel task)."""
+    frames = []
+    cls = type(spark.range(1))
+    real = cls.mapInArrow
+
+    def spy(self, *a, **k):
+        frames.append(self)
+        return real(self, *a, **k)
+
+    with monkeypatch.context() as m:
+        m.setattr(cls, "mapInArrow", spy)
+        out = run()
+    frame, = frames
+    rows = frame.collect()
+    return out, rows, frame._jdf.queryExecution().executedPlan().toString()
+
+
+def test_pairing_cap_through_kernel(spark, monkeypatch):
+    """Only the MAX_PENDING_PAIRING highest vec ids reach the kernel;
+    the result equals the reference over exactly that window."""
     rng = random.Random(7)
-    n = clustering.MAX_PENDING_PAIRING + 150
+    cap = clustering.MAX_PENDING_PAIRING
+    n = cap + 150
     bases = [[rng.uniform(-1, 1) for _ in range(4)] for _ in range(40)]
     vs = [[x + rng.gauss(0, 0.05) for x in rng.choice(bases)] for _ in range(n)]
     ids = list(range(n))
-    pend = spark.createDataFrame(list(zip(ids, vs)), "vec_id bigint, embedding array<double>")
-    got = sorted((r.cluster_id, _hex(r.centroid), r.member_count, r.member_a, r.member_b)
-                 for r in clustering.new_clusters_from_pairs(pend).collect())
-    top = ids[-clustering.MAX_PENDING_PAIRING:]
-    want = _ref_pairs(top, vs[-clustering.MAX_PENDING_PAIRING:], 0.82)
-    assert got == [(cid, _hex(c), m, a, b) for cid, c, m, a, b in want]
-    assert got and min(r[3] for r in got) >= n - clustering.MAX_PENDING_PAIRING
+    out, rows, _ = _kernel_input(spark, monkeypatch, lambda: cluster_pipeline.run_clustering(
+        spark, spark.createDataFrame(list(zip(ids, vs)), VEC_DDL)))
+    assert sorted(r.vec_id for r in rows if r.kind == "pending") == ids[-cap:]
+    got = _stage_rows(out)
+    assert got == _ref_stage(ids[-cap:], vs[-cap:])
+    assert got[1] and min(got[1]) >= n - cap
+
+
+def test_new_clusters_pairing_is_capped(spark, monkeypatch):
+    """A 10k-row pending set must never feed the quadratic pairing:
+    the working set is capped at 1000 by recency (db_access.py:93-94)
+    with a top-k, never a global sort."""
+    pending = spark.range(0, 10_000).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.col("id").cast("double"), F.lit(1.0)).alias("embedding"),
+    )
+    out, rows, plan = _kernel_input(spark, monkeypatch, lambda: cluster_pipeline.run_clustering(
+        spark, pending, assign_threshold=0.99))
+    assert "TakeOrderedAndProject" in plan, "cap must be a top-k, not a sort"
+    assert sorted(r.vec_id for r in rows if r.kind == "pending") == list(range(9_000, 10_000))
+    # every seeded cluster references only ids from the top-1000 window
+    members = [r.vec_id for r in out["assignments"].collect()]
+    assert members and min(members) >= 9_000
 
 
 def test_merge_fixpoint_many_passes_is_one_job(spark):
     """ROADMAP Finding 1: near-identical centroids merge on every pass.
     The per-pass join plan grew its size estimate ~x4 in digits per pass
     and stalled the driver; the kernel runs all passes in one task, so
-    the fixpoint ends inside its 10-pass limit in seconds and its Spark
-    job count does not grow with the pass count."""
+    the fixpoint ends inside its 10-pass limit in seconds and the
+    stage's Spark job count does not grow with the pass count."""
     rng = random.Random(3)
     base = [rng.uniform(-1, 1) for _ in range(16)]
     rows = [(f"c{i:04d}", [x + rng.gauss(0, 0.01) for x in base], 1) for i in range(300)]
-    _, _, passes = _ref_merge([r[0] for r in rows], [r[1] for r in rows],
-                              [r[2] for r in rows], 0.9)
+    want, want_map, passes = _ref_merge([r[0] for r in rows], [r[1] for r in rows],
+                                        [r[2] for r in rows], 0.9)
     assert passes >= 6
 
-    schema = "cluster_id string, centroid array<double>, member_count bigint"
-    many = spark.createDataFrame(rows, schema)
-    one = spark.createDataFrame(rows[:2] + [("z", [-x for x in base], 1)], schema)
+    many = spark.createDataFrame(rows, CLUSTER_DDL)
+    one = spark.createDataFrame(rows[:2] + [("z", [-x for x in base], 1)], CLUSTER_DDL)
 
     t0 = time.perf_counter()
-    (out, mapping), jobs_many = spark_jobs(
-        spark, lambda: clustering.merge_clusters_fixpoint(many, return_mapping=True))
+    out, jobs_many = spark_jobs(spark, lambda: _merge_only(spark, many))
     elapsed = time.perf_counter() - t0
-    _, jobs_one = spark_jobs(
-        spark, lambda: clustering.merge_clusters_fixpoint(one, return_mapping=True))
+    _, jobs_one = spark_jobs(spark, lambda: _merge_only(spark, one))
     assert elapsed < 30
     assert len(jobs_many) == len(jobs_one)
 
-    total = sum(r.member_count for r in out.collect())
-    assert total == 300 and mapping.count() == 300 - out.count()
+    assert _stage_rows(out)[0] == [(i, _hex(v), n) for i, v, n in want if n >= 2]
+    assert out["merge_mapping"].count() == len(want_map) == 300 - len(want)
+
+
+# ---------------------------------------------------------------------------
+# merge fixpoint and pair ids as the stage returns them
+# ---------------------------------------------------------------------------
+
+_CHAIN = [
+    ("a", [1.0, 0.0, 0.0], 2),
+    ("b", [0.999, 0.04, 0.0], 2),
+    ("c", [0.998, 0.06, 0.0], 3),
+    ("d", [0.997, 0.07, 0.0], 3),
+]
+
+
+def test_merge_fixpoint_checkpoints_and_converges(spark):
+    # four near-identical centroids: pass 1 merges two disjoint pairs,
+    # pass 2 merges the survivors -> a single cluster
+    out = _merge_only(spark, spark.createDataFrame(_CHAIN, CLUSTER_DDL),
+                      merge_threshold=0.9)["clusters"]
+    res = out.collect()
+    assert len(res) == 1 and res[0].member_count == 10
+    # the returned lineage must be a materialized checkpoint scan, not
+    # the k-pass self-join tower (pass-k recompute is the r2 verdict's
+    # scale-killer)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "ExistingRDD" in plan or "LogicalRDD" in plan
+    assert "Join" not in plan
+
+
+def test_merge_fixpoint_mapping_is_transitive(spark):
+    out = _merge_only(spark, spark.createDataFrame(_CHAIN, CLUSTER_DDL), merge_threshold=0.9)
+    assert [r.cluster_id for r in out["clusters"].collect()] == ["a"]
+    m = {r.old_cluster_id: r.new_cluster_id for r in out["merge_mapping"].collect()}
+    # every absorbed id must resolve DIRECTLY to the final survivor —
+    # transitively composed across passes, no chains left
+    assert m == {"b": "a", "c": "a", "d": "a"}
+
+
+def test_pair_clusters_get_stable_uuid_ids(spark):
+    pend = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.99, 0.1]), (7, [0.0, 1.0]), (9, [0.05, 0.99])], VEC_DDL)
+
+    def ids():
+        out = cluster_pipeline.run_clustering(spark, pend, assign_threshold=0.8)
+        return {r.cluster_id for r in out["clusters"].collect()}
+
+    # replay-stable, one cluster per pair, named after its members
+    assert ids() == ids() == {pyoracle.deterministic_uuid("1#2"),
+                              pyoracle.deterministic_uuid("7#9")}
+
+
+# ---------------------------------------------------------------------------
+# maintenance: zero-centroid repair and the unassign set
+# ---------------------------------------------------------------------------
+
+
+def test_repair_zero_centroids(spark):
+    clusters = spark.createDataFrame(
+        [
+            ("c1", [0.0, 0.0], 2),     # all-zero -> repair to member mean
+            ("c2", [1.0, 3.0], 2),     # healthy -> untouched
+            ("c3", None, 1),           # NULL centroid, no members -> stays
+        ],
+        CLUSTER_DDL,
+    )
+    memberships = spark.createDataFrame(
+        [(10, "c1"), (11, "c1"), (20, "c2"), (21, "c2")],
+        "vec_id bigint, cluster_id string",
+    )
+    vectors = spark.createDataFrame(
+        [(10, [2.0, 4.0]), (11, [4.0, 8.0]), (20, [9.0, 9.0]), (21, [1.0, 1.0])], VEC_DDL)
+    out = {r.cluster_id: r for r in
+           clustering.repair_zero_centroids(clusters, memberships, vectors).collect()}
+    assert out["c1"].centroid == [3.0, 6.0] and out["c1"].repaired
+    assert out["c2"].centroid == [1.0, 3.0] and not out["c2"].repaired
+    assert out["c3"].centroid is None and not out["c3"].repaired
+
+
+def test_unassigned_members(spark):
+    m = spark.createDataFrame(
+        [(1, "a"), (2, "a"), (3, "b"), (4, "c"), (5, "c"), (6, "c")],
+        "vec_id bigint, cluster_id string",
+    )
+    out = clustering.unassigned_members(m).collect()
+    assert [(r.vec_id, r.old_cluster_id) for r in out] == [(3, "b")]

@@ -144,6 +144,41 @@ def test_run_pipeline_spans_mode(tmp_path, spark):
     assert 0 < out["vec_table"]["rows_written"] <= out["doc_table"]["rows_written"]
 
 
+def test_run_clustering_rerun_scores_only_unclustered(tmp_path, spark):
+    """S4 (the reference's ``cluster_id IS NULL``): a re-run over its
+    own state (``--clusters`` and ``--memberships`` from the first
+    run's outputs) clusters only the vectors with no membership. No
+    prior member is assigned again (its vector is already in its
+    cluster's centroid), and ``pending`` holds only unclustered
+    vectors."""
+    import random
+
+    rng = random.Random(137)
+    bases = [[rng.gauss(0, 1) for _ in range(16)] for _ in range(8)]
+    rows = [[x + rng.gauss(0, 0.15) for x in b] for b in bases for _ in range(5)]
+    rows += [[rng.gauss(0, 1) for _ in range(16)] for _ in range(20)]
+    vectors = str(tmp_path / "vectors")
+    spark.createDataFrame(list(enumerate(rows)), "vec_id bigint, embedding array<double>"
+                          ).write.parquet(vectors)
+    first, again = str(tmp_path / "first"), str(tmp_path / "again")
+
+    def ids(out: str, name: str) -> set:
+        return {r.vec_id for r in spark.read.parquet(os.path.join(out, name)).collect()}
+
+    _run_job("run_clustering.py", "--vectors", vectors, "--out", first)
+    prior = ids(first, "assignments")
+    assert prior
+    res = _run_job("run_clustering.py", "--vectors", vectors, "--out", again,
+                   "--clusters", os.path.join(first, "clusters"),
+                   "--memberships", os.path.join(first, "assignments"),
+                   "--assign-threshold", "0.5")
+    assigned, pending = ids(again, "assignments"), ids(again, "pending")
+    assert res["counts"]["assignments"] == len(assigned) > 0
+    assert not assigned & prior
+    assert not pending & prior
+    assert assigned | pending == ids(vectors, "") - prior
+
+
 def test_run_pipeline_end_to_end_and_resume(tmp_path, spark):
     from tackle4losscontentextraction_spark.plans import pipeline
 

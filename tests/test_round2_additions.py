@@ -1,73 +1,16 @@
-"""Round-2 operator tests: cluster maintenance (zero-centroid repair,
-unassign set, pairing cap), dedup scale fixes (LSH-bucketed embedding
+"""Round-2 operator tests: dedup scale fixes (LSH-bucketed embedding
 near-dup, jaccard hot-shingle cap) and their plan shapes."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tackle4losscontentextraction_spark.operators import clustering, dedup
+from tackle4losscontentextraction_spark.operators import dedup
 
 
 def _executed(df) -> str:
     df.collect()
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-# ---------------------------------------------------------------------------
-# cluster maintenance
-# ---------------------------------------------------------------------------
-
-
-def test_repair_zero_centroids(spark):
-    clusters = spark.createDataFrame(
-        [
-            ("c1", [0.0, 0.0], 2),     # all-zero -> repair to member mean
-            ("c2", [1.0, 3.0], 2),     # healthy -> untouched
-            ("c3", None, 1),           # NULL centroid, no members -> stays
-        ],
-        "cluster_id string, centroid array<double>, member_count bigint",
-    )
-    memberships = spark.createDataFrame(
-        [(10, "c1"), (11, "c1"), (20, "c2"), (21, "c2")],
-        "vec_id bigint, cluster_id string",
-    )
-    vectors = spark.createDataFrame(
-        [(10, [2.0, 4.0]), (11, [4.0, 8.0]), (20, [9.0, 9.0]), (21, [1.0, 1.0])],
-        "vec_id bigint, embedding array<double>",
-    )
-    out = {r.cluster_id: r for r in
-           clustering.repair_zero_centroids(clusters, memberships, vectors).collect()}
-    assert out["c1"].centroid == [3.0, 6.0] and out["c1"].repaired
-    assert out["c2"].centroid == [1.0, 3.0] and not out["c2"].repaired
-    assert out["c3"].centroid is None and not out["c3"].repaired
-
-
-def test_unassigned_members(spark):
-    m = spark.createDataFrame(
-        [(1, "a"), (2, "a"), (3, "b"), (4, "c"), (5, "c"), (6, "c")],
-        "vec_id bigint, cluster_id string",
-    )
-    out = clustering.unassigned_members(m).collect()
-    assert [(r.vec_id, r.old_cluster_id) for r in out] == [(3, "b")]
-
-
-def test_new_clusters_pairing_is_capped(spark):
-    """A 10k-row pending set must never feed the quadratic pair join:
-    the working set is capped at 1000 by recency (db_access.py:93-94)."""
-    pending = spark.range(0, 10_000).select(
-        F.col("id").alias("vec_id"),
-        F.array(F.col("id").cast("double"), F.lit(1.0)).alias("embedding"),
-    )
-    out = clustering.new_clusters_from_pairs(pending, threshold=0.99)
-    plan = _executed(out)
-    assert "TakeOrderedAndProject" in plan, "cap must be a top-k, not a sort"
-    # every seeded cluster references only ids from the top-1000 window
-    members = out.select(F.least("member_a", "member_b").alias("lo")).agg(
-        F.min("lo")
-    ).collect()[0][0]
-    if members is not None:
-        assert members >= 9_000
 
 
 # ---------------------------------------------------------------------------

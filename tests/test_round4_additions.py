@@ -1,67 +1,13 @@
-"""Round-4 regression tests: the r3 ADVICE fixes.
-
-1. run_clustering exposes its merge mapping, and
-   reconcile_memberships re-points prior membership rows through it
-   (absorbed cluster ids must not survive into maintenance) with
-   fresh assignments deterministically winning over stale priors.
-2. mark_content_stale tolerates duplicate cluster_ids in ``touched``.
-3. bpe_tokens_py is pinned to ASCII whitespace semantics — it must
-   agree with the JVM/DuckDB engines on text containing Unicode
-   whitespace (U+00A0, U+2009, ...).
+"""Round-4 regression tests: the r3 ADVICE fixes. bpe_tokens_py is
+pinned to ASCII whitespace semantics — it must agree with the
+JVM/DuckDB engines on text containing Unicode whitespace (U+00A0,
+U+2009, ...).
 """
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from tackle4losscontentextraction_spark.functions import tokens as tok_fn
-from tackle4losscontentextraction_spark.plans import cluster_pipeline
-
-
-def test_run_clustering_returns_merge_mapping(spark):
-    # two near-identical seed pairs -> the fixpoint merges the two
-    # 2-member clusters into one; the absorbed id must appear in the
-    # returned mapping
-    base = [1.0, 0.0, 0.0, 0.0]
-    near = [0.999, 0.01, 0.0, 0.0]
-    rows = [(1, base), (2, near), (3, [0.998, 0.02, 0.0, 0.0]), (4, [0.997, 0.03, 0.0, 0.0])]
-    vectors = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    out = cluster_pipeline.run_clustering(spark, vectors, None)
-    assert "merge_mapping" in out
-    mapping = out["merge_mapping"].collect()
-    clusters = [r.cluster_id for r in out["clusters"].collect()]
-    assigned = out["assignments"].select("cluster_id").distinct().collect()
-    # every assignment points at a SURVIVING cluster (the mapping was
-    # applied to this batch's own assignments)
-    assert {r.cluster_id for r in assigned} <= set(clusters)
-    # and the mapping's new ids are all survivors too (transitive)
-    assert all(r.new_cluster_id in clusters for r in mapping)
-
-
-def test_reconcile_memberships_repoints_prior_and_fresh_wins(spark):
-    fresh = spark.createDataFrame(
-        [(1, "cA"), (2, "cB")], "vec_id bigint, cluster_id string")
-    prior = spark.createDataFrame(
-        [(2, "cOLD"),   # re-assigned this run: fresh cB must win
-         (3, "cGONE"),  # cluster absorbed by this run's merge -> cA
-         (4, "cB")],    # untouched prior row survives as-is
-        "vec_id bigint, cluster_id string")
-    mapping = spark.createDataFrame(
-        [("cGONE", "cA")], "old_cluster_id string, new_cluster_id string")
-    got = {r.vec_id: r.cluster_id
-           for r in cluster_pipeline.reconcile_memberships(fresh, prior, mapping).collect()}
-    assert got == {1: "cA", 2: "cB", 3: "cA", 4: "cB"}
-
-
-def test_mark_content_stale_dedups_touched(spark):
-    clusters = spark.createDataFrame(
-        [("c1", True), ("c2", True)], "cluster_id string, is_content boolean")
-    # touched at member grain: c1 appears 3x
-    touched = spark.createDataFrame(
-        [("c1",), ("c1",), ("c1",)], "cluster_id string")
-    out = cluster_pipeline.mark_content_stale(clusters, touched)
-    rows = {r.cluster_id: r.is_content for r in out.collect()}
-    assert out.count() == 2  # no duplicated cluster rows
-    assert rows == {"c1": False, "c2": True}
 
 
 UNICODE_WS = [
