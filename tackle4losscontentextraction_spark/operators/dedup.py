@@ -15,9 +15,9 @@ Scale notes (the whole point of each design):
                  only wide op and its cardinality is O(docs x bands),
                  not O(docs^2).
 - simhash      : 16-bit signature from per-token md5 nibble parity;
-                 near-dup = equal signature (Hamming-0 bucket join) —
-                 one shuffle on a 16-bit key; Hamming-1 recall via
-                 2x8-bit pigeonhole banding (simhash_h1_pairs).
+                 near-dups within Hamming-1 via 2x8-bit pigeonhole
+                 banding (simhash_h1_pairs) — one shuffle on the band
+                 key.
 - ngram jaccard: exact pairwise within shingle-share buckets (posting-
                  list join), not a cross join.
 - embedding    : cosine > threshold via LSH-free blocked self-join for
@@ -84,29 +84,10 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(text: Column, num_hashes: int = 4, shingle_n: int = 3) -> Column:
-    """array<string> minhash signature — ONE md5 per shingle per group
-    of 4 hash functions: md5's 32 hex chars are sliced into four 8-hex
-    chunks, each an independent 32-bit permutation sample (min over
-    shingles of a uniform hash). 4x-16x cheaper than per-seed salting
-    and bit-identical in DuckDB (substr(md5(s || '#g'), 8k+1, 8)).
-    """
-    shingles = word_shingles(text, shingle_n)
-    sig = []
-    for k in range(num_hashes):
-        g, j = divmod(k, 4)
-        sig.append(F.array_min(F.transform(shingles, _hash_slice_fn("#%d" % g, j))))
-    return F.array(*sig)
-
-
-def _hash_slice_fn(salt: str, j: int):
+def _md5_salted_fn(salt: str):
     """Closure factory: transform lambdas MUST be single-param (PySpark
     inspects the arity — a defaulted second param makes it pass the
     element index), so constants are bound here, not via defaults."""
-    return lambda s: F.substring(F.md5(F.concat(s, F.lit(salt))), j * 8 + 1, 8)
-
-
-def _md5_salted_fn(salt: str):
     return lambda s: F.md5(F.concat(s, F.lit(salt)))
 
 
@@ -130,7 +111,10 @@ def minhash_lsh_candidates(
 
     The md5 pass is materialized once as a column (one md5 per shingle
     per 4-hash group), then the cheap substring minima derive the
-    signature — Catalyst cannot duplicate the expensive pass.
+    signature — Catalyst cannot duplicate the expensive pass. md5's 32
+    hex chars are four 8-hex chunks, each an independent 32-bit
+    permutation sample, bit-identical in DuckDB
+    (substr(md5(s || '#g'), 8k+1, 8)).
     """
     rows = num_hashes // bands
     groups = (num_hashes + 3) // 4
@@ -344,16 +328,6 @@ def simhash16(text: Column) -> Column:
         (F.when(bit_sum(j) > 0, F.lit(1 << j)).otherwise(F.lit(0)) for j in range(16)),
         F.lit(0),
     ).cast("int")
-
-
-def simhash_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Docs bucketed by identical 16-bit simhash (Hamming-0 near-dups)."""
-    return (
-        docs.select(F.col(id_col).alias("doc_id"), simhash16(F.col(text_col)).alias("simhash"))
-        .groupBy("simhash")
-        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("keeper"))
-        .where(F.col("n_docs") > 1)
-    )
 
 
 def simhash_h1_pairs(

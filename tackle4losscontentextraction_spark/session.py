@@ -5,10 +5,11 @@ AQE on (runtime re-plan, skew-join splitting, partition coalescing),
 Arrow on (vectorized pandas UDF transfer), shuffle partitions sized to
 the local core count (on a real cluster this would be ~2-3x total cores).
 
-Every session this package makes, test or job, also sizes Spark's
-generated-code cache to the composed job's working set
-(:data:`CODEGEN_CACHE_MAX_ENTRIES`). Jobs take their session from
-:func:`job_session`, which leaves master and memory to spark-submit.
+Every session this package makes, test or job, also carries
+:data:`SESSION_CONF`: the generated-code cache sized to the composed
+job's working set (:data:`CODEGEN_CACHE_MAX_ENTRIES`) and the UTC
+session time zone. Jobs take their session from :func:`job_session`,
+which leaves master and memory to spark-submit.
 """
 
 from __future__ import annotations
@@ -31,15 +32,22 @@ from pyspark.sql import SparkSession
 CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 CODEGEN_CACHE_MAX_ENTRIES = 1000
 
+# Zone-less timestamp strings (extraction's cleaned_date) are read in
+# the session time zone, which otherwise defaults to the JVM's: the
+# same input would store different instants on hosts in different
+# zones. A runtime SQL conf, so it is also applied to an existing
+# session.
+SESSION_CONF = {CODEGEN_CACHE_CONF: str(CODEGEN_CACHE_MAX_ENTRIES),
+                "spark.sql.session.timeZone": "UTC"}
+
 
 def job_session(app_name: str) -> SparkSession:
     """The session of a ``jobs/*.py`` entry point: the given app name
-    and the codegen-cache size; master, memory and everything else come
+    and :data:`SESSION_CONF`; master, memory and everything else come
     from spark-submit (or PYSPARK_SUBMIT_ARGS). An existing session is
-    returned with its static settings unchanged."""
-    return (SparkSession.builder.appName(app_name)
-            .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_MAX_ENTRIES))
-            .getOrCreate())
+    returned with its static settings unchanged and its time zone set
+    to UTC."""
+    return SparkSession.builder.appName(app_name).config(map=SESSION_CONF).getOrCreate()
 
 
 def get_spark(
@@ -84,11 +92,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("T4L_DRIVER_MEM", default_mem))
         .config("spark.driver.extraJavaOptions", gc_opts)
         .config("spark.ui.enabled", "false")
-        .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_MAX_ENTRIES))
+        .config(map=SESSION_CONF)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # InferFiltersFromGenerate copies the generator's input expression
         # into a `size(e) > 0` filter, which predicate pushdown then sinks

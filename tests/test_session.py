@@ -1,7 +1,8 @@
 """The jobs' session sizes Spark's generated-code cache to the composed
 job: a second run of jobs/run_pipeline.py in the same driver process
 (as a warm job server runs it) does not compile the job's generated
-Java sources again."""
+Java sources again. It also pins the session time zone to UTC, so a
+job's output does not depend on the host's zone."""
 
 from __future__ import annotations
 
@@ -79,3 +80,37 @@ def test_repeated_pipeline_job_compiles_nothing(tmp_path, spark):
     assert cache == session.CODEGEN_CACHE_MAX_ENTRIES
     assert 5 <= first <= cache
     assert second <= first // 10
+
+
+def test_job_session_pins_utc_over_the_host_zone(spark):
+    """A job's output does not depend on the host's time zone: the job
+    session sets UTC even over a session whose zone came from a
+    non-UTC JVM default, so a zone-less publication date is stored as
+    UTC midnight."""
+    from pyspark.sql import Row
+    from pyspark.sql import functions as F
+
+    from tackle4losscontentextraction_spark import session
+    from tackle4losscontentextraction_spark.operators import extraction
+
+    conf = "spark.sql.session.timeZone"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "America/New_York")
+    try:
+        job = session.job_session("t4l-tz")
+        assert job.conf.get(conf) == "UTC"
+        docs = job.createDataFrame(
+            [Row(doc_id="d0", url="https://x.com/a", lang="en", spans=[
+                Row(kind="headline", text="A headline", media_ref="", offset=0),
+                Row(kind="time", text="May 14, 2025", media_ref="", offset=1),
+            ])],
+            "doc_id string, url string, lang string, "
+            "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>")
+        (row,) = extraction.extract(docs).select(
+            "publication_date",
+            F.unix_timestamp("cleaned_date").alias("epoch_s")).collect()
+        assert row.publication_date == "May 14, 2025"
+        # 2025-05-14 00:00 UTC; America/New_York would read 04:00 UTC
+        assert row.epoch_s == 1747180800
+    finally:
+        spark.conf.set(conf, before)

@@ -12,13 +12,17 @@
 - The jobs hold no commit code: they neither publish files
   (fsutil.publish_file / write_text) nor parse cluster-state marker
   names (``committed-v``); the commit protocol (fsutil.VersionLog) is
-  called only from the library."""
+  called only from the library.
+- The bench helpers ``_load1``, ``_code_key`` and ``_count_rows`` are
+  defined once, in bench.py (perfbench keeps its own code key), and
+  every script the harvester's one-shots name exists."""
 
 from __future__ import annotations
 
 import ast
 import glob
 import os
+import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "tackle4losscontentextraction_spark")
@@ -131,3 +135,46 @@ def test_commit_check_catches_a_call(tmp_path):
         "marker = f'{state}/committed-v{ver}'\n"
         "fine = cluster_pipeline.commit_state(spark, state, 1, c, m)\n")
     assert _commit_code(str(p)) == [4, 5, 6, 7]
+
+
+BENCH_HELPERS = ("_load1", "_code_key", "_count_rows")
+
+
+def _helper_defs(path: str) -> list[str]:
+    return sorted(node.name for node in ast.walk(_parse(path))
+                  if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                  and node.name in BENCH_HELPERS)
+
+
+def test_bench_helpers_are_defined_only_in_bench_py():
+    scripts = [p for p in glob.glob(os.path.join(REPO, "**", "*.py"), recursive=True)
+               if os.path.relpath(p, REPO).split(os.sep)[0] != "perfbench"]
+    found = {os.path.relpath(p, REPO): names
+             for p in scripts if (names := _helper_defs(p))}
+    assert found == {"bench.py": sorted(BENCH_HELPERS)}, \
+        f"import the bench helpers from bench.py: {found}"
+
+
+def test_helper_check_catches_a_copy(tmp_path):
+    # the names are spliced in, so that a grep for their definitions
+    # lists only bench.py
+    p = tmp_path / "tool.py"
+    p.write_text(
+        "from bench import _code_key\n"
+        "def %s():\n    return 0.0\n"
+        "class Leg:\n    def %s(self, df):\n        return df.count()\n"
+        % ("_load1", "_count_rows"))
+    assert _helper_defs(str(p)) == ["_count_rows", "_load1"]
+
+
+def test_harvest_oneshots_name_existing_scripts():
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    try:
+        import harvest
+    finally:
+        sys.path.pop(0)
+    assert harvest.ONESHOTS
+    assert {tag for tag, _, _ in harvest.ONESHOTS} == set(harvest.ONESHOT_PENDING)
+    missing = [argv[0] for _, argv, _ in harvest.ONESHOTS
+               if not os.path.isfile(os.path.join(REPO, argv[0]))]
+    assert not missing, f"harvest one-shots name missing scripts: {missing}"

@@ -30,27 +30,9 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import _code_key, _load1  # noqa: E402
+
 OUT = os.path.join(REPO, "BENCH", "media.json")
-
-
-def _load1() -> float | None:
-    try:
-        return round(os.getloadavg()[0], 1)
-    except OSError:
-        return None
-
-
-def _code_key() -> str:
-    import hashlib
-
-    h = hashlib.md5()
-    root = os.path.join(REPO, "tackle4losscontentextraction_spark")
-    for dirpath, _, files in sorted(os.walk(root)):
-        for fn in sorted(files):
-            if fn.endswith(".py"):
-                with open(os.path.join(dirpath, fn), "rb") as f:
-                    h.update(f.read())
-    return h.hexdigest()[:8]
 
 
 # entropy-stage symbols whose cumulative time we attribute to the

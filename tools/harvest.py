@@ -94,29 +94,15 @@ def pick_pair(load: float, rotate: int) -> str | None:
     return eligible[rotate % len(eligible)] if eligible else None
 
 
-# one-shot evidence refreshers: (tag, argv, load gate, done predicate).
-# Each runs at most once per harvester process, first time its window
-# opens; `done` consults the evidence file so a restart doesn't redo
-# finished work.
+# one-shot evidence refreshers: (tag, argv, load gate), each with a
+# pending predicate in ONESHOT_PENDING. Each runs at most three times per
+# harvester process, when its window opens; the predicate consults the
+# evidence file so a restart doesn't redo finished work.
 def _streaming_stale() -> bool:
     try:
         with open(os.path.join(REPO, "BENCH", "streaming.json")) as f:
             d = json.load(f)
         return d.get("n_files") != 48 or not d.get("dedup", {}).get("state_bounded")
-    except (OSError, json.JSONDecodeError):
-        return True
-
-
-def _profile_missing(cores: int) -> bool:
-    """Missing or taken at the wrong corpus size / load: the 8-vs-32
-    CPU-total comparison only means something when both legs ran the
-    SAME corpus on a reasonably quiet window."""
-    path = os.path.join(REPO, "BENCH", f"profile_leg{cores}_catalyst.json")
-    try:
-        with open(path) as f:
-            d = json.load(f)
-        return (d.get("n_docs") != 2_400_000
-                or (d.get("load_1min_before") or 99) > 6.0)
     except (OSError, json.JSONDecodeError):
         return True
 
@@ -129,31 +115,12 @@ def _recall_stale() -> bool:
         return True
 
 
-def _pipeline_stale() -> bool:
-    """Missing, or the full-run phase was timed under a loud window
-    (the kill/resume ratio tolerates noise; the docs/s headline
-    doesn't)."""
-    try:
-        with open(os.path.join(REPO, "BENCH", "pipeline.json")) as f:
-            d = json.load(f)
-        return (d.get("n_docs") != 300_000
-                or (d.get("load_full") or 99) > 4.0)
-    except (OSError, json.JSONDecodeError):
-        return True
-
-
 ONESHOTS: list[tuple[str, list[str], float]] = [
     ("streaming refresh", ["bench.py", "--streaming"], 4.0),
-    ("profile 32-leg", ["tools/profile_leg.py", "32", "2400000"], 2.5),
-    ("profile 8-leg", ["tools/profile_leg.py", "8", "2400000"], 4.0),
     ("recall refresh", ["bench.py", "--recall"], 4.0),
-    ("pipeline bench", ["tools/bench_pipeline.py"], 3.0),
 ]
 ONESHOT_PENDING = {"streaming refresh": _streaming_stale,
-                   "profile 32-leg": lambda: _profile_missing(32),
-                   "profile 8-leg": lambda: _profile_missing(8),
-                   "recall refresh": _recall_stale,
-                   "pipeline bench": _pipeline_stale}
+                   "recall refresh": _recall_stale}
 
 
 def main() -> None:
