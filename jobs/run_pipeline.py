@@ -8,17 +8,35 @@ job, composed from the library stages:
       -> extraction.extract[_arrow]           [F1,F2,F5,L2,L3,C1: one projection]
       -> write extracted (bucketed, lineage)  [kill/rerun resumes pending buckets]
       -> read extracted/ (all buckets)        [the write's schema: no inference]
-      -> A7 tally                             [Observation on the doc MERGE's
-                                               source pass: no scan of its own]
-      -> R5 gate: error rows stop here        [status-column filter, no exception]
-      -> main_content join + hash embedding   [A1 + L4, L2-normalized]
-      -> MERGE into doc table                 [S12/S14: snapshot-atomic upsert,
-                                               is_processed=true  — the
-                                               reference's update_article_in_db]
-      -> MERGE into vector table              [S13: embedding insert]
-      -> optional incremental clustering      [--cluster: assign/merge/maintain
-                                               with state under --workdir]
+      -> two branches, run at once:
+
+         doc branch (worker thread)           vector branch (this thread)
+         A7 tally [Observation on the         R5 gate + main_content
+           MERGE's source pass: no scan       hash embedding [A1 + L4,
+           of its own; error rows count]        L2-normalized, Arrow]
+         R5 gate: error rows stop here        MERGE into vector table
+           [status-column filter]               [S13: embedding insert]
+         main_content                         optional incremental clustering
+         MERGE into doc table                   [--cluster: assign/merge/
+           [S12/S14: snapshot-atomic            maintain, state under
+           upsert, is_processed=true — the      --workdir; clusters and
+           reference's update_article_in_db]    memberships written at once]
+                                              wait for the doc branch
+      -> publish the cluster-state marker     [--cluster]
       -> metrics JSON on stdout               [the A7 tally]
+
+The job commits through four publishes. The lineage manifest is first;
+the doc-table and vector-table manifests follow, in either order; the
+cluster-state marker is last. The doc branch feeds nothing downstream,
+so it runs beside embedding, the vector MERGE and clustering, started
+with ``session.concurrently`` (its Spark jobs keep the caller's job
+group); the vector branch waits for it once the cluster-state tables
+are written and before their marker publishes. An error in either
+branch fails the job with no marker published, and every thread the
+job started has ended when it returns. ``stage_sec`` holds each
+stage's wall time as the branch running it measured it; the doc_merge
+entry overlaps embed_vec_merge, so the entries need not sum to the
+job's time.
 
 Every stage is idempotent: extraction resumes from per-bucket lineage,
 the MERGEs are keyed upserts into snapshot tables (re-merging the same
@@ -78,9 +96,9 @@ def main() -> int:
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from tackle4losscontentextraction_spark.session import job_session
+    from tackle4losscontentextraction_spark import session
 
-    spark = job_session("t4l-pipeline")
+    spark = session.job_session("t4l-pipeline")
     spark.sparkContext.setLogLevel("WARN")
 
     from tackle4losscontentextraction_spark.functions import embeddings as emb_fn
@@ -96,103 +114,119 @@ def main() -> int:
     extracted_dir, lineage_dir = f"{wd}/extracted", f"{wd}/lineage"
     doc_table, vec_table = f"{wd}/doc_table", f"{wd}/vec_table"
 
-    # per-stage wall times (VERDICT r5 task 1: the composed pipeline
-    # needs a stage profile, not one opaque number)
+    # per-stage wall times, each measured by the branch that runs the
+    # stage: the two branches overlap, so the entries need not sum to
+    # the job's time
+    import contextlib
     import time as _time
     stage_sec: dict[str, float] = {}
-    _t0 = _time.perf_counter()
 
-    def _mark(name: str) -> None:
-        nonlocal _t0
-        stage_sec[name] = round(_time.perf_counter() - _t0, 3)
-        _t0 = _time.perf_counter()
+    @contextlib.contextmanager
+    def timed(name: str):
+        t0 = _time.perf_counter()
+        yield
+        stage_sec[name] = round(_time.perf_counter() - t0, 3)
 
     # ---- stage 1: extract (resumable) -------------------------------
-    raw = spark.read.parquet(args.input)
-    if args.html:
-        from tackle4losscontentextraction_spark.operators import html_tokenize
+    with timed("extract_write"):
+        raw = spark.read.parquet(args.input)
+        if args.html:
+            from tackle4losscontentextraction_spark.operators import html_tokenize
 
-        docs = html_tokenize.tokenize_html(raw.select("doc_id", "url", "lang", "html"))
-    elif args.spans:
-        docs = raw.select("doc_id", "url", "lang", "spans")
-    else:
-        docs = synth.docs_from_documents(raw)
-    transform = extraction_arrow.extract_arrow if args.arrow else extraction.extract
-    resume = lineage.run_with_resume(
-        spark, docs, transform, extracted_dir, lineage_dir,
-        n_buckets=args.buckets)
-    _mark("extract_write")
+            docs = html_tokenize.tokenize_html(raw.select("doc_id", "url", "lang", "html"))
+        elif args.spans:
+            docs = raw.select("doc_id", "url", "lang", "spans")
+        else:
+            docs = synth.docs_from_documents(raw)
+        transform = extraction_arrow.extract_arrow if args.arrow else extraction.extract
+        resume = lineage.run_with_resume(
+            spark, docs, transform, extracted_dir, lineage_dir,
+            n_buckets=args.buckets)
 
-    # every bucket of extracted/, done now or by an earlier run, read
-    # with the schema its lineage holds (no schema-inference job)
-    extracted = spark.read.schema(resume.pop("schema")).parquet(extracted_dir)
-    # the A7 tally rides the doc MERGE's source pass, which reads all
-    # of extracted/ anyway; it is observed before the R5 gate, so error
-    # rows count. (The vector MERGE's pass re-aggregates it unread: an
-    # Observation keeps its first action's result.)
-    tally = Observation("a7_tally")
-    tallied = extracted.observe(tally, *pipeline.metric_columns())
-    _mark("metrics")
+    with timed("metrics"):
+        # every bucket of extracted/, done now or by an earlier run,
+        # read with the schema its lineage holds (no schema-inference
+        # job)
+        extracted = spark.read.schema(resume.pop("schema")).parquet(extracted_dir)
+        # the A7 tally rides the doc MERGE's source pass, which reads
+        # all of extracted/ anyway; it is observed before the R5 gate,
+        # so error rows count. Only the doc branch carries it: the
+        # vector branch reads extracted/ unobserved, so no two
+        # concurrent actions fill one Observation.
+        tally = Observation("a7_tally")
+        tallied = extracted.observe(tally, *pipeline.metric_columns())
 
-    # ---- stage 2: R5 gate + doc-table MERGE -------------------------
+    # ---- R5 gate ----------------------------------------------------
     # error rows stop here (the reference skips DB update + embedding
     # when a step fails — article_processor.py:108-146); they stay in
     # extracted/ for inspection and are NOT marked processed, so a
     # later code fix + lineage reset reprocesses exactly them.
-    ok = tallied.where(~F.col("error"))
-    articles = ok.select(
-        "doc_id", "url_norm", "title", "author", "publication_date",
-        "cleaned_date", "content_type", "type_confidence",
-        extraction.main_content(F.col("extracted")).alias("main_content"),
-        F.lit(True).alias("is_processed"),
-    )
-    doc_res = merge.merge_write(spark, doc_table, articles,
-                                key="doc_id", n_buckets=args.buckets)
-    m = tally.get
-    _mark("doc_merge")
+    def articles(rows):
+        return rows.where(~F.col("error")).select(
+            "doc_id", "url_norm", "title", "author", "publication_date",
+            "cleaned_date", "content_type", "type_confidence",
+            extraction.main_content(F.col("extracted")).alias("main_content"),
+            F.lit(True).alias("is_processed"),
+        )
 
-    # ---- stage 3: embed + vector-table MERGE ------------------------
-    # Arrow embed twin (bit-identical to hash_embed, see
-    # embeddings.embed_select_arrow): the Catalyst fold's
-    # O(tokens x dim) interpreted ops dominated this stage
-    vectors = emb_fn.embed_select_arrow(
-        articles.where(F.col("main_content") != ""),
-        id_col="doc_id", text_col="main_content", dim=args.dim,
-    )
-    vec_res = merge.merge_write(spark, vec_table, vectors,
-                                key="doc_id", n_buckets=args.buckets)
-    _mark("embed_vec_merge")
+    # ---- doc branch (worker thread): doc-table MERGE ----------------
+    def doc_merge() -> dict:
+        with timed("doc_merge"):
+            return merge.merge_write(spark, doc_table, articles(tallied),
+                                     key="doc_id", n_buckets=args.buckets)
+
+    clustered = None
+    with session.concurrently(spark, doc_merge) as doc_done:
+        # ---- vector branch (this thread): embed + vector MERGE ------
+        with timed("embed_vec_merge"):
+            # Arrow embed twin (bit-identical to hash_embed, see
+            # embeddings.embed_select_arrow): the Catalyst fold's
+            # O(tokens x dim) interpreted ops dominated this stage
+            vectors = emb_fn.embed_select_arrow(
+                articles(extracted).where(F.col("main_content") != ""),
+                id_col="doc_id", text_col="main_content", dim=args.dim,
+            )
+            vec_res = merge.merge_write(spark, vec_table, vectors,
+                                        key="doc_id", n_buckets=args.buckets)
+
+        # ---- optional: incremental clustering -----------------------
+        if args.cluster:
+            from tackle4losscontentextraction_spark.plans import cluster_pipeline
+
+            vecs = merge.read_table(spark, vec_table).select(
+                F.xxhash64("doc_id").alias("vec_id"),
+                F.col("embedding").cast("array<double>").alias("embedding"),
+            )
+            # the stage clusters only the vectors without a membership
+            # (S4) — prior pendings get re-tried against the clusters
+            # later runs created — and recounts, unassigns and repairs
+            # against the complete membership table: the prior one
+            # plus this run's
+            state_dir = f"{wd}/cluster_state"
+            cur_ver, prior, prior_members = cluster_pipeline.read_state(spark, state_dir)
+            cres = cluster_pipeline.run_clustering(spark, vecs, prior, prior_members)
+            # the marker publishes after the doc branch has: were it
+            # first, a kill in that branch would leave a committed
+            # state the re-submission clusters over again
+            clustered = {
+                **cluster_pipeline.commit_state(
+                    spark, state_dir, cur_ver + 1, cres["clusters"], cres["memberships"],
+                    before_publish=doc_done),
+                "unassigned": cres["unassigned"].get["rows"],
+            }
+        (doc_res,) = doc_done()
 
     out = {
         "resume": resume,
         "stage_sec": stage_sec,
-        "metrics": m,
+        "metrics": tally.get,
         "doc_table": {"snapshot": doc_res["snapshot"],
                       "rows_written": doc_res["rows_written"]},
         "vec_table": {"snapshot": vec_res["snapshot"],
                       "rows_written": vec_res["rows_written"]},
     }
-
-    # ---- stage 4 (optional): incremental clustering -----------------
-    if args.cluster:
-        from tackle4losscontentextraction_spark.plans import cluster_pipeline
-
-        vecs = merge.read_table(spark, vec_table).select(
-            F.xxhash64("doc_id").alias("vec_id"),
-            F.col("embedding").cast("array<double>").alias("embedding"),
-        )
-        # the stage clusters only the vectors without a membership
-        # (S4) — prior pendings get re-tried against the clusters later
-        # runs created — and recounts, unassigns and repairs against the
-        # complete membership table: the prior one plus this run's
-        state_dir = f"{wd}/cluster_state"
-        cur_ver, prior, prior_members = cluster_pipeline.read_state(spark, state_dir)
-        cres = cluster_pipeline.run_clustering(spark, vecs, prior, prior_members)
-        out["clustering"] = {
-            **cluster_pipeline.commit_state(
-                spark, state_dir, cur_ver + 1, cres["clusters"], cres["memberships"]),
-            "unassigned": cres["unassigned"].get["rows"],
-        }
+    if clustered is not None:
+        out["clustering"] = clustered
 
     print(json.dumps(out, default=str))
     spark.stop()

@@ -52,12 +52,13 @@ from __future__ import annotations
 
 import functools
 import json
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import fsutil
+from .. import fsutil, session
 from ..operators import clustering
 
 
@@ -321,27 +322,36 @@ def read_state(spark: SparkSession, state_dir: str
 
 
 def commit_state(spark: SparkSession, state_dir: str, version: int,
-                 clusters: DataFrame, memberships: DataFrame) -> dict:
+                 clusters: DataFrame, memberships: DataFrame,
+                 before_publish: Callable[[], object] | None = None) -> dict:
     """Write ``<state_dir>/v<version>/{clusters,memberships}`` in
-    full, then publish the marker ``committed-v<version>``
-    (``fsutil.VersionLog``), so a kill anywhere leaves the live version
-    whole and both tables consistent. The marker is JSON holding the
-    version and both tables' schemas, which :func:`read_state` reads
-    them with. The frames may lazily read the live version's files,
-    which stay untouched. Each write counts its rows (Observation). A
-    version already committed (a concurrent writer won it) raises: the
-    dirs just written are not the committed state.
+    full, both at once (``session.concurrently``), then publish the
+    marker ``committed-v<version>`` (``fsutil.VersionLog``), so a kill
+    anywhere leaves the live version whole and both tables consistent.
+    ``before_publish``, if given, runs between the writes and the
+    publish; if it raises, nothing is published. The marker is JSON
+    holding the version and both tables' schemas, which
+    :func:`read_state` reads them with. The frames may lazily read the
+    live version's files, which stay untouched. Each write counts its
+    rows (Observation). A version already committed (a concurrent
+    writer won it) raises: the dirs just written are not the committed
+    state.
 
     Returns {"state_version": version, "clusters": n, "memberships": n}."""
-    out = {"state_version": version}
-    schemas = {}
-    for name, df in (("clusters", clusters), ("memberships", memberships)):
+    def write(name: str, df: DataFrame) -> int:
         obs = Observation(f"cluster_state_{name}")
         df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
             "overwrite").parquet(f"{state_dir}/v{version}/{name}")
-        out[name] = obs.get["rows"]
-        schemas[name] = df.schema.jsonValue()
-    marker = json.dumps({"version": version, "schemas": schemas})
+        return obs.get["rows"]
+
+    with session.concurrently(spark, lambda: write("memberships", memberships)) as wait:
+        out = {"state_version": version, "clusters": write("clusters", clusters)}
+        (out["memberships"],) = wait()
+    if before_publish is not None:
+        before_publish()
+    marker = json.dumps({"version": version, "schemas": {
+        "clusters": clusters.schema.jsonValue(),
+        "memberships": memberships.schema.jsonValue()}})
     if not _state_log(state_dir).publish(spark, version, marker):
         raise RuntimeError(
             f"cluster-state version {version} was already committed in "

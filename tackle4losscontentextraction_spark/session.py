@@ -10,25 +10,36 @@ Every session this package makes, test or job, also carries
 job's working set (:data:`CODEGEN_CACHE_MAX_ENTRIES`) and the UTC
 session time zone. Jobs take their session from :func:`job_session`,
 which leaves master and memory to spark-submit.
+
+:func:`concurrently` is the one place the package and the jobs start
+threads: independent branches of a job run their Spark actions at the
+same time, under the caller's job group.
 """
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import os
+import threading
+from collections.abc import Callable, Iterator
+from typing import Any
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 # Spark's generated-code cache (one entry per distinct generated Java
 # source) holds 100 entries by default. Measured working set of
-# jobs/run_pipeline.py --spans --cluster (Spark 4.1, local[4]): 140
-# distinct sources for a build of fresh tables, 145 for an upsert into
-# existing ones, 161 for the two together. Over 100, LRU evicts each
-# class before its next use, so every repeated job in one driver
-# recompiled ~145 sources with Janino and the JIT compiled them again;
-# with room for them a repeated job compiles none. 1000 leaves headroom
-# for the other jobs and plan variants. A static SQL conf: it takes
-# effect when the SparkContext is created (on an existing session
-# PySpark logs a warning and keeps the old value).
+# jobs/run_pipeline.py (Spark 4.1, local[4]): 68 distinct sources for
+# the first --spans --cluster build of fresh tables, 16 more for the
+# first upsert into them, and 58 for an --html build. A cache that
+# cannot hold every source the driver's jobs use evicts each class
+# before its next use, so a repeated job in one driver recompiles them
+# with Janino and the JIT compiles them again; with room for them a
+# repeated job compiles none. 1000 leaves headroom for the other jobs
+# and plan variants. A static SQL conf: it takes effect when the
+# SparkContext is created (on an existing session PySpark logs a
+# warning and keeps the old value).
 CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 CODEGEN_CACHE_MAX_ENTRIES = 1000
 
@@ -48,6 +59,53 @@ def job_session(app_name: str) -> SparkSession:
     returned with its static settings unchanged and its time zone set
     to UTC."""
     return SparkSession.builder.appName(app_name).config(map=SESSION_CONF).getOrCreate()
+
+
+@contextlib.contextmanager
+def concurrently(spark: SparkSession,
+                 *fns: Callable[[], Any]) -> Iterator[Callable[[], list]]:
+    """Run each of ``fns`` on a thread of its own while the ``with``
+    body runs on the calling thread. The body gets ``wait``: it joins
+    the threads and returns their results in the order of ``fns``, or
+    raises the first exception one of them raised.
+
+    Each thread starts through ``inheritable_thread_target(spark)``, so
+    its Spark jobs carry the caller's job group and other local
+    properties, as of the call. Leaving the block joins every thread,
+    also when the body or a thread raised; then the first exception
+    raised, by the body or by a thread, is raised again."""
+    errors: list[BaseException] = []
+    results: list = [None] * len(fns)
+
+    def run(i: int, fn: Callable[[], Any]) -> None:
+        try:
+            results[i] = fn()
+        except BaseException as e:  # raised again by wait and on exit
+            errors.append(e)
+
+    threads: list[threading.Thread] = []
+
+    def wait() -> list:
+        for t in threads:
+            t.join()
+        if errors:
+            raise errors[0]
+        return list(results)
+
+    try:
+        for i, fn in enumerate(fns):
+            t = threading.Thread(
+                target=inheritable_thread_target(spark)(functools.partial(run, i, fn)))
+            t.start()
+            threads.append(t)
+        yield wait
+    except BaseException as e:  # raised again below, after the joins
+        errors.append(e)
+    finally:
+        for t in threads:
+            t.join()
+    if errors:
+        raise errors[0]
 
 
 def get_spark(

@@ -366,25 +366,24 @@ def _run_pipeline(monkeypatch, argv: list[str]) -> dict:
 
 
 def _cluster_stage_jobs(spark, monkeypatch, argv: list[str]) -> tuple[dict, int]:
-    """(the job's JSON, the Spark jobs it ran after its vector MERGE —
-    the cluster stage, as perfbench's trace cuts it)."""
-    from tackle4losscontentextraction_spark.operators import merge
+    """(the job's JSON, the Spark jobs of its cluster stage: those
+    started inside its run_clustering and commit_state calls, each
+    call run under a job group of its own). The doc MERGE runs
+    concurrently on another thread, outside those groups."""
+    jobs: list[int] = []
 
-    sc = spark.sparkContext
-    before: list[int] = []
-    real = merge.merge_write
-
-    def merge_write(*a, **k):
-        out = real(*a, **k)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        before[:] = sc.statusTracker().getJobIdsForGroup(
-            sc.getLocalProperty("spark.jobGroup.id"))
-        return out
+    def in_group(fn):
+        def call(*a, **k):
+            out, ids = spark_jobs(spark, lambda: fn(*a, **k))
+            jobs.extend(ids)
+            return out
+        return call
 
     with monkeypatch.context() as m:
-        m.setattr(merge, "merge_write", merge_write)
-        res, jobs = spark_jobs(spark, lambda: _run_pipeline(monkeypatch, argv))
-    return res, len(set(jobs) - set(before))
+        for name in ("run_clustering", "commit_state"):
+            m.setattr(cluster_pipeline, name, in_group(getattr(cluster_pipeline, name)))
+        res = _run_pipeline(monkeypatch, argv)
+    return res, len(jobs)
 
 
 def test_cluster_stage_spark_jobs(spark, tmp_path, monkeypatch):

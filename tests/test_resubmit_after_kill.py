@@ -1,14 +1,17 @@
 """Kill at every step of the composed job.
 
-jobs/run_pipeline.py --spans --cluster commits four times, in this
-order: the lineage manifest, the doc table's manifest, the vector
-table's manifest and the cluster-state marker, each through
-fsutil.VersionLog.publish. A raise injected just before each publish,
-and just after each but the last, stands for a kill there. A plain
-re-submission into the killed run's workdir must then reach the state
-of an uninterrupted run: the same doc, vector and extracted/ rows and
-the same live cluster state (contents, not snapshot ids), and it must
-re-extract exactly the buckets the killed run had not published.
+jobs/run_pipeline.py --spans --cluster commits four times, each
+through fsutil.VersionLog.publish: the lineage manifest first, then the
+doc table's and the vector table's manifests, which its two concurrent
+branches publish in either order, and the cluster-state marker last. A
+raise injected just before each publish, and just after each but the
+last, stands for a kill there; the kill point is picked by the
+directory published into, so every point is hit whatever order the
+branches finish in. A plain re-submission into the killed run's
+workdir must then reach the state of an uninterrupted run: the same
+doc, vector and extracted/ rows and the same live cluster state
+(contents, not snapshot ids), and it must re-extract exactly the
+buckets the killed run had not published.
 
 The job runs in this process (runpy, SparkSession.stop patched out) on
 the test session, so the 15 runs fit the time bound below."""
@@ -36,26 +39,30 @@ from tackle4losscontentextraction_spark.plans import cluster_pipeline
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BUCKETS = 4
-PUBLISHES = ("lineage", "doc table", "vector table", "cluster state")
+# the directory of each publish, under the workdir, in publish order
+# (the two table manifests may swap)
+PUBLISHES = ("lineage", "doc_table/metadata", "vec_table/metadata", "cluster_state")
 
 
 class Killed(Exception):
     pass
 
 
-def _run(monkeypatch, inp: str, wd: str, kill: tuple[int, bool] | None = None) -> dict:
-    """Run the job once; ``kill`` = (publish number, after?) raises
-    Killed just before (or after) that publish. Returns the job's
-    printed JSON and the publishes it made."""
+def _run(monkeypatch, inp: str, wd: str, kill: tuple[str, bool] | None = None) -> dict:
+    """Run the job once; ``kill`` = (publish directory, after?) raises
+    Killed just before (or after) the publish into that directory of
+    ``PUBLISHES``. Returns the job's printed JSON and the directories
+    it published into, in order."""
     real = fsutil.VersionLog.publish
     made = []
 
     def publish(self, spark, n, text):
-        if kill == (len(made) + 1, False):
+        where = os.path.relpath(self.directory, wd)
+        if kill == (where, False):
             raise Killed
         ok = real(self, spark, n, text)
-        made.append(self.directory)
-        if kill == (len(made), True):
+        made.append(where)
+        if kill == (where, True):
             raise Killed
         return ok
 
@@ -101,22 +108,24 @@ def test_resubmission_after_a_kill_at_every_step_equals_an_uninterrupted_run(
         spark.read.parquet(f"{SF}/documents.parquet")).limit(60).write.parquet(inp)
 
     clean = _run(monkeypatch, inp, str(tmp_path / "clean"))
-    assert clean["published"] == [str(tmp_path / "clean" / d) for d in (
-        "lineage", "doc_table/metadata", "vec_table/metadata", "cluster_state")]
+    made = clean["published"]
+    assert made[0] == PUBLISHES[0] and made[-1] == PUBLISHES[-1], made
+    assert sorted(made[1:-1]) == sorted(PUBLISHES[1:-1]), made
     assert sorted(clean["job"]["resume"]["processed"]) == list(range(BUCKETS))
     want = _state(spark, str(tmp_path / "clean"))
     assert want["clusters"] and want["memberships"]
 
     # before each publish, and after each but the last
-    kills = [(i, after) for i in range(1, len(PUBLISHES) + 1)
-             for after in (False, True) if (i, after) != (len(PUBLISHES), True)]
-    for i, after in kills:
-        step = f"{'after' if after else 'before'} the {PUBLISHES[i - 1]} publish"
-        wd = str(tmp_path / f"kill{i}{'a' if after else 'b'}")
+    kills = [(where, after) for where in PUBLISHES for after in (False, True)
+             if (where, after) != (PUBLISHES[-1], True)]
+    assert len(kills) == 7
+    for i, (where, after) in enumerate(kills):
+        step = f"{'after' if after else 'before'} the {where} publish"
+        wd = str(tmp_path / f"kill{i}")
         with pytest.raises(Killed):
-            _run(monkeypatch, inp, wd, kill=(i, after))
+            _run(monkeypatch, inp, wd, kill=(where, after))
         again = _run(monkeypatch, inp, wd)
-        lineage_published = i > 1 or after
+        lineage_published = where != PUBLISHES[0] or after
         assert sorted(again["job"]["resume"]["processed"]) == (
             [] if lineage_published else list(range(BUCKETS))), step
         assert again["job"]["metrics"] == clean["job"]["metrics"], step

@@ -15,7 +15,10 @@
   called only from the library.
 - The bench helpers ``_load1``, ``_code_key`` and ``_count_rows`` are
   defined once, in bench.py (perfbench keeps its own code key), and
-  every script the harvester's one-shots name exists."""
+  every script the harvester's one-shots name exists.
+- The package and the jobs start threads only through
+  session.concurrently, which starts them so that their Spark jobs
+  keep the caller's job group."""
 
 from __future__ import annotations
 
@@ -178,3 +181,49 @@ def test_harvest_oneshots_name_existing_scripts():
     missing = [argv[0] for _, argv, _ in harvest.ONESHOTS
                if not os.path.isfile(os.path.join(REPO, argv[0]))]
     assert not missing, f"harvest one-shots name missing scripts: {missing}"
+
+
+THREAD_MAKERS = ("Thread", "InheritableThread", "ThreadPoolExecutor")
+
+
+def _thread_makers(path: str) -> list[tuple[str | None, int]]:
+    """(outermost enclosing function or None, line) of every call that
+    creates a thread or a thread pool, as a name or an attribute."""
+    found = []
+
+    def visit(node: ast.AST, func: str | None) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name in THREAD_MAKERS:
+                    found.append((func, child.lineno))
+            inner = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            visit(child, func or (child.name if inner else None))
+
+    visit(_parse(path), None)
+    return sorted(found, key=lambda x: x[1])
+
+
+def test_threads_start_only_in_session_concurrently():
+    files = JOBS + glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)
+    found = {os.path.relpath(p, REPO): sorted({f for f, _ in hits})
+             for p in files if (hits := _thread_makers(p))}
+    assert found == {"tackle4losscontentextraction_spark/session.py": ["concurrently"]}, \
+        f"start threads through session.concurrently: {found}"
+
+
+def test_thread_check_catches_a_thread(tmp_path):
+    p = tmp_path / "job.py"
+    p.write_text(
+        "import threading\n"
+        "from concurrent.futures import ThreadPoolExecutor\n"
+        "from pyspark.util import InheritableThread\n"
+        "def main():\n"
+        "    def branch():\n"
+        "        t = threading.Thread(target=print)\n"
+        "    with ThreadPoolExecutor(2) as pool:\n"
+        "        pool.submit(print)\n"
+        "t = InheritableThread(print)\n"
+        "fine = session.concurrently(spark, print)\n")
+    assert _thread_makers(str(p)) == [("main", 6), ("main", 7), (None, 9)]
